@@ -5,23 +5,17 @@ Runs each headline query end-to-end, prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query runs warm (fresh plan each run — no AQE stage-cache reuse);
-the fastest time is reported so JVM/JIT and session startup don't
-dominate the per-query numbers. The metric value is the total warm
-wall-clock across all headline queries.
+the fastest of three runs is reported so JVM/JIT and session startup
+don't dominate the per-query numbers. The timed action is the noop
+sink (`df.write.format("noop")` — computes every column of every row,
+discards the result), which measures the distributed computation rather
+than the driver-side row fetch. The metric value is the total across
+all headline queries.
 
-Timed action (round 12, guide §1.4): ``queries`` times the NOOP SINK
-(`df.write.format("noop")` — computes every column of every row,
-discards the result), which measures the distributed computation
-rather than the driver-side row fetch. Rounds 1-11 timed `collect()`;
-that conflated compute with single-threaded Python row
-deserialization — q_jaro_pairs' 1.17M-row result measured 5.2 s under
-collect() vs 1.7 s of actual computation, and the collect tail is
-constant in core count, so it also poisoned the scaling measurement.
-The historical methodology is still emitted per query as
-``queries_collect`` (best of 2) so the r1-r11 trend line stays
-readable; the headline ``value`` is the noop total. Declared in
-OPTIMIZATION_r12.md; SLOW_MODE_BANDS_SF01 re-baselined on the noop
-methodology the same round (dated note in PERF_NOTES).
+The line also carries raw samples, not verdicts: the host canaries at
+start and end, the two pinned streaming micro-benches and the storage
+high-water mark. Comparing two runs is the job of perfbench/ (paired
+seeded runs); this harness only measures one.
 """
 
 from __future__ import annotations
@@ -52,263 +46,75 @@ HEADLINE = [
     "q_scalar_subquery",
     "q_curation_pipeline",
     "q_bucketed_fact_join",
-    # round 3: the two heaviest new TPC-H shapes (two-key fact-fact
-    # join; EXISTS+NOT EXISTS decorrelation over a derived relation)
     "q_product_profit",
     "q_waiting_suppliers",
-    # round 3: bitmap-pruned semi-join — the selective-lookup scale path
     "q_bloom_semi_join",
-    # round 3: winnowing fingerprint extraction — the hot document-
-    # fingerprinting kernel (scan-local gram hashing + per-doc window)
     "q_winnow_fingerprints",
-    # round 4: full-fact two-pass cumulative sum (ordered_cumsum over
-    # all of lineitem) and the minhash signature kernel (shingles x 8
-    # seeds of md5 digests through one (doc, seed) aggregate)
     "q_weighted_median",
     "q_minhash_signatures",
-    # round 4b: the exact-SimHash bit-vote kernel (vocab x 32 explode
-    # through one (doc, bit) combine) and BM25 ranked search (corpus
-    # stats broadcast + postings equi-join + integer scoring)
     "q_simhash_exact",
     "q_bm25_search",
-    # round 4 late batches: multi-quantile histogram pruning (five
-    # percentile_disc points, two scans, zero fact shuffles), the
-    # corpus-wide first-seen shingle-novelty join (scan-local shingle
-    # dedup), and the doubled-rank exact AUC over the event stream
-    # (two-pass cumulative over the grouped score relation)
     "q_quantiles_pruned",
     "q_shingle_novelty",
     "q_auc_exact",
-    # round 5: the four de-funneled NTILE queries (ordered_cumsum +
-    # closed_form_ntile replacing global windows — watch the recurring
-    # cost of the two-pass rank shape) and the production daily-ingest
-    # path (broadcast digest semi-join, corpus never rescanned)
     "q_percent_rank_ntile",
     "q_value_deciles",
     "q_rfm_segments",
     "q_decile_migration",
     "q_incremental_dedup",
-    # round 5 additions: the single-scan 64-column Poisson bootstrap
-    # (the x32 resample rows never exist) and the transitive-dedup
-    # survivor pipeline (pairs -> components -> argmax -> census, the
-    # full near-dup curation path in one plan)
     "q_bootstrap_ci",
     "q_dedup_survivors",
-    # round 5 late batches: the cross-doc duplicated-span census (the
-    # suffix-array-dedup proxy — char-gram hash census + per-doc span
-    # windows, text never shuffled) and the brand-blocked Jaro kernel
-    # (the Arrow-batched Python cost class, bounded by the blocking)
     "q_dup_spans",
     "q_jaro_pairs",
-    # round 6: the dictionary-decomposed Jaro join replaced the Python
-    # kernel (132 -> ~4 s; q_jaro_pairs above now measures the JVM
-    # broadcast-join + 1.17M-row result path). New cost classes: the
-    # exact-integer HLL sketch audit, the grid-blocked DBSCAN census,
-    # the 32-draw single-scan randomization test (md5-bound — watch
-    # the digest-splitting discipline), and the bounded-quadratic
-    # Walsh-pair median through the two-scan histogram quantile
     "q_hll_audit",
     "q_dbscan_core",
     "q_relabel_test",
     "q_hodges_lehmann",
-    # round 8 (VERDICT_r07 item 6): the two r7 probe findings promoted
-    # to tracked headline numbers — the production (brand,size)-blocked
-    # Jaro join (probe exponent 0.35 vs the coarse key's 1.75) and the
-    # production 64-bit WWW'07 SimHash banding (probe exponent 1.06
-    # where the 32-bit banding funneled). Expected total shift:
-    # +~1 s at sf0.1 (0.79 s jaro_blocked + ~8 s simhash64 wait — see
-    # PERF_NOTES round 8 for the measured split).
     "q_jaro_blocked",
     "q_dedup_simhash64",
-    # round 8 (continuation): the md5-oracle-verified LSH ANN line —
-    # candidate streams restructured to id-only pairs with the vectors
-    # joined back at scoring (32 -> ~7 s at sf0.1); tracked so the
-    # embedding-payload-in-shuffle class can't regress silently
     "q_ann_lsh",
-    # round 12 (VERDICT_r11 item 6): the production-density sibling —
-    # n_planes=8 per the r8 scaling rule (8-row buckets at this n),
-    # n_tables=32 banding; candidate fraction 13.4% of all pairs vs
-    # q_ann_lsh's oracle-pinned 89%. q_ann_lsh benchmarks the recall
-    # envelope, this line benchmarks realistic ANN cost; recall-gated
-    # vs exact top-1 in tests/test_round12_fixes.py.
     "q_ann_lsh_prod",
 ]
 
 
-# Pinned quiet-host canary bands (VERDICT_r09 "Next round" #2). Sources:
-# PERF_NOTES.md "Bench canary re-baseline (round-5 verdict item 3)"
-# (py_single ~0.36 s, spark_parallel ~0.31 s post-warmup, streaming
-# 70-90k rows/s) widened by the measured quiet-host spread observed
-# r5-r9 (py_single 0.34-0.46, spark_parallel 0.27-0.51, streaming up to
-# 124k). A run with any canary OUTSIDE its band was measured on a
-# contended host: its totals are host noise, not code, and canary_ok
-# is emitted false so the artifact can never read as a regression
-# without the prose (the r9 101 s-vs-52 s episode is the motivating
-# evidence). Bands are (min, max); None = unbounded on that side.
-CANARY_BANDS = {
-    "py_single_sec": (None, 0.50),
-    "spark_parallel_sec": (None, 0.60),
-    "streaming_rows_per_sec": (65_000.0, None),
-    # VERDICT_r11 item 7: the Spark-4 typed-state path
-    # (transformWithStateInPandas on RocksDB, ST20's moments
-    # processor) gets its own pinned line. The provisional 30k floor
-    # came from loaded-host r12 sessions; re-banded round 13
-    # (VERDICT_r12 item 8) from the five quiet samples now on record
-    # — 105.1k (r12 builder), 122.9k (r12 driver), 109.0k (r12
-    # anchor), 89.3k / 138.1k (r13 builder) — at ~0.67x the slowest
-    # quiet sample, the same margin discipline as the 65k
-    # applyInPandas floor. Loaded-host sessions (49-51k) now flag as
-    # out-of-band, which is the canary's job: such a run's numbers
-    # are not comparable. Dated note in PERF_NOTES.
-    "streaming_tws_rows_per_sec": (60_000.0, None),
-}
-
-# Per-query healthy bands at sf0.1 on a quiet host (VERDICT_r10 items
-# 1/7): the three queries that exhibited the in-session slow mode
-# (storage-memory tenancy -> GC thrash during their big sort/collect —
-# see session.release_persisted). Quiet-host warm times measured round
-# 11 post-fix: jaro 5.2-6.7 s, product_profit 1.1-1.7 s, dup_spans
-# 3.9-4.5 s; bands sit at ~1.5x warm (the verdict's "done" line). A
-# query OVER its band while the HOST canaries are green means the
-# in-process mode is back — flagged separately from host noise so it
-# can never hide behind canary_ok again.
-#
-# VERDICT_r11 item 4 extension: the three other storage-sensitive
-# queries with the widest cross-session spreads in the six r11
-# sessions (q_bootstrap_ci, q_dedup_survivors, q_dbscan_core).
-#
-# Round-12 re-baseline (dated note in PERF_NOTES "Round 12
-# optimization"): the timed action moved to the noop sink AND several
-# of these queries got materially faster, so every band was re-derived
-# as ~1.5x its best quiet-host NOOP warm measured at the r12 optimized
-# HEAD (jaro 1.65, product_profit 0.83, dup_spans 3.60, bootstrap
-# 0.82, survivors 1.67, dbscan 1.34). Old collect-methodology bands
-# (9.0/2.5/6.5/2.2/3.1/3.4) must not be cross-read against noop
-# timings.
-#
-# Round-13 re-baseline (dated note in PERF_NOTES "Round 13
-# optimization"): four of the six banded queries got materially faster
-# (q_dup_spans one-pass kernel 3.9 -> 1.2 s, q_jaro_pairs checkpoint-
-# before-sort + relation cache, q_dedup_survivors fused CC round,
-# q_product_profit relation cache), so their bands re-derive from the
-# r13 optimized in-bench warms at ~1.6x margin. q_bootstrap_ci keeps
-# its 1.3 band — the r12 breach (1.536, then 1.384 in the r13 baseline
-# run) is adjudicated FIXED by this round's speedups (string-built
-# plan + keyed spread: 0.78 in-bench), not re-banded looser.
-SLOW_MODE_BANDS_SF01 = {
-    "q_jaro_pairs": 2.0,
-    "q_product_profit": 1.0,
-    "q_dup_spans": 2.0,
-    "q_bootstrap_ci": 1.3,
-    "q_dedup_survivors": 2.3,
-    "q_dbscan_core": 2.0,
-}
-
-# Storage tenancy band for the structural slow-mode signal: the r11
-# sweep-hygiene invariant (tests/test_round11_fixes.py) pins post-query
-# storage under 500 MB; every healthy measured session peaked at
-# 322-342 MB. A peak OVER this band is the in-process mode's structural
-# signature and is adjudicable even when the host canaries are red.
+# Storage tenancy band: the sweep-hygiene invariant
+# (tests/test_round11_fixes.py) pins post-query storage under 500 MB.
+# A peak over it is the structural signature of the in-session slow mode
+# (checkpoint/broadcast blocks piling up on the driver heap; see
+# session.release_persisted). It counts bytes, not seconds, so host load
+# cannot fake it and it is not tuned to any host.
 STORAGE_BAND_MB = 500.0
 
 
-def canary_verdict(
-    canary_start: dict,
-    canary_end: dict,
-    streaming: dict,
-    streaming_tws: dict | None = None,
-) -> dict:
-    """Adjudicate this run's canaries against CANARY_BANDS.
+def report_fields(streaming: dict, streaming_tws: dict, storage_peak_mb: float) -> dict:
+    """The bench line's derived fields.
 
-    The per-core canaries must sit in-band at START and END (a host
-    that loads up mid-run contaminates the tail queries); streaming
-    throughput is one mid-run sample per pipeline (the
-    applyInPandasWithState line, and — VERDICT_r11 item 7 — the
-    typed-state transformWithStateInPandas line when provided).
-    Returns the machine-readable verdict embedded in the bench JSON."""
-    failures = []
-    for label, sample in (("start", canary_start), ("end", canary_end)):
-        for key in ("py_single_sec", "spark_parallel_sec"):
-            lo, hi = CANARY_BANDS[key]
-            val = sample.get(key)
-            if val is None:
-                failures.append(f"{label}.{key}: missing")
-            elif (lo is not None and val < lo) or (hi is not None and val > hi):
-                failures.append(f"{label}.{key}={val} outside ({lo}, {hi})")
-    # A streaming ERROR is a code failure, not host noise: report it
-    # under its own key so it can never be adjudicated as contention
-    # (ADVICE r10). Only a *present but out-of-band* throughput reads
-    # as host noise.
-    errors: dict[str, str] = {}
-    checks = [("streaming", "streaming_rows_per_sec", streaming)]
-    if streaming_tws is not None:
-        checks.append(("streaming_tws", "streaming_tws_rows_per_sec", streaming_tws))
-    for label, band_key, sample in checks:
-        lo, hi = CANARY_BANDS[band_key]
-        rps = sample.get("rows_per_sec")
-        err = sample.get("error")
-        if err is not None:
-            failures.append(f"{label} errored: {err}")
-            errors[f"{label}_error"] = err
-        elif rps is None:
-            failures.append(f"{label}.rows_per_sec: missing")
-        elif (lo is not None and rps < lo) or (hi is not None and rps > hi):
-            failures.append(f"{label}.rows_per_sec={rps} outside ({lo}, {hi})")
-    return {
-        "canary_ok": not failures,
-        "canary_bands": {k: list(v) for k, v in CANARY_BANDS.items()},
-        "canary_failures": failures,
-        **errors,
-    }
-
-
-def slow_mode_verdict(
-    timings: dict,
-    sf: float | None,
-    host_ok: bool,
-    storage_peak_mb: float | None = None,
-) -> dict:
-    """Flag the in-session slow mode per-query (VERDICT_r10 item 1).
-
-    Adjudicated only at sf0.1 (where the bands were measured). When the
-    host canaries are red the per-query numbers are contaminated by the
-    host — but the over-band list is still EMITTED, marked
-    ``host_ambiguous: true`` (VERDICT_r11 item 4), so an in-process
-    regression can never hide behind ambient load: the reader sees
-    "host-ambiguous, over-band: [...]" plus the storage-peak band
-    verdict (the structural signal, which ambient load cannot fake)
-    instead of a null that conflates "nothing over band" with
-    "couldn't adjudicate".
+    A streaming exception is a code failure: it is reported under its
+    own ``streaming_error`` / ``streaming_tws_error`` key, never folded
+    into the throughput samples where it could read as host noise.
     """
-    if sf != 0.1:
-        return {"slow_mode_suspects": None}
-    over = {
-        name: {"sec": timings[name], "band_max": band}
-        for name, band in SLOW_MODE_BANDS_SF01.items()
-        if name in timings and timings[name] > band
+    errors = {
+        f"{label}_error": sample["error"]
+        for label, sample in (("streaming", streaming), ("streaming_tws", streaming_tws))
+        if "error" in sample
     }
-    out: dict = {"slow_mode_suspects": over}
-    if not host_ok:
-        out["host_ambiguous"] = True
-    if storage_peak_mb is not None:
-        out["storage_in_band"] = storage_peak_mb <= STORAGE_BAND_MB
-        out["storage_band_mb"] = STORAGE_BAND_MB
-    return out
+    return {
+        **errors,
+        "storage_peak_mb": storage_peak_mb,
+        "storage_in_band": storage_peak_mb <= STORAGE_BAND_MB,
+        "storage_band_mb": STORAGE_BAND_MB,
+    }
 
 
 def host_canary(spark) -> dict:
-    """Fixed-work host-contention canary (round-5 verdict item 3).
+    """Fixed-work host-contention canary, sampled at run start and end.
 
-    Two deterministic workloads whose quiet-host times are baselined in
-    PERF_NOTES.md; run at session START and END so every BENCH_r{N}
-    self-reports whether its numbers are comparable:
+    Two deterministic workloads whose times show how loaded the host was:
       - py_single_sec: a single-threaded pure-Python integer loop —
-        measures per-core speed under ambient load (no JVM, no I/O).
+        per-core speed under ambient load (no JVM, no I/O).
       - spark_parallel_sec: sum over spark.range(2**28) on all cores —
-        measures whole-machine availability through the same executor
-        pool the queries use.
-    Per-query ratios between rounds are meaningful only when BOTH
-    canaries sit near the PERF_NOTES quiet line at start AND end.
+        whole-machine availability through the same executor pool the
+        queries use.
     """
     # untimed JVM/codegen warmup so the START canary measures host
     # contention, not JIT (first-ever range-sum measured 3.4 s vs a
@@ -347,22 +153,16 @@ def main() -> None:
         warehouse_error = f"{type(exc).__name__}: {exc}"
     # One untimed warmup pass: JIT-compiles the hot codegen/shuffle paths
     # so per-query numbers don't depend on what ran earlier in the JVM.
-    # (Measured: q_broadcast_inner_join reports 1.2s in a cold JVM vs a
-    # stable 0.85s warm — rounds where ensure_bucketed_facts was a no-op
-    # looked like regressions purely from losing its warmup effect.)
     #
-    # Session hygiene between queries (VERDICT_r10 items 1/7): each run
-    # rebuilds its plan from scratch, so the previous run's checkpoint
-    # blocks are garbage the moment collect() returns — but without an
-    # explicit unpersist they are freed only when a JVM GC happens to
-    # let the ContextCleaner run. Measured: 3.2 GB of lingering storage
-    # on the shared 8 GB heap puts q_jaro_pairs' 1.17M-row sort+collect
-    # into a 1.8-2.4x GC-thrash slow mode (the bimodal 17 s seen in
-    # BENCH_r09/the r10 judge replay). release_persisted() after every
-    # collect removes the GC-timing dependence; a storage-triggered
-    # System.gc() additionally bounds broadcast-block tenancy (those
-    # are only ContextCleaner-freeable). Both run OUTSIDE the timing
-    # windows.
+    # Session hygiene between queries: each run rebuilds its plan from
+    # scratch, so the previous run's checkpoint blocks are garbage the
+    # moment the action returns — but without an explicit unpersist they
+    # are freed only when a JVM GC happens to let the ContextCleaner run,
+    # and lingering storage on the shared 8 GB heap pushes big sorts into
+    # GC thrash. release_persisted() after every run removes the
+    # GC-timing dependence; a storage-triggered System.gc() additionally
+    # bounds broadcast-block tenancy (those are only
+    # ContextCleaner-freeable). Both run OUTSIDE the timing windows.
     from laser_hadoop_spark.session import release_persisted, storage_memory_used
 
     def _hygiene() -> None:
@@ -370,9 +170,9 @@ def main() -> None:
         if storage_memory_used(spark) > 1_000_000_000:
             spark.sparkContext._jvm.System.gc()
 
-    # storage_peak is sampled after each collect() but BEFORE _hygiene()
-    # releases blocks (ADVICE r11): it is the session's true in-run
-    # storage high-water mark, the structural slow-mode signal.
+    # storage_peak is sampled after each action but BEFORE _hygiene()
+    # releases blocks: it is the session's true in-run storage
+    # high-water mark.
     storage_peak = 0
 
     def _noop(df) -> None:
@@ -383,7 +183,6 @@ def main() -> None:
         storage_peak = max(storage_peak, storage_memory_used(spark))
         _hygiene()
     timings: dict[str, float] = {}
-    timings_collect: dict[str, float] = {}
     for name in HEADLINE:
         fn = specs[name].fn
         best = float("inf")
@@ -394,32 +193,19 @@ def main() -> None:
             storage_peak = max(storage_peak, storage_memory_used(spark))
             _hygiene()
         timings[name] = round(best, 3)
-        # the r1-r11 timed action, kept for trend continuity (see
-        # module docstring): plan + execute + collect to the driver
-        best_c = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            best_c = min(best_c, time.perf_counter() - t0)
-            storage_peak = max(storage_peak, storage_memory_used(spark))
-            _hygiene()
-        timings_collect[name] = round(best_c, 3)
     total = round(sum(timings.values()), 3)
-    # streaming micro-bench: PINNED deterministic file stream (1M rows,
-    # 5 batches, 100 keys — identical every round, so rows_per_sec in
-    # BENCH_r{N}.json is trendable) -> watermarked window agg ->
-    # foreachBatch upsert; measured throughput + bounded state evidence
+    # Streaming micro-benches over a PINNED deterministic file stream
+    # (1M rows, 5 files, 100 keys, one file per trigger): a watermarked
+    # window aggregate into the foreachBatch upsert sink, then the
+    # transformWithStateInPandas/RocksDB pipeline. The TWS line
+    # gets one untimed small warmup: its first-ever trigger pays JIT and
+    # the RocksDB library load.
     try:
         from laser_hadoop_spark.streaming.ops import pinned_stream_bench
 
         streaming = pinned_stream_bench(spark)
     except Exception as exc:  # noqa: BLE001
         streaming = {"error": f"{type(exc).__name__}: {exc}"}
-    # second streaming line (VERDICT_r11 item 7): the Spark-4
-    # typed-state path — transformWithStateInPandas on RocksDB — same
-    # pinned-input discipline. One untimed small warmup first: the
-    # first-ever TWS trigger pays JIT + RocksDB library load (measured
-    # 26.9k cold vs 49.5-51.0k warm on identical code).
     try:
         from laser_hadoop_spark.streaming.ops import pinned_tws_bench
 
@@ -428,17 +214,7 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         streaming_tws = {"error": f"{type(exc).__name__}: {exc}"}
     canary_end = host_canary(spark)
-    verdict = canary_verdict(canary_start, canary_end, streaming, streaming_tws)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    sf_num = float(sf) if sf else None
-    # host_ok = the per-core canaries alone (streaming is a code-path
-    # sample, not a host probe) — the gate for per-query band reads
-    host_ok = not [
-        f for f in verdict["canary_failures"] if not f.startswith("streaming")
-    ]
-    slow_mode = slow_mode_verdict(
-        timings, sf_num, host_ok, storage_peak_mb=round(storage_peak / 1e6, 1)
-    )
     print(
         json.dumps(
             {
@@ -446,16 +222,13 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "queries_collect": timings_collect,
                 "timed_action": "noop_sink",
                 "streaming": streaming,
                 "streaming_tws": streaming_tws,
                 "canary": {"start": canary_start, "end": canary_end},
-                **verdict,
-                **slow_mode,
-                "storage_peak_mb": round(storage_peak / 1e6, 1),
+                **report_fields(streaming, streaming_tws, round(storage_peak / 1e6, 1)),
                 **({"warehouse_error": warehouse_error} if warehouse_error else {}),
-                "sf": sf_num,
+                "sf": float(sf) if sf else None,
             }
         )
     )

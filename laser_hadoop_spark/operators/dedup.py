@@ -566,11 +566,12 @@ def prefix_filter_pairs(
         # sharded join's replication+sort overhead only pays when a
         # token's cartesian actually dominates a task).
         prefix = prefix.localCheckpoint(eager=True)
-    # r10 scale fix (the X135/X79 treatment, measured by
-    # scripts/probe_round10.py): on a small-vocabulary corpus even the
-    # "rare" prefix tokens carry df in the thousands, and raw candidate
-    # generation is sum(df_t^2) — 66M rows at sf0.1, 6.6G at the x10
-    # probe corpus. Three exact countermeasures:
+    # r10 scale fix (the X135/X79 treatment, measured in PERF_NOTES.md
+    # "q_prefix_filter_pairs: the probe found a real scale-killer"): on
+    # a small-vocabulary corpus even the "rare" prefix tokens carry df
+    # in the thousands, and raw candidate generation is sum(df_t^2) —
+    # 66M rows at sf0.1, 6.6G at the x10 probe corpus. Three exact
+    # countermeasures:
     # (a) PPJoin's POSITIONAL filter (Xiao et al. 2008), evaluated on
     #     every generated row BEFORE the distinct: a true pair with
     #     Jaccard >= t needs overlap alpha = ceil(t(na+nb)/(1+t)), and

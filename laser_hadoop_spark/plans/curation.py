@@ -55,9 +55,10 @@ def curation_stage_prefixes(
 ) -> dict[str, DataFrame]:
     """Ordered lazy prefixes of the curation plan, one per stage.
 
-    The SINGLE source of the stage construction (ADVICE r9:
-    scripts/probe_round9.py hand-duplicated these slices and would
-    silently drift if the plan changed): curation_plan returns the
+    The SINGLE source of the stage construction (ADVICE r9: the round-9
+    composite-pipeline probe, PERF_NOTES.md "Composite-pipeline x10
+    probes", hand-duplicated these slices and would silently drift if
+    the plan changed): curation_plan returns the
     last prefix of THIS dict, so a per-stage probe and the registered
     pipeline are the same computation by construction. Keys:
 

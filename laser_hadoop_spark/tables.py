@@ -59,10 +59,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), name)
+    if name == "events":
+        # Deterministic event-time semantics regardless of the caller's
+        # session defaults (the driver builds its own SparkSession). Set
+        # on EVERY call, cache hit or not: the caller may have changed
+        # the session since the relation was cached.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, _os.path.abspath(sf_dir), name)
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
+    # a miss is the moment to drop relations of stopped sessions (one
+    # SparkContext per process), which no later lookup can hit
+    for stale in [k for k in _RELATION_CACHE if k[0] != app_id]:
+        del _RELATION_CACHE[stale]
     df = _read_table(spark, sf_dir, name)
     _RELATION_CACHE[key] = df
     return df
@@ -70,10 +82,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # Deterministic event-time semantics regardless of the caller's
-        # session defaults (the driver builds its own SparkSession).
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS): truncate to micros

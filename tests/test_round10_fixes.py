@@ -4,8 +4,6 @@
   orthogonal transforms at the reference's production dimensionality
   (dim≈8, LASERInputValidator.java:162,176-177), per-group via
   cogrouped applyInPandas; scipy cross-check when available.
-- bench canary verdict (item 2): the in-band canary adjudication is a
-  pure function — unit-tested here against synthetic samples.
 - benign-global-window closure (item 6): every `Window.orderBy(...)`
   with no partition spec in the engine is enumerated and pinned, so a
   new global window (the single-partition funnel class) cannot land
@@ -146,50 +144,6 @@ def test_grouped_procrustes_without_scaling_is_rigid(spark):
     d_proj = np.linalg.norm(got[ids[0]] - got[ids[1]])
     d_src = np.linalg.norm(src[ids[0]] - src[ids[1]])
     assert abs(d_proj - d_src) < 1e-9  # rigid: distances preserved
-
-
-# --- bench canary verdict (VERDICT_r09 item 2) ----------------------------
-
-
-def _bench():
-    import importlib.util
-    import sys
-
-    path = Path(__file__).resolve().parent.parent / "bench.py"
-    spec = importlib.util.spec_from_file_location("bench_mod", path)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["bench_mod"] = mod
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_canary_verdict_quiet_host_passes():
-    b = _bench()
-    quiet = {"py_single_sec": 0.37, "spark_parallel_sec": 0.35}
-    v = b.canary_verdict(quiet, quiet, {"rows_per_sec": 90_000.0})
-    assert v["canary_ok"] is True
-    assert v["canary_failures"] == []
-    # superset: r12 added streaming_tws_rows_per_sec (VERDICT_r11 item 7)
-    assert set(v["canary_bands"]) >= {
-        "py_single_sec", "spark_parallel_sec", "streaming_rows_per_sec",
-    }
-
-
-def test_canary_verdict_flags_loaded_host_and_missing_samples():
-    b = _bench()
-    quiet = {"py_single_sec": 0.37, "spark_parallel_sec": 0.35}
-    loaded = {"py_single_sec": 0.88, "spark_parallel_sec": 1.2}
-    # loaded at START only — still not comparable
-    v = b.canary_verdict(loaded, quiet, {"rows_per_sec": 90_000.0})
-    assert v["canary_ok"] is False
-    assert any("start.py_single_sec" in f for f in v["canary_failures"])
-    # streaming below band (the r9 committed-artifact case: 51.1k)
-    v2 = b.canary_verdict(quiet, quiet, {"rows_per_sec": 51_100.0})
-    assert v2["canary_ok"] is False
-    assert any("streaming" in f for f in v2["canary_failures"])
-    # a streaming error dict (no rows_per_sec) must fail, not crash
-    v3 = b.canary_verdict(quiet, quiet, {"error": "boom"})
-    assert v3["canary_ok"] is False
 
 
 # --- sizing-gate undercount clamp (ADVICE r9) -----------------------------

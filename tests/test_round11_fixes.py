@@ -2,14 +2,15 @@
 
 The in-session slow mode: q_jaro_pairs ran 17 s min-of-3 inside a
 42-query bench session vs 5.9 s fresh-session warm (BENCH_r09, the r10
-judge replay). Round-11 diagnosis (scripts/diag_session_mode.py):
-checkpoint/broadcast blocks are freed only when a JVM GC lets the
-ContextCleaner notice dropped references, so storage tenancy on the
-shared 8 GB local-mode heap is GC-timing-dependent; 3.2 GB of pinned
-storage reproducibly degrades the 1.17M-row sort+collect to
+judge replay). Round-11 diagnosis (PERF_NOTES.md "Round-11 slow-mode
+diagnosis"): checkpoint/broadcast blocks are freed only when a JVM GC
+lets the ContextCleaner notice dropped references, so storage tenancy
+on the shared 8 GB local-mode heap is GC-timing-dependent; 3.2 GB of
+pinned storage reproducibly degrades the 1.17M-row sort+collect to
 7.7-14.1 s. Fix: explicit release_persisted() between queries in every
-long-session harness (bench.py, check_oracles.py, compare_query), a
-storage-triggered System.gc() in bench, and per-query bands so the mode
+long-session harness (bench.py, check_oracles.py, compare_query) and a
+storage-triggered System.gc() in bench; bench.py reports the storage
+peak against bench.STORAGE_BAND_MB so the mode's structural signature
 is machine-flagged whenever it returns.
 """
 
@@ -69,22 +70,17 @@ def test_full_registry_sweep_leaves_no_persisted_rdds(spark, sf_dir):
     assert peak < 500_000_000, f"storage peaked at {peak / 1e6:.0f} MB"
 
 
-def test_canary_verdict_streaming_error_is_not_host_noise():
-    """ADVICE r10: a streaming ERROR is a code failure — it must be
-    reported as such (own reason + streaming_error field), never
-    adjudicated as host contention."""
+def test_streaming_error_is_not_host_noise():
+    """ADVICE r10: a streaming ERROR is a code failure — it is reported
+    under its own streaming_error field, never as a throughput sample."""
     import bench
 
-    good = {"py_single_sec": 0.3, "spark_parallel_sec": 0.3}
-    v = bench.canary_verdict(good, good, {"error": "ValueError: boom"})
-    assert v["canary_ok"] is False
+    v = bench.report_fields({"error": "ValueError: boom"}, {"rows_per_sec": 1.0}, 300.0)
     assert v["streaming_error"] == "ValueError: boom"
-    assert any(f.startswith("streaming errored: ValueError") for f in v["canary_failures"])
-    # present-but-slow throughput is still adjudicated as out-of-band
-    v2 = bench.canary_verdict(good, good, {"rows_per_sec": 10_000.0})
-    assert v2["canary_ok"] is False
+    assert "streaming_tws_error" not in v
+    # a present-but-slow throughput is a sample, not an error
+    v2 = bench.report_fields({"rows_per_sec": 10.0}, {"rows_per_sec": 10.0}, 300.0)
     assert "streaming_error" not in v2
-    assert any("outside" in f for f in v2["canary_failures"])
 
 
 def test_payloadish_excludes_full_hash_suffix_family():
@@ -140,28 +136,3 @@ def test_grouped_procrustes_tolerates_duplicate_anchor_ids(spark):
     for rid, projs in by_id.items():
         for proj in projs:
             np.testing.assert_allclose(proj, ref_map[rid], atol=1e-9)
-
-
-def test_slow_mode_verdict_flags_in_process_mode():
-    """The per-query bands fire only at sf0.1 on a host-green run —
-    exactly the conditions under which the r10 judge replay measured
-    the mode with canaries green."""
-    import bench
-
-    timings = {"q_jaro_pairs": 17.35, "q_product_profit": 1.2, "q_dup_spans": 4.0}
-    v = bench.slow_mode_verdict(timings, 0.1, host_ok=True)
-    assert set(v["slow_mode_suspects"]) == {"q_jaro_pairs"}
-    assert (
-        v["slow_mode_suspects"]["q_jaro_pairs"]["band_max"]
-        == bench.SLOW_MODE_BANDS_SF01["q_jaro_pairs"]
-    )
-    # healthy run -> empty dict (machine-readably "checked, clean")
-    ok = bench.slow_mode_verdict({"q_jaro_pairs": 1.7}, 0.1, host_ok=True)
-    assert ok["slow_mode_suspects"] == {}
-    # loaded host -> over-band list still emitted, marked host_ambiguous
-    # (VERDICT_r11 item 4; the detailed contract is pinned in
-    # tests/test_round12_fixes.py); non-sf0.1 -> None ("no bands")
-    loaded = bench.slow_mode_verdict(timings, 0.1, host_ok=False)
-    assert set(loaded["slow_mode_suspects"]) == {"q_jaro_pairs"}
-    assert loaded["host_ambiguous"] is True
-    assert bench.slow_mode_verdict(timings, 0.01, host_ok=True)["slow_mode_suspects"] is None
