@@ -7,8 +7,9 @@ and [start,end] individual batches with %05d ids
 
 Scale note: a global row_number() funnels through one task for the
 ordering; chunk assignment at 100 TB should therefore derive from a
-pre-sorted unique key range (assign_chunks_by_key) or per-partition
-offsets, not a global window. Both forms are provided.
+pre-sorted unique key range (assign_chunks_by_key) or from the
+per-partition offsets of operators/cumulative.ordered_cumsum's
+``row_number_col``, not a global window.
 """
 
 from __future__ import annotations
@@ -25,84 +26,15 @@ def assign_chunks(
     """W1: chunk id = floor(row_index / chunk_size), deterministic order.
 
     Exact reference semantics (contiguous chunks of exactly chunk_size
-    in row order). The global window is the cost of exactness — use
-    assign_chunks_by_key when approximate, key-ranged chunks suffice.
+    in row order) through a global window — one task at scale. The
+    exact scale form is ordered_cumsum's ``row_number_col`` (see
+    queries/windows.q_row_number_chunking); use assign_chunks_by_key
+    when approximate, key-ranged chunks suffice.
     """
     w = Window.orderBy(order_col)
     return df.withColumn(
         "chunk", F.floor((F.row_number().over(w) - 1) / chunk_size)
     )
-
-
-def assign_chunks_offsets(
-    df: DataFrame,
-    order_col: str,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """Scale-safe W1: global row-number chunking WITHOUT a global window.
-
-    Output-identical to assign_chunks (chunk = floor(global_row/size)
-    in order_col order; order_col must be unique for determinism), but
-    the classic two-pass zipWithIndex shape instead of a
-    single-partition window:
-
-    1. range-repartition + sort within partitions on order_col — the
-       only shuffle, and every partition sorts in parallel;
-    2. a counts-only job reads per-partition row counts (one row per
-       partition) and prefix-sums them into start offsets on the driver
-       (bounded: n_partitions integers);
-    3. an Arrow map over the SAME materialized partitions adds
-       offset[pid] + local_index.
-
-    The sorted frame is pinned with localCheckpoint before the two jobs:
-    range-exchange boundary *sampling* is re-seeded per execution (the
-    sampler seed derives from the physical RDD id), so without pinning
-    the counts job and the output job can see DIFFERENT partition
-    boundaries and mis-seam chunks at partition edges. The checkpoint is
-    one materialization of data that both jobs consume — the same cost
-    profile as RDD.zipWithIndex's two passes.
-
-    At 100 TB this is ~P parallel sorts + one tiny counts collect; the
-    global-window form funnels every row through one task.
-    """
-    import numpy as np
-
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
-    sorted_df = (
-        df.repartitionByRange(n_partitions, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = {
-        r["__pid"]: r["n"]
-        for r in sorted_df.groupBy("__pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_off = spark.sparkContext.broadcast(offsets)
-
-    out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-
-    def add_chunk(batches):
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            base = b_off.value[pid] + seen
-            out = pdf.drop(columns="__pid")
-            out["chunk"] = np.arange(base, base + len(pdf)) // chunk_size
-            seen += len(pdf)
-            yield out
-
-    return sorted_df.mapInPandas(add_chunk, f"{out_fields}, chunk bigint")
 
 
 def assign_chunks_by_key(

@@ -8,10 +8,10 @@ when the dimension grows 100x.
 
 ``ordered_cumsum`` produces identical output with no single-partition
 exchange anywhere in the plan, using the classic two-pass offset shape
-(the same discipline as operators/chunking.assign_chunks_offsets, which
-is the row-number-only special case; this operator generalizes it to
-arbitrary running sums and stays fully declarative — offsets come back
-via a broadcast join, not a driver collect):
+(RDD.zipWithIndex's discipline, generalized to arbitrary running sums;
+``row_number_col`` alone is the global row number, which is how
+q_row_number_chunking chunks rows). It stays fully declarative —
+offsets come back via a broadcast join, not a driver collect:
 
 1. range-repartition + sort within partitions on the order columns —
    the only data shuffle, every partition sorts in parallel;
@@ -27,8 +27,7 @@ The range-partitioned frame is pinned with a (lazy, round 13) \
 ``localCheckpoint``: range-boundary sampling is re-seeded per
 execution, so without pinning the totals job and the output job could
 each re-execute the exchange, see different partition boundaries, and
-mis-seam the offsets (the same hazard assign_chunks_offsets
-documents). Both consumers share one checkpointed RDD, so the first
+mis-seam the offsets. Both consumers share one checkpointed RDD, so the first
 consuming action materializes the exchange exactly once and the rest
 read the pinned partitions — same guarantee as the former eager pin,
 one fewer job per call.

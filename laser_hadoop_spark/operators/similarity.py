@@ -1,12 +1,13 @@
 """Embedding similarity search operators (SURVEY.md §2.11 L4).
 
 Brute-force cosine is the exactness baseline; random-hyperplane LSH
-bucketing is the scale path (candidate generation becomes an equi-join
-on bucket id, so the pairwise work is bounded per bucket instead of
-O(n^2) global).
+bucketing is the scale path (candidates are generated per bucket id,
+so the pairwise work is bounded per bucket instead of O(n^2) global).
 
-All vector math is JVM-side codegen (zip_with/aggregate) — no Python in
-the scoring loop.
+Scoring is either JVM-side codegen (zip_with/aggregate) or an
+Arrow-batched numpy kernel over whole blocks/buckets — never per-row
+Python. Kernel constants (LSH planes, IVF centroids) ride in the
+function closure, never in a Python broadcast.
 """
 
 from __future__ import annotations
@@ -72,103 +73,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_pairs_blocked(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    out_a: str = "vec_a",
-    out_b: str = "vec_b",
-    out_sim: str = "cosine_sim",
-    round_to: int = 4,
-    max_collect_rows: int = 262_144,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """All-pairs cosine above threshold, broadcast-matmul style.
-
-    One side is materialized as a (n, dim) float64 matrix and broadcast
-    to every task; mapInPandas then scores each Arrow batch of the other
-    side against it with a single BLAS matmul — thousands of times
-    faster than per-pair array expressions. The i<j triangle is kept by
-    id comparison.
-
-    Scale guard: the broadcast side must fit in executor memory
-    (~1M x 128 dims = 0.5 GB), so inputs above `max_collect_rows` are
-    delegated to :func:`brute_force_pairs_grid` (identical output
-    schema and semantics, nothing on the driver). Callers that already
-    know the cardinality pass `n_rows`: above the gate that costs
-    nothing (pure plan construction); at-or-below the gate the claim
-    is verified with a LIMIT n_rows+1 probe before anything is
-    collected (ADVICE r9 — an undercount must not OOM the driver), so
-    the worst a wrong claim costs is one bounded job and the grid
-    fallback. Without `n_rows` the gate counts a LIMIT
-    max_collect_rows+1 slice — bounded, never a full scan of a 100 TB
-    input (the r8 VERDICT's unconditional-count nit).
-    """
-    import pandas as pd
-
-    caller_counted = n_rows is not None
-    if n_rows is None:
-        n_rows = df.limit(max_collect_rows + 1).count()
-    elif n_rows <= max_collect_rows:
-        # ADVICE r9: a caller-supplied UNDERCOUNT would send a huge
-        # input down the driver-collect broadcast path. Before trusting
-        # it, probe with the same LIMIT-clamped count (bounded job,
-        # never a full scan); a stale/wrong cardinality claim falls
-        # through to the distributed grid path instead of OOMing the
-        # driver. Callers whose count is correct pay one cheap
-        # limit+count job; callers routing to the grid path (n_rows >
-        # max_collect_rows) pay nothing, as before.
-        probed = df.limit(int(n_rows) + 1).count()
-        if probed > n_rows:
-            caller_counted = False
-            n_rows = max_collect_rows + 1  # force the grid path; it re-sizes
-    if n_rows > max_collect_rows:
-        # a LIMIT-clamped gate count underestimates huge inputs, so only
-        # a caller-supplied cardinality may size the grid's shards
-        return brute_force_pairs_grid(
-            df,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            out_a=out_a,
-            out_b=out_b,
-            out_sim=out_sim,
-            round_to=round_to,
-            n_rows=n_rows if caller_counted else None,
-        )
-
-    sc = df.sparkSession.sparkContext
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    b_ids = sc.broadcast(ids)
-    b_mat = sc.broadcast(mat)
-
-    def score(batches):
-        ref_ids, ref = b_ids.value, b_mat.value
-        for pdf in batches:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            q = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ ref.T  # (batch, n)
-            qids = pdf[id_col].to_numpy()
-            bi, bj = np.nonzero(sims > threshold)
-            keep = qids[bi] < ref_ids[bj]
-            yield pd.DataFrame(
-                {
-                    out_a: qids[bi[keep]],
-                    out_b: ref_ids[bj[keep]],
-                    out_sim: np.round(sims[bi[keep], bj[keep]], round_to),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        score, f"{out_a} long, {out_b} long, {out_sim} double"
-    )
-
-
 def brute_force_pairs_grid(
     df: DataFrame,
     *,
@@ -190,10 +94,10 @@ def brute_force_pairs_grid(
     triangle grid cells (bi <= bj) where its block is the row
     coordinate (role 0) or the column coordinate (role 1); one grouped
     Arrow kernel per cell splits the roles and scores them with a
-    single BLAS matmul — the same kernel brute_force_pairs_blocked
-    uses, but sharded so no task ever holds more than two blocks. The
-    explode-with-role form costs ONE scan + ONE shuffle + ONE sort
-    (a two-sided cogroup costs two of each — measurably slower).
+    single BLAS matmul, sharded so no task ever holds more than two
+    blocks. The explode-with-role form costs ONE scan + ONE shuffle +
+    ONE sort (a two-sided cogroup costs two of each — measurably
+    slower).
 
     Scale accounting: shuffle volume is O(n * (n_blocks+1)) rows (each
     row lands in n_blocks+1 grid cells), compute is the same n^2/2
@@ -275,7 +179,11 @@ def brute_force_pairs_grid(
 
 
 def hyperplane_bucket_expr(vec_col: str, planes: np.ndarray) -> Column:
-    """Sign-LSH bucket id: one bit per hyperplane, packed into a long."""
+    """Sign-LSH bucket id: one bit per hyperplane, packed into a long.
+
+    The expression form of ann_lsh_topk's bucketing GEMM — kept as the
+    reference spelling its bit-for-bit regression test compares against.
+    """
     bucket = F.lit(0).cast("bigint")
     for i, plane in enumerate(planes):
         plane_arr = F.array(*[F.lit(float(w)) for w in plane])
@@ -377,9 +285,10 @@ def ivf_topk(
     occupancy x n_probe, never O(n^2).
 
     At 100 TB: n_cells grows ~sqrt(N) so cells stay shuffle-partition
-    sized; the centroid matrix (n_cells x dim doubles) broadcasts to
-    every task; assignment is one Arrow-batched BLAS matmul per batch
-    (no per-row Python). Deterministic for a fixed seed.
+    sized; the centroid matrix (n_cells x dim doubles) ships to every
+    task in the function closure; assignment is one Arrow-batched BLAS
+    matmul per batch (no per-row Python). Deterministic for a fixed
+    seed.
 
     Pass ``recall_target`` (0..1) to AUTO-TUNE n_probe from the
     training sample (tune_n_probe): the probe count becomes the
@@ -410,15 +319,15 @@ def ivf_topk(
             if recall_target is not None
             else 2
         )
-    sc = df.sparkSession.sparkContext
-    b_cent = sc.broadcast(centroids)
 
+    # the centroid matrix (n_cells x dim doubles, a few KB) rides in
+    # the closure, like ann_lsh_topk's planes: no broadcast block is
+    # left behind for the JVM ContextCleaner to free
     def assign(batches):
-        cent = b_cent.value
         for pdf in batches:
             q = np.array(list(pdf[vec_col]), dtype=np.float64)
             q = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-            sims = q @ cent.T  # (batch, n_cells)
+            sims = q @ centroids.T  # (batch, n_cells)
             order = np.argsort(-sims, axis=1)
             yield pd.DataFrame(
                 {
@@ -444,11 +353,10 @@ def ivf_topk(
     )
     b = assigned.select(F.col(id_col).alias("id_b"), "cell")
     # id-only candidates, vectors joined back from the source relation
-    # on id (round 8 — see ann_lsh_topk_pinned's shuffle-discipline
-    # note): the cell join shuffles 16-byte rows, never the embedding
-    # payload. No a<b mirror here: the relation is ASYMMETRIC ((x,y)
-    # needs y's home cell in x's probe set — not implied the other
-    # way), unlike the LSH variants where both sides bucket
+    # on id (round 8): the cell join shuffles 16-byte rows, never the
+    # embedding payload. No a<b mirror here: the relation is ASYMMETRIC
+    # ((x,y) needs y's home cell in x's probe set — not implied the
+    # other way), unlike LSH where both sides bucket
     # identically. Round 13: the former dropDuplicates "union over
     # probed cells" was a provable NO-OP paying a full exchange of the
     # pair stream — id_b contributes exactly its ONE home cell and a's
@@ -485,93 +393,6 @@ def ivf_topk(
     )
 
 
-def ann_lsh_topk(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_planes: int = 2,
-    n_tables: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate all-pairs top-k via multi-table random-hyperplane LSH.
-
-    Standard sign-LSH banding: each of n_tables tables hashes a vector
-    to a bucket from n_planes hyperplane signs; vectors sharing ANY
-    table's bucket are candidates (OR-amplification — recall
-    1-(1-p^n_planes)^n_tables for per-plane agreement p). Exact cosine
-    runs only on candidates; candidate generation is an equi-join on
-    (table, bucket) — never a cross join.
-
-    Tuning: more planes/table -> smaller buckets -> less pairwise work,
-    lower per-table recall; more tables buys the recall back at the
-    cost of candidate-union size. Deterministic for a fixed seed.
-
-    Scale rule (the round-7 simhash band-width finding applies here
-    verbatim): bucket count per table is 2^n_planes, so the random
-    candidate floor is ~n²/2^n_planes per table. The n_planes=2
-    default (4 buckets) is an ORACLE-SCALE setting; at corpus size n
-    set n_planes ≈ log2(n / target_bucket_rows) so buckets stay
-    shuffle-partition sized (e.g. n=1e9, 10k-row buckets -> ~17
-    planes), then raise n_tables until recall recovers.
-    """
-    first = df.select(vec_col).first()
-    dim = len(first[0])
-    rng = np.random.RandomState(seed)
-    tables = [rng.normal(size=(n_planes, dim)) for _ in range(n_tables)]
-    bucket_entries = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table"),
-                hyperplane_bucket_expr(vec_col, planes).alias("bucket"),
-            )
-            for t, planes in enumerate(tables)
-        ]
-    )
-    bucketed = df.select(
-        F.col(id_col), F.explode(bucket_entries).alias("tb")
-    ).select(id_col, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
-    a = bucketed.select(F.col(id_col).alias("id_a"), "table", "bucket")
-    b = bucketed.select(F.col(id_col).alias("id_b"), "table", "bucket")
-    # id-only candidates scored once per unordered pair, mirrored by
-    # projection (round 8 — see ann_lsh_topk_pinned's note)
-    pairs = (
-        a.join(b, on=["table", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()  # union over tables
-    )
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        l2_norm_expr(F.col(vec_col)).alias("norm_a"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        l2_norm_expr(F.col(vec_col)).alias("norm_b"),
-    )
-    sim = dot_expr(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b"))
-    half = (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", F.round(sim, 4).alias("cosine_sim"))
-    )
-    scored = half.unionByName(
-        half.select(
-            F.col("id_b").alias("id_a"),
-            F.col("id_a").alias("id_b"),
-            "cosine_sim",
-        )
-    )
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine_sim").desc(), F.col("id_b"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
 def rademacher_planes(
     n_tables: int, n_planes: int, dim: int, key: str = "annlsh"
 ) -> list[list[list[float]]]:
@@ -601,75 +422,6 @@ def rademacher_planes(
         ]
         for t in range(n_tables)
     ]
-
-
-def ann_lsh_topk_pinned(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_planes: int = 2,
-    n_tables: int = 8,
-    key: str = "annlsh",
-) -> DataFrame:
-    """ann_lsh_topk with md5-Rademacher planes and integer scoring.
-
-    Same multi-table sign-LSH shape as ann_lsh_topk (bucketed
-    candidates, exact cosine only within buckets), with two changes
-    that make the WHOLE output oracle-checkable: the hyperplanes come
-    from rademacher_planes (deterministic, engine-neutral), and
-    ranking uses the micro-rounded cosine (bigint) with the neighbor id
-    as tiebreaker, so no float ordering ever decides a row.
-
-    Output: (id_a, id_b, cosine_micro, rnk), rnk <= k per id_a.
-
-    Round 12: executes via the shared numpy kernel — see
-    _ann_lsh_topk_np for the plan shape and the measured equivalence
-    evidence (bit-identical to the former JVM HOF pipeline at every
-    test scale; the oracle hash check on q_ann_lsh pins it).
-    """
-    return _ann_lsh_topk_np(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        key=key,
-    )
-
-
-def ann_lsh_topk_banded(
-    df: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 32,
-    key: str = "annlsh",
-) -> DataFrame:
-    """ann_lsh_topk_pinned at production band widths — same md5-
-    Rademacher plane family, same kernel, wider banding defaults.
-
-    ann_lsh_topk_pinned's former unrolled-literal bucketing tree at
-    production widths is n_tables x n_planes x dim Column
-    constructions (32x8x64 = 16k py4j calls + a 16k-term Catalyst
-    projection — measured 140 s of plan BUILD at sf0.001 before a
-    single task ran). Both forms now run the shared numpy kernel whose
-    plan size is O(1) in every width parameter (the planes ride in the
-    function closure); see _ann_lsh_topk_np.
-    """
-    return _ann_lsh_topk_np(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        k=k,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        key=key,
-    )
 
 
 # Pair-index chunk size for the per-bucket scoring kernel: bounds the
@@ -705,23 +457,43 @@ def _pair_index_blocks(m: int, chunk: int = _LSH_SCORE_CHUNK):
         yield i, j
 
 
-def _ann_lsh_topk_np(
+def ann_lsh_topk(
     df: DataFrame,
     *,
     id_col: str,
     vec_col: str,
-    k: int,
-    n_planes: int,
-    n_tables: int,
-    key: str,
+    k: int = 5,
+    n_planes: int = 2,
+    n_tables: int = 8,
+    key: str = "annlsh",
 ) -> DataFrame:
-    """Shared md5-Rademacher LSH top-k kernel (round-12 rework).
+    """Approximate all-pairs top-k via multi-table random-hyperplane LSH.
 
-    Guide §4.2 (batch the Python boundary, hand whole batches to
-    vectorized native code) applied to both hot stages, replacing the
-    r8 JVM pipeline [HOF bucketing -> (table,bucket) id self-join ->
-    dropDuplicates -> two vector join-backs -> HOF cosine -> mirrored
-    union]:
+    Standard sign-LSH banding: each of n_tables tables hashes a vector
+    to a bucket from n_planes hyperplane signs; vectors sharing ANY
+    table's bucket are candidates (OR-amplification — recall
+    1-(1-p^n_planes)^n_tables for per-plane agreement p). Exact cosine
+    runs only on candidates, and only within a bucket — never a cross
+    join. The hyperplanes come from rademacher_planes (deterministic,
+    engine-neutral) and ranking uses the micro-rounded cosine (bigint)
+    with the neighbor id as tiebreaker, so no float ordering ever
+    decides a row and the WHOLE output is oracle-checkable.
+
+    Output: (id_a, id_b, cosine_micro, rnk), rnk <= k per id_a.
+
+    Scale rule: bucket count per table is 2^n_planes, so the random
+    candidate floor is ~n²/2^n_planes per table. The n_planes=2 /
+    n_tables=8 default (q_ann_lsh's oracle-pinned setting) is an
+    ORACLE-SCALE setting; at corpus size n set n_planes ≈
+    log2(n / target_bucket_rows) so buckets stay shuffle-partition
+    sized, then raise n_tables until recall recovers (q_ann_lsh_prod
+    runs 8 planes x 32 tables).
+
+    Kernel (round-12 rework) — guide §4.2 (batch the Python boundary,
+    hand whole batches to vectorized native code) applied to both hot
+    stages, replacing the r8 JVM pipeline [HOF bucketing ->
+    (table,bucket) id self-join -> dropDuplicates -> two vector
+    join-backs -> HOF cosine -> mirrored union]:
 
     1. BUCKETING is one Arrow batch GEMM per scan split: the
        (dim x n_tables*n_planes) plane matrix rides in the closure (a

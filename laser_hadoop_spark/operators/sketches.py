@@ -20,6 +20,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def misra_gries_step(counters: dict, values, capacity: int) -> None:
+    """Fold ``values`` into the Misra-Gries summary ``counters`` in
+    place: a tracked value increments; a new value takes a free slot;
+    with every slot taken, all counters decrement and zeros drop out.
+    The one MG update shared by the batch summary below and the
+    streaming heavy-hitter states (streaming/ops.py)."""
+    for value in values:
+        if value in counters:
+            counters[value] += 1
+        elif len(counters) < capacity:
+            counters[value] = 1
+        else:
+            dead = [k for k in counters if counters[k] == 1]
+            for k in counters:
+                counters[k] -= 1
+            for k in dead:
+                del counters[k]
+
+
 def misra_gries_candidates(df: DataFrame, col: str, capacity: int) -> DataFrame:
     """Per-partition Misra-Gries summaries, unioned and deduplicated.
 
@@ -40,17 +59,7 @@ def misra_gries_candidates(df: DataFrame, col: str, capacity: int) -> DataFrame:
     def mg_partition(batches):
         counters: dict = {}
         for pdf in batches:
-            for value in pdf[col]:
-                if value in counters:
-                    counters[value] += 1
-                elif len(counters) < capacity:
-                    counters[value] = 1
-                else:
-                    dead = [k for k in counters if counters[k] == 1]
-                    for k in counters:
-                        counters[k] -= 1
-                    for k in dead:
-                        del counters[k]
+            misra_gries_step(counters, pdf[col], capacity)
         yield pd.DataFrame({col: list(counters.keys())})
 
     return df.select(col).mapInPandas(

@@ -658,7 +658,7 @@ _ANN_DIM = 64  # embeddings table dim at every sf (TESTDATA.md)
 
 
 def _ann_lsh_oracle() -> str:
-    """DuckDB SQL reproducing ann_lsh_topk_pinned bit-for-bit.
+    """DuckDB SQL reproducing ann_lsh_topk bit-for-bit.
 
     The md5-Rademacher hyperplanes inline as ±1 list literals (the
     exact same values the Spark plan uses — both sides call
@@ -727,21 +727,19 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     np.random, so the DuckDB oracle reproduces bucket assignment and
     candidate generation exactly; scores are micro-rounded bigints and
     ranks break ties on neighbor id, so the whole (id_a, id_b,
-    cosine_micro, rnk) output hash-checks — the former rows-only check
-    survives only in ann_lsh_topk (the np.random variant, pytest
-    recall-tested).
+    cosine_micro, rnk) output hash-checks.
 
-    100 TB: candidates come from an equi-join on (table, bucket) —
-    never a cross join; per-bucket width is tuned by n_planes, recall
-    by n_tables (OR-amplification), and every stage shuffles ids +
-    packed bucket longs, not vectors (vectors ride only into the
-    bucket join's value slots).
+    100 TB: candidates are generated per (table, bucket) after one hash
+    repartition — never a cross join; per-bucket width is tuned by
+    n_planes, recall by n_tables (OR-amplification), and the vector
+    payload crosses the wire once, in that repartition
+    (operators/similarity.ann_lsh_topk, the one sign-LSH entry point).
     """
-    from laser_hadoop_spark.operators.similarity import ann_lsh_topk_pinned
+    from laser_hadoop_spark.operators.similarity import ann_lsh_topk
 
     emb = table(spark, sf_dir, "embeddings")
     return (
-        ann_lsh_topk_pinned(
+        ann_lsh_topk(
             emb,
             id_col="vec_id",
             vec_col="embedding",
@@ -762,7 +760,7 @@ def q_ann_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4 (scale path): sign-LSH ANN at PRODUCTION bucket density
     (VERDICT_r11 item 6).
 
-    Same ann_lsh_topk_pinned kernel and md5-Rademacher plane family as
+    Same ann_lsh_topk kernel and md5-Rademacher plane family as
     q_ann_lsh, but parameterized by the r8 scaling rule instead of the
     oracle's recall envelope: n_planes = log2(n / target_bucket_rows)
     = 8 at the sf0.1 corpus (2000 vectors / 256 buckets ≈ 8-row
@@ -781,17 +779,17 @@ def q_ann_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle would be a 16k-term SQL string; the kernel itself is
     already hash-certified end-to-end by q_ann_lsh at the oracle
     setting, and the driver's rows>0/schema check plus the pytest
-    recall gate cover this parameterization. Plan shape: at these
-    widths the planes ship as a broadcast relation and bucketing is
-    one HOF fold (ann_lsh_topk_banded) — the oracle-parity unrolled
-    literal tree would be 16k Column constructions (~140 s of pure
+    recall gate cover this parameterization. Plan shape: identical to
+    q_ann_lsh's — the planes ride in the bucketing kernel's closure,
+    so plan size is O(1) in the widths (an unrolled literal tree at
+    these widths would be 16k Column constructions, ~140 s of pure
     plan build).
     """
-    from laser_hadoop_spark.operators.similarity import ann_lsh_topk_banded
+    from laser_hadoop_spark.operators.similarity import ann_lsh_topk
 
     emb = table(spark, sf_dir, "embeddings")
     return (
-        ann_lsh_topk_banded(
+        ann_lsh_topk(
             emb,
             id_col="vec_id",
             vec_col="embedding",

@@ -40,18 +40,23 @@ def q_row_number_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     form (write.partitionBy('chunk')) is exercised in pytest; here the
     chunk assignment + per-chunk stats are oracle-checked.
 
-    Physical strategy: two-pass offset chunking
-    (operators/chunking.assign_chunks_offsets) — range-partitioned
-    parallel sort + per-partition counts + broadcast prefix offsets.
+    Physical strategy: the global row number comes from
+    operators/cumulative.ordered_cumsum's ``row_number_col`` —
+    range-partitioned parallel sort, per-partition row numbers and
+    prefix offsets joined back declaratively (lazy checkpoint, no
+    driver collect) — then chunk = floor((rn - 1) / 100).
     Output-identical to a global row_number() window (the oracle's
     formulation) but with no single-partition stage, so it survives a
     100x scale-up; equivalence with the window form is pytest-pinned.
     """
-    from laser_hadoop_spark.operators.chunking import assign_chunks_offsets
+    from laser_hadoop_spark.operators.cumulative import ordered_cumsum
 
     o = table(spark, sf_dir, "orders")
-    chunked = assign_chunks_offsets(
-        o.select("o_orderkey"), "o_orderkey", CHUNK_SIZE
+    chunked = ordered_cumsum(
+        o.select("o_orderkey"), order_by=["o_orderkey"], row_number_col="__rn"
+    ).select(
+        "o_orderkey",
+        F.floor((F.col("__rn") - 1) / CHUNK_SIZE).alias("chunk"),
     )
     return chunked.groupBy("chunk").agg(
         F.count("*").alias("n_rows"),

@@ -15,6 +15,10 @@ order-insensitive value hash, so:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -85,125 +89,32 @@ def _load_all() -> None:
 
 
 # The driver verifies a 50-entry PREFIX of queries() order (every
-# CORRECTNESS_r0N.json is exactly the first 50 entries of that round's
-# ordering), so dict order is a verification budget.
-#
-# ROUND-12 ROTATION (VERDICT_r11 item 3): round 11's window came back
-# 45 hash-green + 5 rows-only (the intentional no-oracle set), closing
-# total driver coverage at 439/439 with zero regressions. Slots 1-40:
-# the 40 remaining r3-vintage greens, exactly as pre-staged past last
-# round's window (vintage = latest round in any CORRECTNESS_r0N.json,
-# per LEDGER.json). Slots 41-50: the 10 oldest r4-vintage greens, in
-# their CORRECTNESS_r04 window order. After the window: the remaining
-# 40 r4-vintage greens in r4 window order (pre-queueing the r13
-# window), then registration order via _ordered().
-_DRIVER_PRIORITY = [
-    # -- slots 1-40: r3-vintage regression re-checks (pre-staged) ----
-    "q_market_basket",
-    "q_attribution",
-    "q_resample_linear",
-    "q_pagerank_exact",
-    "q_max_concurrent",
-    "q_dq_checks",
-    "q_zorder_stats",
-    "q_key_skew_profile",
-    "q_triangle_count",
-    "q_kmeans_exact",
-    "q_best_split",
-    "q_bucketed_fact_join",
-    "q_bloom_semi_join",
-    "q_text_lm_score",
-    "q_ann_ivf",
-    "q_contamination",
-    "q_doc_repetition",
-    "q_embedding_centroid",
-    "q_pack_sequences",
-    "q_line_dedup",
-    "q_redact_pii",
-    "q_quantize_embeddings",
-    "q_inverted_index",
-    "q_winnow_fingerprints",
-    "q_prefix_filter_pairs",
-    "q_feature_hashing",
-    "q_naive_bayes_train",
-    "q_disjunctive_pred",
-    "q_forecast_revenue",
-    "q_volume_shipping",
-    "q_market_share",
-    "q_returned_items",
-    "q_large_volume_orders",
-    "q_min_cost_supplier",
-    "q_potential_promotion",
-    "q_product_profit",
-    "q_important_stock",
-    "q_top_supplier",
-    "q_parts_supplier_count",
-    "q_waiting_suppliers",
-    # -- slots 41-50: oldest r4-vintage regression re-checks --------
-    "q_naive_bayes_score",
-    "q_point_in_time_join",
-    "q_outlier_count",
-    "q_event_transitions",
-    "q_ab_test",
-    "q_rfm_segments",
-    "q_hamming_neighbors",
-    "q_top_paths",
-    "q_max_drawdown",
-    "q_pareto_customers",
-    # -- past the window: remaining r4-vintage greens in r4 window
-    #    order (the r13 window head), then registration order -------
-    "q_ship_latency",
-    "q_repeat_interval",
-    "q_new_vs_returning",
-    "q_dow_seasonality",
-    "q_rolling_active_users",
-    "q_funnel_windowed",
-    "q_cart_abandonment",
-    "q_gini_revenue",
-    "q_value_deciles",
-    "q_duplicate_invoices",
-    "q_benford",
-    "q_monthly_growth",
-    "q_abc_analysis",
-    "q_mad",
-    "q_pivot_table",
-    "q_weighted_median",
-    "q_interval_union",
-    "q_skyline",
-    "q_bigram_pmi",
-    "q_minhash_signatures",
-    "q_run_length",
-    "q_nearest_event",
-    "q_zipf_fit",
-    "q_latest_state",
-    "q_mode_per_group",
-    "q_entropy",
-    "q_chi_squared",
-    "q_heavy_hitters",
-    "q_table_diff",
-    "q_ewma",
-    "q_bfs_distances",
-    "q_simhash_exact",
-    "q_sample_hash_stratified",
-    "q_boxplot_stats",
-    "q_copurchase_degree",
-    "q_equidepth_histogram",
-    "q_partition_checksum",
-    "q_incremental_merge",
-    "q_audience_jaccard",
-    "q_bm25_search",
-]
+# CORRECTNESS_r<N>.json is exactly the first 50 entries of that round's
+# ordering), so dict order is a verification budget. The window is
+# derived, never hand-rotated: queries sort by the last round any
+# CORRECTNESS file lists them (never verified = round 0), oldest first,
+# ties in registration order. A round's file landing rotates the window
+# with no edit; tests/test_ledger.py pins it against the merged ledger.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _last_verified_round() -> dict[str, int]:
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        with open(path) as f:
+            for name in json.load(f):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def _ordered() -> dict[str, QuerySpec]:
     _load_all()
-    out: dict[str, QuerySpec] = {}
-    for name in _DRIVER_PRIORITY:
-        out[name] = _REGISTRY[name]
-    for name, spec in _REGISTRY.items():
-        if name not in out:
-            out[name] = spec
-    return out
+    last = _last_verified_round()
+    # sorted() is stable: equal rounds keep registration order
+    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=lambda n: last.get(n, 0))}
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from laser_hadoop_spark.operators.sketches import misra_gries_step
+
 DEFAULT_WATERMARK = "10 minutes"
 
 
@@ -426,6 +428,13 @@ def decayed_counter_per_user(events: DataFrame) -> DataFrame:
 DECAYED_TTL_SCHEMA = "user_id long, ewma_x32768 long, n_seen long, expired boolean"
 
 
+def _set_event_time_timeout(state: GroupState, deadline_ms: int) -> None:
+    """Event-time timeout at ``deadline_ms``. Spark rejects a timeout
+    at-or-before the current watermark, so a key fed only late data
+    expires at the next watermark advance instead."""
+    state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
+
+
 def _mk_decayed_ttl_fn(ttl_ms: int):
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -455,11 +464,7 @@ def _mk_decayed_ttl_fn(ttl_ms: int):
             # "watermark passes the key's newest event + ttl"
             last_ms = max(last_ms, int(pdf["t_us"].max()) // 1000)
         state.update((s if s is not None else -1, n, last_ms))
-        # Spark rejects a timeout at-or-before the current watermark, so a
-        # key fed only late data expires at the next watermark advance.
-        state.setTimeoutTimestamp(
-            max(last_ms + ttl_ms, state.getCurrentWatermarkMs() + 1)
-        )
+        _set_event_time_timeout(state, last_ms + ttl_ms)
         yield pd.DataFrame(
             {
                 "user_id": [key[0]],
@@ -535,17 +540,7 @@ def _mk_hh_fn(capacity: int):
         else:
             counters = {}
         for pdf in pdfs:
-            for token in pdf["token"]:
-                if token in counters:
-                    counters[token] += 1
-                elif len(counters) < capacity:
-                    counters[token] = 1
-                else:
-                    dead = [k for k in counters if counters[k] == 1]
-                    for k in counters:
-                        counters[k] -= 1
-                    for k in dead:
-                        del counters[k]
+            misra_gries_step(counters, pdf["token"], capacity)
         state.update((list(counters.keys()), list(counters.values())))
         yield pd.DataFrame(
             {
@@ -621,23 +616,9 @@ def _mk_hh_ttl_fn(capacity: int, ttl_ms: int):
             if not len(pdf):
                 continue
             last_ms = max(last_ms, int(pdf["t_us"].max()) // 1000)
-            for token in pdf["token"]:
-                if token in counters:
-                    counters[token] += 1
-                elif len(counters) < capacity:
-                    counters[token] = 1
-                else:
-                    dead = [k for k in counters if counters[k] == 1]
-                    for k in counters:
-                        counters[k] -= 1
-                    for k in dead:
-                        del counters[k]
+            misra_gries_step(counters, pdf["token"], capacity)
         state.update((list(counters.keys()), list(counters.values()), last_ms))
-        # same late-data guard as ST12: a timeout at-or-before the
-        # current watermark is rejected by Spark
-        state.setTimeoutTimestamp(
-            max(last_ms + ttl_ms, state.getCurrentWatermarkMs() + 1)
-        )
+        _set_event_time_timeout(state, last_ms + ttl_ms)
         yield pd.DataFrame(
             {
                 "bucket": [key[0]] * len(counters),
@@ -1065,10 +1046,8 @@ def _mk_sessionize_fn(gap_ms: int):
                     last_us, n = max(last_us, t), n + 1
         state.update((start_us, last_us, n))
         # the open session closes when the watermark passes its last
-        # event by the gap (Spark rejects deadlines <= watermark)
-        state.setTimeoutTimestamp(
-            max(last_us // 1000 + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
+        # event by the gap
+        _set_event_time_timeout(state, last_us // 1000 + gap_ms)
         for r in closed:
             yield pd.DataFrame(r)
 

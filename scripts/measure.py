@@ -1,23 +1,21 @@
 #!/usr/bin/env python
-"""Round-13 optimization measurement harness (guide §1).
+"""Per-query measurement harness (guide §1).
 
-Same contract as measure_r12.py (best-of-N noop-sink + collect timing,
-formatted-plan capture to plans/r13/<name>_<tag>.txt), plus two
-round-13 additions from VERDICT_r12:
+For each query: best-of-3 noop-sink time (the plan is rebuilt per run,
+so no AQE-materialized stage is reused), the job count of one noop
+execution (DAGScheduler.nextJobId before/after), and the formatted
+physical plan written to plans/<tag>/<name>.txt.
 
-- PLAN CAPTURE THROUGH CHECKPOINTS (item 9): localCheckpoint truncates
-  lineage, so a checkpoint-rooted dump hides every stage upstream of
-  the checkpoint (the r12 simhash after-plan rooted at Scan
-  ExistingRDD). During the capture build, DataFrame.localCheckpoint is
-  wrapped to ALSO dump its input's formatted plan; the fragments are
-  appended to the plan file under '=== pre-checkpoint fragment N ==='
-  headers, so the audit sees the kernel stages feeding each pin.
-- JOB COUNT per execution (item 3's done-criterion is "one fewer job
-  per call"): counted with a SparkListener across one noop run.
+Plan capture sees through checkpoints: localCheckpoint truncates
+lineage, so a checkpoint-rooted plan hides every stage upstream of the
+pin. During the capture build DataFrame.localCheckpoint is wrapped to
+also dump its input's formatted plan; the fragments are appended to the
+plan file under '=== pre-checkpoint fragment N ===' headers.
 
-Usage: python scripts/measure_r13.py [tag] [query ...]
-  tag      suffix for the plan files (default "before")
+Usage: python scripts/measure.py [tag] [query ...]
+  tag      plan directory under plans/ (default "before")
   query    subset of registry names (default: bench.HEADLINE)
+  SPARK_GRAFT_SF_DIR selects the corpus (default /root/testdata/sf0.1)
 """
 
 from __future__ import annotations
@@ -52,10 +50,10 @@ def main() -> None:
     names = sys.argv[2:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark("measure_r13")
+    spark = get_spark("measure")
     sc = spark.sparkContext
     specs = registry.specs()
     try:
@@ -76,7 +74,7 @@ def main() -> None:
         # the number of jobs one execution submitted.
         return int(sc._jsc.sc().dagScheduler().nextJobId())
 
-    totals = {"noop": 0.0, "collect": 0.0}
+    total_noop = 0.0
     for name in names:
         fn = specs[name].fn
         sc.setJobDescription(f"measure:{name}")
@@ -99,7 +97,7 @@ def main() -> None:
             plan = _fmt_plan(df)
         finally:
             DataFrame.localCheckpoint = orig_ckpt
-        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
             fh.write(plan)
             for i, frag in enumerate(fragments):
                 fh.write(f"\n\n=== pre-checkpoint fragment {i} ===\n")
@@ -110,28 +108,18 @@ def main() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         n_jobs = _job_count() - j0
         _hygiene()
-        best_noop = best_collect = float("inf")
-        n_rows = None
+        best_noop = float("inf")
         for _ in range(REPS):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best_noop = min(best_noop, time.perf_counter() - t0)
             _hygiene()
-            t0 = time.perf_counter()
-            rows = fn(spark, sf_dir).collect()
-            best_collect = min(best_collect, time.perf_counter() - t0)
-            n_rows = len(rows)
-            del rows
-            _hygiene()
-        totals["noop"] += best_noop
-        totals["collect"] += best_collect
+        total_noop += best_noop
         print(
             json.dumps(
                 {
                     "query": name,
                     "noop_sec": round(best_noop, 3),
-                    "collect_sec": round(best_collect, 3),
-                    "rows": n_rows,
                     "jobs": n_jobs,
                     "ckpt_fragments": len(fragments),
                 }
@@ -143,8 +131,7 @@ def main() -> None:
             {
                 "summary": True,
                 "tag": tag,
-                "total_noop_sec": round(totals["noop"], 3),
-                "total_collect_sec": round(totals["collect"], 3),
+                "total_noop_sec": round(total_noop, 3),
                 "n_queries": len(names),
             }
         ),

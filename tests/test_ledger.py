@@ -83,3 +83,21 @@ def test_green_queries_keep_their_oracles(ledger):
         if e["status"] == "green" and n in specs and specs[n].oracle is None
     ]
     assert not downgraded, f"oracle-backed green queries downgraded to rows-only: {downgraded}"
+
+
+def test_driver_window_follows_ledger(ledger):
+    """The driver verifies the first 50 entries of queries() order. The
+    window is derived from the CORRECTNESS files, not hand-rotated:
+    registered queries sorted by the last round that verified them
+    (never verified = round 0), ties in registration order — so every
+    never-verified query leads the window."""
+    specs = registry.specs()
+    last = {
+        n: max(e["green_rounds"] + e["rows_only_rounds"] + e["failed_rounds"])
+        for n, e in ledger["queries"].items()
+    }
+    window = list(registry.all_queries())[:50]
+    assert window == sorted(specs, key=lambda n: last.get(n, 0))[:50]
+    never = [n for n in specs if n not in last]
+    assert window[: len(never)] == never[:50]
+    assert sorted(registry.all_queries()) == sorted(specs)

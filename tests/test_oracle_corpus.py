@@ -99,6 +99,10 @@ WINDOW_ROWS_ONLY_DECLARED = frozenset(
         # regression block (recall pytest-gated vs brute force;
         # assignment hash-verified via q_nearest_hub)
         "q_ann_ivf",
+        # never driver-verified, so the derived window (registry
+        # _ordered) puts it first; recall pytest-gated vs exact top-k,
+        # kernel hash-verified via q_ann_lsh
+        "q_ann_lsh_prod",
     ]
 )
 

@@ -25,7 +25,7 @@ def _plan_through_ckpts(spark, sf_dir, fn) -> str:
     their visible plan at a Scan ExistingRDD; auditing only the top
     plan goes blind to everything upstream of the pin (the r12 simhash
     blind spot, VERDICT_r12 item 9). Same capture discipline as
-    scripts/measure_r13.py."""
+    scripts/measure.py."""
     try:
         from pyspark.sql.classic.dataframe import DataFrame as _CDF
     except ImportError:  # pragma: no cover - older Spark
@@ -176,17 +176,6 @@ def test_bucketed_fact_join_no_join_shuffle(spark, sf_dir):
         assert rows == want
     finally:
         pass
-
-
-def test_driver_priority_list_in_sync():
-    """_DRIVER_PRIORITY must reference only registered queries, without
-    duplicates, and together with the registration order cover all."""
-    names = set(registry.specs())
-    prio = registry._DRIVER_PRIORITY
-    assert len(prio) == len(set(prio)), "duplicate in _DRIVER_PRIORITY"
-    unknown = [n for n in prio if n not in names]
-    assert not unknown, f"unregistered queries in priority list: {unknown}"
-    assert list(registry.all_queries())[: len(prio)] == prio
 
 
 def test_projection_pruning_reaches_scan(spark, sf_dir):

@@ -146,34 +146,6 @@ def test_grouped_procrustes_without_scaling_is_rigid(spark):
     assert abs(d_proj - d_src) < 1e-9  # rigid: distances preserved
 
 
-# --- sizing-gate undercount clamp (ADVICE r9) -----------------------------
-
-
-def test_brute_force_blocked_rejects_caller_undercount(spark, sf_dir):
-    """A caller-supplied n_rows BELOW the true cardinality must not
-    reach the driver-collect path: the LIMIT n_rows+1 probe detects
-    the lie and falls through to the distributed grid kernel, with
-    identical pairs."""
-    from laser_hadoop_spark.operators import similarity
-    from laser_hadoop_spark.tables import table
-
-    emb = table(spark, sf_dir, "embeddings").limit(80).cache()
-    want = {
-        (r["vec_a"], r["vec_b"]): r["cosine_sim"]
-        for r in similarity.brute_force_pairs_blocked(
-            emb, id_col="vec_id", vec_col="embedding", threshold=0.3
-        ).collect()
-    }
-    lied = similarity.brute_force_pairs_blocked(
-        emb, id_col="vec_id", vec_col="embedding", threshold=0.3,
-        max_collect_rows=40, n_rows=10,  # claims 10, actually 80
-    )
-    plan = lied._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # grid kernel, not collect
-    got = {(r["vec_a"], r["vec_b"]): r["cosine_sim"] for r in lied.collect()}
-    assert got == want
-
-
 # --- pair-audit pattern anchoring (ADVICE r9) -----------------------------
 
 

@@ -84,18 +84,18 @@ def _legacy_lsh_topk(df, *, id_col, vec_col, k, n_planes, n_tables, key="annlsh"
     [(2, 8), (8, 32)],  # oracle-pinned q_ann_lsh + production q_ann_lsh_prod
 )
 def test_ann_lsh_numpy_kernel_matches_legacy_pipeline(spark, sf_dir, n_planes, n_tables):
-    """The r12 numpy LSH kernel (_ann_lsh_topk_np) must reproduce the
+    """The r12 numpy LSH kernel (ann_lsh_topk) must reproduce the
     former JVM pipeline bit-for-bit: same buckets (GEMM sign vs HOF
     fold), same min-table dedup as the dropDuplicates union, same
     micro scores (pairwise numpy row sums + HALF_UP vs
     dot_expr/F.round — float32 inputs upcast to double BEFORE any
     arithmetic, the dot_expr semantics), same top-k rows."""
-    from laser_hadoop_spark.operators.similarity import ann_lsh_topk_pinned
+    from laser_hadoop_spark.operators.similarity import ann_lsh_topk
     from laser_hadoop_spark.tables import table
 
     emb = table(spark, sf_dir, "embeddings")
     new = (
-        ann_lsh_topk_pinned(
+        ann_lsh_topk(
             emb,
             id_col="vec_id",
             vec_col="embedding",

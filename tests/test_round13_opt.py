@@ -68,12 +68,12 @@ def test_ann_kernel_hot_bucket_end_to_end(spark):
     (table, bucket) per table at every width, so the whole corpus is a
     single hot bucket. The kernel must survive it (chunked triangles,
     streamed output) and produce the exact brute-force top-k."""
-    from laser_hadoop_spark.operators.similarity import ann_lsh_topk_pinned
+    from laser_hadoop_spark.operators.similarity import ann_lsh_topk
 
     n = 300
     rows = [(i, [float(i + 1), 0.0, 0.0, 0.0]) for i in range(n)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = ann_lsh_topk_pinned(
+    out = ann_lsh_topk(
         df, id_col="vec_id", vec_col="embedding", k=3, n_planes=2, n_tables=2
     )
     got = {(r.id_a, r.id_b, r.cosine_micro, r.rnk) for r in out.collect()}
