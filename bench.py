@@ -77,8 +77,8 @@ HEADLINE = [
 ]
 
 
-# Storage tenancy band: the sweep-hygiene invariant
-# (tests/test_round11_fixes.py) pins post-query storage under 500 MB.
+# Storage tenancy band: the oracle sweep (tests/test_oracle_corpus.py)
+# pins post-query storage under it, query by query.
 # A peak over it is the structural signature of the in-session slow mode
 # (checkpoint/broadcast blocks piling up on the driver heap; see
 # session.release_persisted). It counts bytes, not seconds, so host load
@@ -153,26 +153,14 @@ def main() -> None:
         warehouse_error = f"{type(exc).__name__}: {exc}"
     # One untimed warmup pass: JIT-compiles the hot codegen/shuffle paths
     # so per-query numbers don't depend on what ran earlier in the JVM.
-    #
-    # Session hygiene between queries: each run rebuilds its plan from
-    # scratch, so the previous run's checkpoint blocks are garbage the
-    # moment the action returns — but without an explicit unpersist they
-    # are freed only when a JVM GC happens to let the ContextCleaner run,
-    # and lingering storage on the shared 8 GB heap pushes big sorts into
-    # GC thrash. release_persisted() after every run removes the
-    # GC-timing dependence; a storage-triggered System.gc() additionally
-    # bounds broadcast-block tenancy (those are only
-    # ContextCleaner-freeable). Both run OUTSIDE the timing windows.
+    # Each run rebuilds its plan, so the previous run's checkpoint and
+    # broadcast blocks are dead once its action returns;
+    # release_persisted() frees them after every run, outside the
+    # timing windows.
     from laser_hadoop_spark.session import release_persisted, storage_memory_used
 
-    def _hygiene() -> None:
-        release_persisted(spark)
-        if storage_memory_used(spark) > 1_000_000_000:
-            spark.sparkContext._jvm.System.gc()
-
-    # storage_peak is sampled after each action but BEFORE _hygiene()
-    # releases blocks: it is the session's true in-run storage
-    # high-water mark.
+    # storage_peak is sampled after each action but BEFORE the release:
+    # it is the session's true in-run storage high-water mark.
     storage_peak = 0
 
     def _noop(df) -> None:
@@ -181,7 +169,7 @@ def main() -> None:
     for name in HEADLINE:
         _noop(specs[name].fn(spark, sf_dir))
         storage_peak = max(storage_peak, storage_memory_used(spark))
-        _hygiene()
+        release_persisted(spark)
     timings: dict[str, float] = {}
     for name in HEADLINE:
         fn = specs[name].fn
@@ -191,7 +179,7 @@ def main() -> None:
             _noop(fn(spark, sf_dir))
             best = min(best, time.perf_counter() - t0)
             storage_peak = max(storage_peak, storage_memory_used(spark))
-            _hygiene()
+            release_persisted(spark)
         timings[name] = round(best, 3)
     total = round(sum(timings.values()), 3)
     # Streaming micro-benches over a PINNED deterministic file stream

@@ -14,9 +14,11 @@ neighbors' labels. Scale mechanics that matter at 100 TB:
   aggregate — no driver-side graph structure;
 - `localCheckpoint` truncates the lineage every round, otherwise the
   plan doubles per iteration and planning time explodes by round ~15;
-- convergence needs at most diameter(G) rounds; near-dup graphs are
-  shallow (most components are pairs/triangles), so the loop usually
-  exits after 2-3 rounds via the changed-count check (a tiny action).
+- convergence needs one round per hop of the longest shortest path,
+  plus one round that observes no change. Shallow graphs (pairs,
+  triangles, stars) finish in 2-3 rounds; a chain of n near-duplicates
+  needs about n rounds, and a graph that has not converged within
+  ``max_iter`` rounds raises instead of returning partial labels.
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ def connected_components(
     Input: an edge list (directionless; both orientations are derived).
     Output: (node, component) — component = min node id reachable.
     Deterministic: min-label propagation has a unique fixpoint.
+    Raises RuntimeError when labels still change in round ``max_iter``.
     """
     # Materialize the symmetrized edge list ONCE, deriving BOTH
     # orientations from a single evaluation of `edges` (explode of a
@@ -77,6 +80,7 @@ def connected_components(
     )
     from pyspark.sql import Observation
 
+    changed = None
     for _ in range(max_iter - 1):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
@@ -107,8 +111,14 @@ def connected_components(
             .localCheckpoint(eager=True)  # O(1) plan per round
         )
         labels = new_labels
-        if obs.get["changed"] == 0:
+        changed = obs.get["changed"]
+        if not changed:  # 0, or NULL when the graph is empty
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge: {changed} node labels "
+            f"still changed in round {max_iter} (max_iter={max_iter})"
+        )
     return labels.select("node", F.col("label").alias("component"))
 
 

@@ -321,8 +321,7 @@ def ivf_topk(
         )
 
     # the centroid matrix (n_cells x dim doubles, a few KB) rides in
-    # the closure, like ann_lsh_topk's planes: no broadcast block is
-    # left behind for the JVM ContextCleaner to free
+    # the closure, like ann_lsh_topk's planes: no Python broadcast
     def assign(batches):
         for pdf in batches:
             q = np.array(list(pdf[vec_col]), dtype=np.float64)

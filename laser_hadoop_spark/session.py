@@ -14,10 +14,11 @@ here every one of those choices is delegated to Catalyst/AQE.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-# Defaults appropriate both for the local[32] harness and, with
+# Defaults appropriate both for the local[N] harness and, with
 # master/memory overridden, for a large cluster: everything here is a
 # logical-plan / optimizer setting, not a hard-coded physical choice.
 ENGINE_CONF: dict[str, str] = {
@@ -83,42 +84,64 @@ def ensure_vendored_protobuf() -> bool:
         return False
 
 
+class PersistedSnapshot(frozenset):
+    """What a session held at one moment: the persisted RDD ids (the set
+    itself, so it compares equal to a plain set of ids) and
+    ``broadcast_max``, the largest broadcast id then in block storage
+    (-1 when none). Broadcast ids only increase, so every broadcast
+    created after the snapshot has a larger id."""
+
+    broadcast_max: int
+
+    def __new__(cls, rdd_ids, broadcast_max: int):
+        snap = super().__new__(cls, rdd_ids)
+        snap.broadcast_max = broadcast_max
+        return snap
+
+
+def _broadcast_ids(spark: SparkSession) -> set[int]:
+    """Ids of the broadcasts whose blocks the driver's block manager
+    holds. The driver keeps a copy of every broadcast it creates, so in
+    local mode and on a cluster alike this lists all of them.
+
+    The listing crosses py4j as one string of ``(name,info)`` pairs, one
+    call instead of three per block; broadcast block names are
+    ``broadcast_<id>`` and ``broadcast_<id>_piece<n>``."""
+    env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+    listing = env.blockManager().blockInfoManager().entries().mkString(",")
+    return {int(i) for i in re.findall(r"\(broadcast_(\d+)[,_]", listing)}
+
+
 def release_persisted(
     spark: SparkSession,
     blocking: bool = False,
-    keep_ids: set[int] | None = None,
+    keep_ids: PersistedSnapshot | None = None,
 ) -> int:
-    """Unpersist every persisted RDD/DataFrame block in the session.
+    """Free the storage a finished query left in the session.
 
-    The engine's operators use ``localCheckpoint(eager=True)`` /
-    ``persist()`` to pin reused relations for the duration of ONE query;
-    the blocks are owned by the returned DataFrame's plan, so they can
-    only be freed after the caller has consumed the result. Long
-    sessions that run many queries back-to-back (bench.py, the oracle
-    sweeps, the driver) MUST call this between queries. Root cause of
-    the q_jaro_pairs in-session slow mode (VERDICT_r10 items 1/7),
-    measured in round 11: blocks are otherwise freed only when a JVM GC
-    lets the ContextCleaner notice dropped references, so storage
-    tenancy on the shared 8 GB local-mode heap is GC-timing-dependent —
-    a 42-query bench session accumulates ~1.5 GB when references
-    linger, and 3.2 GB of pinned storage reproducibly degrades
-    q_jaro_pairs' 1.17M-row sort+collect from 5.8 s warm to
-    7.7-14.1 s (the bimodal 17 s mode seen in BENCH_r09 and the r10
-    judge replay). Explicit unpersist removes the GC-timing dependence.
-    Returns the number of RDDs unpersisted.
+    Frees two kinds of blocks:
 
-    At cluster scale the same discipline holds per job: checkpoint
-    blocks are per-executor storage-memory tenants, and a pipeline
-    driver that submits many queries from one SparkSession should free
-    them as each stage's consumers finish.
+    - every persisted RDD, which covers ``persist()``/``cache()`` and
+      the ``localCheckpoint`` blocks the operators pin for one query;
+    - every broadcast, which covers Spark SQL broadcast-join relations
+      and the task binaries of finished stages. The removal reaches
+      every executor that holds a copy.
 
-    ``keep_ids`` (ADVICE r11): RDD ids to leave persisted. Callers that
-    must not disturb blocks pinned by OTHER live DataFrames in the
-    shared session (``testing.compare_query``) snapshot
-    ``persisted_rdd_ids`` before running their query and pass the
-    snapshot here, releasing only blocks created since — a caller
-    holding a localCheckpoint'ed DataFrame across the call keeps its
-    (lineage-truncated, hence otherwise unrecoverable) blocks.
+    Scope: with ``keep_ids=None`` everything goes. With a snapshot
+    from ``persisted_rdd_ids`` taken before the query, only what was
+    created since goes: RDDs whose id is not in the snapshot and
+    broadcasts with an id above its ``broadcast_max``. A caller that
+    holds a persisted or checkpointed DataFrame across the call keeps
+    its blocks.
+
+    Precondition: call it between queries, never while a job (or a
+    streaming query) runs, since removing a running stage's task binary
+    fails its tasks. A DataFrame collected again after the release
+    either recomputes its result or raises; it never returns other
+    rows.
+
+    ``blocking`` waits for the block removal to finish. Returns the
+    number of RDDs unpersisted.
     """
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
@@ -127,12 +150,19 @@ def release_persisted(
             continue
         jrdd.unpersist(blocking)
         n += 1
+    floor = -1 if keep_ids is None else keep_ids.broadcast_max
+    master = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    for bid in _broadcast_ids(spark):
+        if bid > floor:
+            master.removeBroadcast(bid, True, blocking)
     return n
 
 
-def persisted_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of currently persisted RDDs — snapshot for scoped release."""
-    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+def persisted_rdd_ids(spark: SparkSession) -> PersistedSnapshot:
+    """Snapshot for a scoped ``release_persisted``: the persisted RDD
+    ids, plus the largest broadcast id the session holds."""
+    rdd_ids = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+    return PersistedSnapshot(rdd_ids, max(_broadcast_ids(spark), default=-1))
 
 
 def storage_memory_used(spark: SparkSession) -> int:
@@ -193,18 +223,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass None and submit through spark-submit, which sets master.
+    ``master`` defaults to ``local[N]`` and ``shuffle_partitions`` to N,
+    where N is ``$SPARK_GRAFT_CPUS`` or else the CPUs this process may run
+    on. On a real cluster set ``SPARK_MASTER`` and submit through
+    spark-submit, which sets master.
     """
     ensure_vendored_protobuf()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = cpus
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

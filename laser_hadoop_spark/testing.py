@@ -179,13 +179,11 @@ class CompareResult:
 def compare_query(spark, con, name: str, fn, oracle: str | None, sf_dir: str) -> CompareResult:
     from laser_hadoop_spark.session import persisted_rdd_ids, release_persisted
 
-    # sweep hygiene (VERDICT_r10 item 7): the query's checkpoint blocks
-    # are dead once fetched — free them immediately so a 439-query
-    # sweep in one session can't accumulate GC-timing-dependent storage
-    # tenancy (the q_jaro_pairs slow-mode root cause, see
-    # session.release_persisted). Scoped to blocks created DURING this
-    # call (ADVICE r11): a caller holding its own persisted/checkpointed
-    # DataFrame across compare_query keeps its blocks.
+    # The query's checkpoint and broadcast blocks are dead once fetched:
+    # free them now, so a 440-query sweep in one session cannot pile up
+    # storage. Scoped to blocks created during this call: a caller
+    # holding its own persisted or checkpointed DataFrame across
+    # compare_query keeps its blocks.
     pre_ids = persisted_rdd_ids(spark)
     try:
         sdf = fn(spark, sf_dir)

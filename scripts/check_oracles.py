@@ -109,12 +109,9 @@ def main() -> int:
             }
             continue
         finally:
-            # session hygiene (VERDICT_r10 item 7): each query's
-            # checkpoint blocks are dead once compared — free them NOW
-            # instead of at the ContextCleaner's GC-timing mercy, so a
-            # 438-query sweep can't build up storage tenancy on the
-            # shared local-mode heap (the q_jaro_pairs slow-mode root
-            # cause, see session.release_persisted)
+            # each query's checkpoint and broadcast blocks are dead once
+            # compared: free them now, so a 440-query sweep cannot build
+            # up storage on the shared local-mode heap
             release_persisted(spark)
         dt = time.time() - t0
         results[name] = {

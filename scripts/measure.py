@@ -34,7 +34,7 @@ try:  # Spark 4: sessions hand out the classic DataFrame subclass —
 except ImportError:  # pragma: no cover - older Spark
     from pyspark.sql import DataFrame
 from laser_hadoop_spark import registry
-from laser_hadoop_spark.session import get_spark, release_persisted, storage_memory_used
+from laser_hadoop_spark.session import get_spark, release_persisted
 
 REPS = 3
 
@@ -62,11 +62,6 @@ def main() -> None:
         ensure_bucketed_facts(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
         print(json.dumps({"warehouse_error": str(exc)}), flush=True)
-
-    def _hygiene() -> None:
-        release_persisted(spark)
-        if storage_memory_used(spark) > 1_000_000_000:
-            spark.sparkContext._jvm.System.gc()
 
     def _job_count() -> int:
         # DAGScheduler.nextJobId is the total jobs ever submitted in
@@ -102,18 +97,18 @@ def main() -> None:
             for i, frag in enumerate(fragments):
                 fh.write(f"\n\n=== pre-checkpoint fragment {i} ===\n")
                 fh.write(frag)
-        _hygiene()
+        release_persisted(spark)
         # warmup (untimed) + job count for one noop execution
         j0 = _job_count()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         n_jobs = _job_count() - j0
-        _hygiene()
+        release_persisted(spark)
         best_noop = float("inf")
         for _ in range(REPS):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best_noop = min(best_noop, time.perf_counter() - t0)
-            _hygiene()
+            release_persisted(spark)
         total_noop += best_noop
         print(
             json.dumps(

@@ -624,6 +624,30 @@ def test_connected_components(spark):
     assert reps == {1, 20, 30}
 
 
+def _path_edges(spark, n: int):
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+
+
+def test_connected_components_path_within_max_iter(spark):
+    from laser_hadoop_spark.operators.graph import connected_components
+
+    comp = connected_components(_path_edges(spark, 10)).collect()
+    assert len(comp) == 10
+    assert {r["component"] for r in comp} == {0}
+    # an empty edge list observes a NULL change count: converged, not an error
+    assert connected_components(_path_edges(spark, 1)).collect() == []
+
+
+def test_connected_components_raises_instead_of_unconverged_labels(spark):
+    """A 30-node path needs about 30 rounds; with max_iter=25 the labels
+    are still changing, and the operator raises rather than return them
+    (they would split the path into 5 components)."""
+    from laser_hadoop_spark.operators.graph import connected_components
+
+    with pytest.raises(RuntimeError, match="did not converge.*round 25"):
+        connected_components(_path_edges(spark, 30)).collect()
+
+
 def test_dedup_clusters_on_real_pairs(spark, docs):
     from laser_hadoop_spark.operators.graph import dedup_clusters
 

@@ -8,7 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+import bench
 from laser_hadoop_spark import registry
+from laser_hadoop_spark.session import persisted_rdd_ids, storage_memory_used
 from laser_hadoop_spark.testing import compare_query, duckdb_connect
 
 SPECS = registry.specs()
@@ -22,10 +24,17 @@ def con(sf_dir):
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_matches_oracle(spark, con, sf_dir, name):
     spec = SPECS[name]
+    pre = persisted_rdd_ids(spark)
     res = compare_query(spark, con, name, spec.fn, spec.oracle, sf_dir)
     assert res.ok, f"{name}: {res.mismatches}"
     if spec.oracle is None:
         assert res.spark_rows > 0, f"{name}: rows-only query returned 0 rows"
+    # Session hygiene, query by query over the whole registry in one
+    # session: compare_query released everything the query persisted or
+    # broadcast, so storage never accumulates however late the JVM GCs.
+    assert persisted_rdd_ids(spark) <= pre, f"{name}: left persisted RDDs"
+    used_mb = storage_memory_used(spark) / 1e6
+    assert used_mb < bench.STORAGE_BAND_MB, f"{name}: storage at {used_mb:.0f} MB"
 
 
 def test_every_query_has_entry_contract():

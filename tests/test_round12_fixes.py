@@ -46,30 +46,6 @@ def test_payloadish_hash_suffix_family_applies_to_all_stems():
         assert hit(payload), payload
 
 
-def test_release_persisted_keep_ids_scopes_the_release(spark):
-    """ADVICE r11: compare_query snapshots persisted_rdd_ids before the
-    fetch and releases only blocks created during it — a caller's own
-    persisted DataFrame survives a compare_query call intact."""
-    from laser_hadoop_spark.session import persisted_rdd_ids, release_persisted
-
-    release_persisted(spark)
-    outer = spark.range(100_000).localCheckpoint(eager=True)
-    assert outer.count() == 100_000
-    pre = persisted_rdd_ids(spark)
-    assert pre  # the checkpoint pinned at least one RDD
-    inner = spark.range(50_000).localCheckpoint(eager=True)
-    assert inner.count() == 50_000
-    released = release_persisted(spark, keep_ids=pre)
-    assert released >= 1  # inner's blocks went
-    assert persisted_rdd_ids(spark) == pre  # outer's stayed
-    # outer remains fully actionable after the scoped release —
-    # localCheckpoint truncated its lineage, so this count would throw
-    # block-not-found if its blocks had been released
-    assert outer.count() == 100_000
-    release_persisted(spark)
-    assert persisted_rdd_ids(spark) == set()
-
-
 def test_procrustes_kdim_label_groups_fittable(spark):
     """ADVICE r11: q_procrustes_kdim's oracle emits one row per
     embeddings row, but grouped_procrustes drops label groups with
