@@ -45,21 +45,30 @@ def fingerprint_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("__fp", fp).dropDuplicates(["__fp"]).drop("__fp")
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingle array for a text column.
+def _ngram_fold(t: Column, n: int, combine) -> Column:
+    """Distinct n-grams of the array ``t``, each the ``combine`` fold of
+    n consecutive elements.
 
-    Built as a zip_with fold over n shifted views of the token array
-    (slice is O(1) per view; each output element is one pass) — ~6x
-    faster than indexing element_at(t, i+j) inside a transform over a
-    sequence, which re-walks the array per index.
+    Built as a zip_with fold over n shifted views of the array (slice is
+    O(1) per view; each output element is one pass) — ~6x faster than
+    indexing element_at(t, i+j) inside a transform over a sequence,
+    which re-walks the array per index. ``t`` appears n + 1 times in
+    the result, so pass a column reference, not an expression to be
+    recomputed per appearance.
     """
-    t = F.split(F.col(text_col), " ")
     m = F.greatest(F.size(t) - (n - 1), F.lit(0))
     shifted = [F.slice(t, j + 1, m) for j in range(n)]
     acc = shifted[0]
     for nxt in shifted[1:]:
-        acc = F.zip_with(acc, nxt, lambda a, b: F.concat_ws(" ", a, b))
+        acc = F.zip_with(acc, nxt, combine)
     return F.array_distinct(acc)
+
+
+def word_shingles(text_col: str, n: int = 3) -> Column:
+    """Distinct word n-gram shingle array for a text column."""
+    return _ngram_fold(
+        F.split(F.col(text_col), " "), n, lambda a, b: F.concat_ws(" ", a, b)
+    )
 
 
 def _rot_xor(a: Column, b: Column) -> Column:
@@ -74,24 +83,65 @@ def _rot_xor(a: Column, b: Column) -> Column:
     return rot.bitwiseXOR(b)
 
 
+def _token_hashes(text_col: str) -> Column:
+    return F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
+
+
 def word_shingle_hashes(text_col: str, n: int = 3) -> Column:
     """Distinct 64-bit hashes of word n-grams, no n-gram strings built.
 
     Each token is xxhash64'd ONCE; the n shifted hash arrays combine
-    with rotate-xor (zip_with over slice views, same shape as
-    word_shingles). Skipping the concat_ws string materialization per
-    shingle is ~20% faster end-to-end on the n-gram self-join at sf0.1
-    — and the join key was already a hash, so downstream semantics are
-    unchanged (hash identity only needs to be consistent within the
-    engine).
+    with rotate-xor (the word_shingles fold). Skipping the concat_ws
+    string materialization per shingle is ~20% faster end-to-end on the
+    n-gram self-join at sf0.1 — and the join key was already a hash, so
+    downstream semantics are unchanged (hash identity only needs to be
+    consistent within the engine).
+
+    As one column expression the token-hash array is inlined at each of
+    its n + 1 uses, and their distinct lambda ids keep subexpression
+    elimination from sharing it; to explode the shingles of a relation
+    use shingle_hash_rows, which projects the array once.
     """
-    t = F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
-    m = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    shifted = [F.slice(t, j + 1, m) for j in range(n)]
-    acc = shifted[0]
-    for nxt in shifted[1:]:
-        acc = F.zip_with(acc, nxt, _rot_xor)
-    return F.array_distinct(acc)
+    return _ngram_fold(_token_hashes(text_col), n, _rot_xor)
+
+
+def shingle_hash_rows(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """One row per distinct word n-gram hash of each document:
+    ``(doc, n, shingle)``, where ``n`` is the document's count of
+    distinct shingles. The rows equal
+    ``explode(word_shingle_hashes(text_col, n))`` with its size; a NULL
+    or short document yields none.
+
+    Two plan shapes keep the hashing to one pass, above any exchange
+    under ``df``:
+
+    - the token-hash array is its own projected column, and the
+      shingles are built from that column. CollapseProject leaves a
+      non-trivial projection in place when the next projection reads it
+      more than once, so each token is hashed once per row instead of
+      once per use of the array.
+    - the explode is ``explode_outer`` followed by
+      ``isNotNull(shingle)``. No shingle hash is NULL, so the rows are
+      the same as a plain explode's. A plain explode makes Catalyst's
+      InferFiltersFromGenerate add ``size(sh) > 0 AND isnotnull(sh)``,
+      and that filter is pushed below projections and repartitions
+      alike. Below ``tables.spread_scan``'s exchange it computes every
+      shingle hash in the one-task scan stage, only to throw the array
+      away and hash again above the exchange.
+    """
+    tokens = df.select(
+        F.col(id_col).alias("doc"), _token_hashes(text_col).alias("__t")
+    )
+    sh = tokens.select("doc", _ngram_fold(F.col("__t"), n, _rot_xor).alias("__sh"))
+    # Under ANSI size() is nullable, and a join on n would infer an
+    # isnotnull(n) that is pushed to the scan just the same; the
+    # coalesce (never taken: NULL arrays leave no rows) makes n non-null.
+    n_sh = F.coalesce(F.size("__sh"), F.lit(0))
+    return sh.select(
+        "doc", n_sh.alias("n"), F.explode_outer("__sh").alias("shingle")
+    ).where(F.col("shingle").isNotNull())
 
 
 def ngram_jaccard_pairs(
@@ -109,7 +159,11 @@ def ngram_jaccard_pairs(
     (xxhash64 — an 8-byte shuffle key instead of the n-gram string). The
     per-doc shingle count is computed from the array BEFORE exploding
     and carried through the join, so no separate sizes table and no
-    post-join re-joins: one self-join + one aggregate total.
+    post-join re-joins: one self-join + one aggregate total. The
+    shingle rows come from shingle_hash_rows above spread_scan's
+    exchange, so on a one-task scan every token is hashed once, on all
+    cores, and the scan stage only reads (measured at sf0.1 on 4 cores:
+    scan stage 0.37-0.47 s -> 0.03 s, PERF_NOTES 2026-10-18).
 
     At scale pass max_shingle_df to drop ubiquitous shingles (stopword
     n-grams) before the self-join — a shingle shared by m docs
@@ -122,19 +176,14 @@ def ngram_jaccard_pairs(
     # 100 TB the shingle table could never broadcast anyway.
     # Raw rows are repartitioned BEFORE the shingle/hash projection: a
     # single sub-split input file would otherwise serialize all the
-    # hashing into one scan task (PERF_NOTES round 4b). Round 13:
-    # spread_scan — keyed hash partitioning (no sortBeforeRepartition
-    # pass) and a guarded no-op once the scan has >= cores splits.
+    # hashing into one scan task (PERF_NOTES round 4b). spread_scan is
+    # keyed hash partitioning and a guarded no-op once the scan has
+    # >= cores splits; shingle_hash_rows keeps every hash above it.
     from laser_hadoop_spark.tables import spread_scan
 
-    shingles = (
-        spread_scan(df.select(id_col, text_col), id_col)
-        .select(
-            F.col(id_col).alias("doc"), word_shingle_hashes(text_col, n).alias("sh")
-        )
-        .select("doc", F.size("sh").alias("n"), F.explode("sh").alias("shingle"))
-        .hint("shuffle_hash")
-    )
+    shingles = shingle_hash_rows(
+        spread_scan(df.select(id_col, text_col), id_col), id_col, text_col, n
+    ).hint("shuffle_hash")
     if max_shingle_df is not None:
         rare = (
             shingles.groupBy("shingle")
@@ -395,17 +444,19 @@ def contamination_overlap(
     The decontamination pass every pretraining pipeline runs before
     training. Same equi-join-on-shingle-hash shape as
     ngram_jaccard_pairs, but across two corpora and one-directional
-    (overlap is measured against the corpus doc's own shingle count).
+    (overlap is measured against the corpus doc's own shingle count);
+    both sides' shingle rows come from shingle_hash_rows.
     Output: (doc_id, n_shingles, n_contaminated, overlap) per flagged
     corpus doc. The benchmark side is typically small -> its shingle
     set broadcasts; the corpus side never shuffles its text, only
     8-byte hashes.
     """
-    c = corpus.select(
-        F.col(id_col).alias("doc"), word_shingle_hashes(text_col, n).alias("sh")
-    ).select("doc", F.size("sh").alias("n_shingles"), F.explode("sh").alias("h"))
+    c = shingle_hash_rows(corpus, id_col, text_col, n).select(
+        "doc", F.col("n").alias("n_shingles"), F.col("shingle").alias("h")
+    )
     b = (
-        benchmark.select(F.explode(word_shingle_hashes(text_col, n)).alias("h"))
+        shingle_hash_rows(benchmark, id_col, text_col, n)
+        .select(F.col("shingle").alias("h"))
         .distinct()
     )
     hits = (

@@ -17,11 +17,11 @@ q_curation_pipeline oracle restates them in DuckDB); stage 4's hash
 family is engine-specific, so it stays pytest-verified (rows-only
 territory), mirroring how q_dedup_simhash is checked.
 
-Scale notes: stage 1 shuffles 16-byte digests; stages 2-3 are
-scan-local (no shuffle, fused into one WholeStageCodegen pass over the
-scan); stage 4 is the banded SimHash equi-join (operators/dedup) whose
-candidate count is bounded by band collisions. At 100 TB the plan's
-only full-data shuffle is the fingerprint dedup.
+Scale notes: stage 1 shuffles 16-byte digests; stages 2-3 add no
+shuffle (they fuse into the stage after stage 1's exchange, or into the
+scan when stage 1 is skipped); stage 4 is the banded SimHash equi-join
+(operators/dedup) whose candidate count is bounded by band collisions.
+At 100 TB the plan's only full-data shuffle is the fingerprint dedup.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from laser_hadoop_spark.operators import text as T
 from laser_hadoop_spark.operators.dedup import simhash_pairs
+from laser_hadoop_spark.session import adaptive_kernel_partitions
 
 
 @dataclass
@@ -71,7 +72,13 @@ def curation_stage_prefixes(
     - "window" (default): one scan, min(id) window over the fingerprint
       — shuffles full document bodies once. Measured faster at bench
       scale (1.41s vs 1.56s at sf0.1): a single scan beats the join
-      form's double scan when IO dominates.
+      form's double scan when IO dominates. The shuffle is a
+      repartition on the fingerprint to
+      ``session.adaptive_kernel_partitions`` partitions, so the window
+      and the stage 2-3 filters above it run on every core instead of
+      in the single partition AQE coalesces a small shuffle into
+      (sf0.1 on 4 cores: one task of 0.98 s -> four tasks, PERF_NOTES
+      2026-10-18); the width still grows with bytes at corpus scale.
     - "none": skip stage 1 entirely (the caller dedups; see
       plans/incremental.py's split counters).
     - "semi_join": groupBy(fp).min(id) + left-semi join — scans twice
@@ -89,9 +96,12 @@ def curation_stage_prefixes(
             keepers, on=["__fp", id_col], how="left_semi"
         ).drop("__fp")
     elif dedup_strategy == "window":
+        # AQE leaves a repartition's width alone, and the window's
+        # clustering on __fp accepts it with no second exchange.
+        spread = withfp.repartition(adaptive_kernel_partitions(withfp), "__fp")
         keep = F.col(id_col) == F.min(id_col).over(Window.partitionBy("__fp"))
         deduped = (
-            withfp.withColumn("__keep", keep).where("__keep").drop("__fp", "__keep")
+            spread.withColumn("__keep", keep).where("__keep").drop("__fp", "__keep")
         )
     elif dedup_strategy == "none":
         # caller handles dedup itself (e.g. plans/incremental.py, which

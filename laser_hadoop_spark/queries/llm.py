@@ -872,7 +872,8 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     The SQL-expressible spine of the training-data pipeline; the
     SimHash near-dup stage (stage 4) is engine-specific and covered by
     pytest (tests/test_pipeline.py) instead. One full-data shuffle
-    (the 16-byte fingerprint dedup); the filters fuse into the scan.
+    (the fingerprint dedup); the filters fuse into the stage above it,
+    which runs one task per core.
     """
     from laser_hadoop_spark.operators.text import token_count_ws
     from laser_hadoop_spark.plans.curation import curation_plan

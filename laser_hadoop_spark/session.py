@@ -112,6 +112,12 @@ def _broadcast_ids(spark: SparkSession) -> set[int]:
     return {int(i) for i in re.findall(r"\(broadcast_(\d+)[,_]", listing)}
 
 
+def _rdd_ids(rdds) -> set[int]:
+    """Ids of a ``SparkContext.getPersistentRDDs`` map, listed in one
+    py4j call; walking the Java map view costs round trips per entry."""
+    return {int(i) for i in rdds.keys().mkString(",").split(",") if i}
+
+
 def release_persisted(
     spark: SparkSession,
     blocking: bool = False,
@@ -143,25 +149,25 @@ def release_persisted(
     ``blocking`` waits for the block removal to finish. Returns the
     number of RDDs unpersisted.
     """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for jid, jrdd in jmap.items():
-        if keep_ids is not None and int(jid) in keep_ids:
-            continue
-        jrdd.unpersist(blocking)
-        n += 1
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    ids = _rdd_ids(rdds) - (keep_ids or set())
+    for rid in ids:
+        # RDD.unpersist, not SparkContext.unpersistRDD: it also resets the
+        # RDD's storage level, so a cached DataFrame collected again does
+        # not re-store blocks that no longer show as persisted.
+        rdds.apply(rid).unpersist(blocking)
     floor = -1 if keep_ids is None else keep_ids.broadcast_max
     master = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
     for bid in _broadcast_ids(spark):
         if bid > floor:
             master.removeBroadcast(bid, True, blocking)
-    return n
+    return len(ids)
 
 
 def persisted_rdd_ids(spark: SparkSession) -> PersistedSnapshot:
     """Snapshot for a scoped ``release_persisted``: the persisted RDD
     ids, plus the largest broadcast id the session holds."""
-    rdd_ids = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+    rdd_ids = _rdd_ids(spark.sparkContext._jsc.sc().getPersistentRDDs())
     return PersistedSnapshot(rdd_ids, max(_broadcast_ids(spark), default=-1))
 
 
@@ -174,6 +180,11 @@ def storage_memory_used(spark: SparkSession) -> int:
     multi-query session."""
     env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
     return int(env.blockManager().memoryStore().memoryUsed())
+
+
+# Ceiling of adaptive_kernel_partitions, in partitions per core. At the
+# 64 MB default target that is 64 GB of kernel input per core.
+_MAX_TASKS_PER_CORE = 1024
 
 
 def adaptive_kernel_partitions(
@@ -202,7 +213,11 @@ def adaptive_kernel_partitions(
 
     An unknown or absurd estimate (<=0, or the optimizer's
     Long.MaxValue default for unsized relations) falls back to the
-    defaultParallelism floor rather than exploding the task count.
+    defaultParallelism floor rather than exploding the task count, and
+    no estimate yields more than ``_MAX_TASKS_PER_CORE`` partitions per
+    core: Catalyst's estimates for joins and generators can be inflated
+    by orders of magnitude, and such an estimate then costs at most that
+    many waves of tasks, not millions of tasks.
     """
     sc = df.sparkSession.sparkContext
     dp = sc.defaultParallelism
@@ -212,7 +227,8 @@ def adaptive_kernel_partitions(
         return dp
     if est <= 0 or est >= (1 << 50):
         return dp
-    return max(dp, int(est * multiplier) // (target_mb << 20))
+    n = int(est * multiplier) // (target_mb << 20)
+    return max(dp, min(n, dp * _MAX_TASKS_PER_CORE))
 
 
 def get_spark(

@@ -122,6 +122,19 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     on ``key_cols`` (deterministic under task retry, no
     sortBeforeRepartition pass, and a unique id key spreads evenly) —
     never round-robin.
+
+    Catalyst pushes filters through the repartition, so a filter on a
+    computed column lands back in the one-task scan stage. The usual
+    source is a generator: for ``explode(arr)`` InferFiltersFromGenerate
+    adds ``size(arr) > 0 AND isnotnull(arr)``, and when ``arr`` is
+    computed from the scanned columns that filter computes the whole
+    array below the exchange, only to discard it and compute it again
+    above. Callers that explode a computed array over this relation use
+    ``explode_outer`` followed by an ``isNotNull`` filter on the
+    generated column, which infers nothing and yields the same rows
+    when no element is NULL (operators/dedup.shingle_hash_rows). The
+    plan audit keeps the stage under every caller's exchange to the
+    scan and the key's null filter.
     """
     sc = df.sparkSession.sparkContext
     dp = sc.defaultParallelism

@@ -91,6 +91,33 @@ def test_ngram_jaccard_pairs_operator(spark, docs):
     assert capped.count() <= len(pairs) + 5
 
 
+def test_shingle_hash_rows_equal_exploded_hash_array(spark):
+    """shingle_hash_rows (explode_outer + not-null, token hashes
+    projected once) yields exactly the rows of a plain explode over
+    word_shingle_hashes, with the same per-doc shingle count."""
+    df = spark.createDataFrame(
+        [
+            (1, None),  # NULL text
+            (2, ""),  # empty text
+            (3, "two words"),  # fewer tokens than n = 3
+            (4, "a  b c  d"),  # double spaces make empty tokens
+            (5, "x y z x y z x y z"),  # repeated n-grams
+            (6, "the quick brown fox jumps"),
+        ],
+        "doc_id long, text string",
+    )
+    for n in (2, 3):
+        sh = dedup.word_shingle_hashes("text", n)
+        want = df.select(
+            F.col("doc_id").alias("doc"),
+            F.size(sh).alias("n"),
+            F.explode(sh).alias("shingle"),
+        ).collect()
+        got = dedup.shingle_hash_rows(df, "doc_id", "text", n).collect()
+        assert sorted(got) == sorted(want), n
+        assert {r["doc"] for r in got} == {3, 4, 5, 6} - ({3} if n == 3 else set())
+
+
 def test_minhash_recall_vs_exact(spark, docs):
     exact = {
         (r["doc_a"], r["doc_b"])

@@ -214,6 +214,36 @@ def test_curation_dedup_strategies_agree(spark, sf_dir):
     assert b.exceptAll(a).count() == 0
 
 
+def test_curation_filters_run_on_every_core(spark, sf_dir):
+    """The stage after the fingerprint shuffle (the dedup window and
+    every quality and language filter) runs as one task per core: its
+    exchange is a fixed-width repartition that AQE does not coalesce.
+    The rows are the semi_join strategy's, which has no such stage."""
+    from laser_hadoop_spark.plans.curation import curation_plan
+    from laser_hadoop_spark.tables import table
+
+    sc = spark.sparkContext
+    d = table(spark, sf_dir, "documents")
+    sc.setJobGroup("curation-width", "curation-width")
+    try:
+        got = curation_plan(d).collect()
+    finally:
+        sc.setJobGroup("", "")
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stages = {
+        sid: store.lastStageAttempt(sid)
+        for j in sc.statusTracker().getJobIdsForGroup("curation-width")
+        for sid in sc.statusTracker().getJobInfo(j).stageIds
+    }
+    readers = [st for st in stages.values() if st.shuffleReadBytes() > 0]
+    assert len(readers) == 1, len(readers)
+    assert readers[0].numTasks() == sc.defaultParallelism > 1
+    want = curation_plan(d, dedup_strategy="semi_join").collect()
+    assert sorted(got) == sorted(want)
+
+
 def test_incremental_ingest_dedup_and_idempotence(spark, tmp_path):
     """plans/incremental.py: batch 2 dedups against batch 1's digest
     store (never the corpus itself), within-batch dups collapse to the

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from laser_hadoop_spark import registry
 
 
@@ -1401,3 +1403,112 @@ def test_pair_shape_detector_separates_known_shapes(spark, sf_dir):
     assert looks_pair_shaped(pair_plan), pair_plan
     agg_plan = _plan(registry.get("q_grouped_counts").fn(spark, sf_dir))
     assert not looks_pair_shaped(agg_plan), agg_plan
+
+
+def _code_names(code) -> set[str]:
+    """Global, attribute and imported names a code object (and every
+    function or lambda nested in it) refers to."""
+    names = set(code.co_names)
+    for const in code.co_consts:
+        if hasattr(const, "co_names"):
+            names |= _code_names(const)
+    return names
+
+
+def _spread_scan_queries() -> list[str]:
+    """Registry queries that call tables.spread_scan, directly or through
+    package functions that do, found by name from the code objects. A
+    name shared by two functions only widens the set."""
+    import inspect
+    import pkgutil
+    from importlib import import_module
+
+    import laser_hadoop_spark
+
+    funcs = []
+    for mod in pkgutil.walk_packages(laser_hadoop_spark.__path__, "laser_hadoop_spark."):
+        m = import_module(mod.name)
+        funcs += [f for _, f in inspect.getmembers(m, inspect.isfunction)
+                  if f.__module__ == m.__name__]
+    callers = {"spread_scan"}
+    grew = True
+    while grew:
+        found = {f.__name__ for f in funcs if _code_names(f.__code__) & callers}
+        grew = not found <= callers
+        callers |= found
+    return sorted(
+        name for name, spec in registry.specs().items()
+        if _code_names(spec.fn.__code__) & callers
+    )
+
+
+def _plan_nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, node text) per line of a physical plan tree string."""
+    out = []
+    for line in plan.splitlines():
+        m = re.match(r"[\s:+|-]*", line)
+        if line[m.end():]:
+            out.append((m.end(), line[m.end():]))
+    return out
+
+
+def _scan_stages_under_repartitions(plan: str) -> list[tuple[str, list[str]]]:
+    """For every REPARTITION_BY_NUM exchange whose map stage reads a
+    file scan: (the exchange's key, the stage's nodes down to the scan),
+    stopping at nested exchanges, which start other stages."""
+    nodes = _plan_nodes(plan)
+    out = []
+    for i, (depth, text) in enumerate(nodes):
+        if not (text.startswith("Exchange hashpartitioning(") and "REPARTITION_BY_NUM" in text):
+            continue
+        key = text[len("Exchange hashpartitioning("):].split(",")[0]
+        stage, cut = [], None
+        for d, t in nodes[i + 1:]:
+            if d <= depth:
+                break
+            if cut is not None and d > cut:
+                continue
+            cut = None
+            if "Exchange" in t.split(" ")[0]:
+                cut = d
+                continue
+            stage.append(t)
+        if any(t.startswith("FileScan") for t in stage):
+            out.append((key, stage))
+    return out
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_spread_scan_stage_holds_only_the_scan(spark, sf_dir, ansi):
+    """tables.spread_scan exists to move a scan's compute above its
+    exchange. Catalyst can undo that: a filter it infers from a later
+    generator (explode's size > 0), or under ANSI from a join on a
+    nullable size(), is pushed through the repartition into the
+    one-task scan stage, which then computes every token hash only to
+    throw it away. For each registry query that calls spread_scan, the
+    stage under a scan-side REPARTITION_BY_NUM exchange holds the scan
+    and at most the key's null filter, with ANSI off (ENGINE_CONF) and
+    on (Spark 4's default, which a driver's vanilla session runs)."""
+    queries = _spread_scan_queries()
+    assert {"q_dedup_survivors", "q_dup_spans", "q_simhash_exact"} <= set(queries)
+    allowed = re.compile(r"(FileScan |ColumnarToRow$|Project \[[\w#, ]*\]$)")
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        plans = {
+            name: _plan_through_ckpts(spark, sf_dir, registry.get(name).fn)
+            for name in queries
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    for name, plan in plans.items():
+        stages = _scan_stages_under_repartitions(plan)
+        assert stages, name
+        for key, stage in stages:
+            for node in stage:
+                if node.startswith("Filter "):
+                    assert node == f"Filter isnotnull({key})", (name, node)
+                else:
+                    assert allowed.match(node), (name, node)
+                for fn in ("xxhash64(", "transform(", "split(", "zip_with("):
+                    assert fn not in node, (name, fn, node)

@@ -165,3 +165,46 @@ def test_get_spark_sizes_the_session_to_the_host(monkeypatch):
     session.get_spark()
     assert builder.conf["master"] == "local[3]"
     assert builder.conf["spark.sql.shuffle.partitions"] == "3"
+
+
+def test_cached_frame_collected_after_release_stores_nothing(spark):
+    """The release resets each RDD's storage level, so a cached DataFrame
+    collected again recomputes its rows without re-storing blocks that
+    no later release could see."""
+    release_persisted(spark, blocking=True)
+    base = session.storage_memory_used(spark)
+    df = spark.range(100_000).selectExpr("sha2(cast(id AS string), 256) AS h").cache()
+    assert df.count() == 100_000
+    assert session.storage_memory_used(spark) - base > 2_000_000
+    assert release_persisted(spark, blocking=True) >= 1
+    assert df.count() == 100_000
+    assert _persistent_count(spark) == 0
+    release_persisted(spark, blocking=True)
+    assert session.storage_memory_used(spark) - base < 1_000_000
+
+
+def _sized_frame(est_bytes: int, cores: int = 4):
+    """Stands in for a DataFrame whose optimized plan estimates
+    ``est_bytes``, on a session with ``cores`` default parallelism."""
+    stats = SimpleNamespace(sizeInBytes=lambda: est_bytes)
+    plan = SimpleNamespace(stats=lambda: stats)
+    qe = SimpleNamespace(optimizedPlan=lambda: plan)
+    return SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=cores)
+        ),
+        _jdf=SimpleNamespace(queryExecution=lambda: qe),
+    )
+
+
+def test_adaptive_kernel_partitions_is_capped():
+    akp = session.adaptive_kernel_partitions
+    assert akp(_sized_frame(1 << 20)) == 4  # small input: the core floor
+    assert akp(_sized_frame(10 << 30)) == 160  # 10 GB / 64 MB
+    assert akp(_sized_frame(10 << 30), multiplier=2.0) == 320
+    # an estimate just under the 2^50 sanity bound asked for 16M tasks
+    cap = 4 * session._MAX_TASKS_PER_CORE
+    assert akp(_sized_frame((1 << 50) - 1)) == cap
+    assert akp(_sized_frame(1 << 40), multiplier=24.0) == cap
+    assert akp(_sized_frame(1 << 50)) == 4  # the unsized-relation default
+    assert akp(_sized_frame(0)) == 4
