@@ -1488,7 +1488,7 @@ def test_spread_scan_stage_holds_only_the_scan(spark, sf_dir, ansi):
     throw it away. For each registry query that calls spread_scan, the
     stage under a scan-side REPARTITION_BY_NUM exchange holds the scan
     and at most the key's null filter, with ANSI off (ENGINE_CONF) and
-    on (Spark 4's default, which a driver's vanilla session runs)."""
+    on (Spark 4's default, which a vanilla SparkSession runs)."""
     queries = _spread_scan_queries()
     assert {"q_dedup_survivors", "q_dup_spans", "q_simhash_exact"} <= set(queries)
     allowed = re.compile(r"(FileScan |ColumnarToRow$|Project \[[\w#, ]*\]$)")
