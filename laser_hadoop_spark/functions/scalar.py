@@ -33,16 +33,6 @@ from pyspark.sql import functions as F
 _MICROS = 1_000_000
 
 
-def dec_exact(expr: Column, scale: int = 6) -> Column:
-    """Snap a near-fixed-point double expression to its exact decimal."""
-    return expr.cast(f"decimal(18,{scale})")
-
-
-def dec_exact_double(expr: Column, scale: int = 6) -> Column:
-    """Exact fixed-point value of a double product, back as double."""
-    return dec_exact(expr, scale).cast("double")
-
-
 def micro_units(expr: Column) -> Column:
     """Exact micro-unit (1e-6) integer of a fixed-point double expression.
 

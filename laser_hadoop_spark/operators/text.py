@@ -28,13 +28,6 @@ def token_count_ws(text_col: str = "text") -> Column:
     return F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
 
 
-def token_count_bpe_ish(text_col: str = "text") -> Column:
-    """BPE-ish regex token count: letter runs, digit runs, punctuation."""
-    return F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0)
-    )
-
-
 def marker_ratio(
     text_col: str = "text",
     markers: tuple[str, ...] = DEFAULT_STOPWORDS,
@@ -112,18 +105,6 @@ def rolling_hashes(text_col: str = "text", window: int = 8) -> Column:
     return F.transform(
         F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1))),
         lambda i: F.xxhash64(F.substring(t, i, window)),
-    )
-
-
-def term_stats(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Vocabulary statistics: (token, n_occurrences, n_docs)."""
-    return (
-        df.select(F.col(id_col), F.explode(words(text_col)).alias("token"))
-        .groupBy("token")
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.countDistinct(id_col).alias("n_docs"),
-        )
     )
 
 

@@ -2,83 +2,17 @@
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+
 _LOADED = False
 
 
 def load_all() -> None:
-    """Import all query modules so their @register decorators fire."""
+    """Import every module of this package so their @register decorators fire."""
     global _LOADED
     if _LOADED:
         return
-    from laser_hadoop_spark.queries import (  # noqa: F401
-        aggregates,
-        events_analytics,
-        extras,
-        joins,
-        llm,
-        round4,
-        round4b,
-        round4c,
-        round4d,
-        round4e,
-        round4f,
-        round4g,
-        round4h,
-        round4i,
-        round4j,
-        round4k,
-        round4l,
-        round4m,
-        round4n,
-        round4o,
-        round4p,
-        round4q,
-        round4r,
-        round4s,
-        round4t,
-        round4u,
-        round4v,
-        round5,
-        round5b,
-        round5c,
-        round5d,
-        round5e,
-        round5f,
-        round5g,
-        round5h,
-        round5i,
-        round5j,
-        round5k,
-        round5l,
-        round5m,
-        round5n,
-        round5o,
-        round5p,
-        round5q,
-        round5r,
-        round5s,
-        round5t,
-        round5u,
-        round5v,
-        round5w,
-        round5aa,
-        round5ab,
-        round5x,
-        round5y,
-        round5z,
-        round6a,
-        round6b,
-        round6c,
-        round6d,
-        round6e,
-        round6f,
-        scalars,
-        scans,
-        setops,
-        streaming_batch,
-        tpch,
-        udfs,
-        windows,
-    )
-
+    for info in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{info.name}")
     _LOADED = True

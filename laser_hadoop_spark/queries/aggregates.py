@@ -1,4 +1,4 @@
-"""Aggregation queries (SURVEY.md §2.4).
+"""Aggregation queries (SURVEY.md §2.4) and the sort/top-k surface (§2.6).
 
 The reference's result channel is Hadoop counters: global counts,
 conditional counts, per-batch grouped counts, partial->final merge at
@@ -6,16 +6,20 @@ the driver, and TreeSet-based distinct cardinality
 (LASERInputCheckMapper.java:176-177,239-251; TRACEInputCheckMapper.java:267-269;
 LASERInputValidator.java:142-145). Each becomes a plain Spark aggregate
 with automatic partial/final HashAggregate.
+
+The closure adds grouping sets, argmin/argmax, modes, histograms
+(fixed-width, equi-depth, log-scale, 2D), approximate and pruned
+quantiles, top-k with ties and re-aggregatable partial states.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from laser_hadoop_spark.functions.scalar import money_sum
 from laser_hadoop_spark.registry import register
-from laser_hadoop_spark.tables import table
+from laser_hadoop_spark.tables import register_views, table
 
 
 @register(
@@ -595,4 +599,469 @@ def q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("m", 4).alias("median_price"),
             "mad",
         )
+    )
+
+
+@register(
+    "q_grouping_sets",
+    oracle="""
+    SELECT o_orderstatus, o_orderpriority,
+           GROUPING(o_orderstatus) + 2 * GROUPING(o_orderpriority) AS gid,
+           COUNT(*) AS n_orders,
+           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 4) AS DOUBLE)
+               AS sum_price
+    FROM orders
+    GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
+    """,
+)
+def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A9: explicit GROUPING SETS (finer than rollup/cube) + GROUPING() ids.
+
+    Multi-level report closure of the reference's per-batch counters
+    (TRACEInputCheckMapper.java:267-269) — one Expand + one aggregate,
+    not three scans. gid disambiguates real NULLs from subtotal rows.
+    """
+    register_views(spark, sf_dir, names=("orders",))
+    return spark.sql(
+        """
+        SELECT o_orderstatus, o_orderpriority,
+               GROUPING(o_orderstatus) + 2 * GROUPING(o_orderpriority) AS gid,
+               COUNT(*) AS n_orders,
+               ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 4)
+                   AS sum_price
+        FROM orders
+        GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
+        """
+    )
+
+
+@register(
+    "q_min_max_by",
+    oracle="""
+    SELECT o_custkey,
+           arg_max(o_orderkey, o_totalprice + o_orderkey * 1e-9) AS best_order,
+           arg_min(o_orderkey, o_totalprice + o_orderkey * 1e-9) AS worst_order,
+           ROUND(MAX(o_totalprice), 4) AS best_price
+    FROM orders
+    GROUP BY o_custkey
+    """,
+)
+def q_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A-closure: argmin/argmax aggregates (max_by/min_by).
+
+    Selecting the row *at* an extreme without a join-back — one partial
+    aggregate instead of the agg+self-join the reference pattern would
+    need. Price ties are broken deterministically by folding the unique
+    o_orderkey into the comparison value at 1e-9 weight (exact in
+    doubles at these magnitudes: price ~1e5, ulp ~1e-11 < 1e-9·key).
+    """
+    o = table(spark, sf_dir, "orders")
+    tiebroken = F.col("o_totalprice") + F.col("o_orderkey") * F.lit(1e-9)
+    return o.groupBy("o_custkey").agg(
+        F.max_by("o_orderkey", tiebroken).alias("best_order"),
+        F.min_by("o_orderkey", tiebroken).alias("worst_order"),
+        F.round(F.max("o_totalprice"), 4).alias("best_price"),
+    )
+
+
+@register(
+    "q_histogram",
+    oracle="""
+    SELECT CAST(FLOOR(o_totalprice / 25000) AS BIGINT) AS bin,
+           COUNT(*) AS n,
+           ROUND(MIN(o_totalprice), 4) AS lo_price,
+           ROUND(MAX(o_totalprice), 4) AS hi_price
+    FROM orders
+    GROUP BY 1
+    """,
+)
+def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-width histogram binning (floor-divide keys).
+
+    One partial-aggregated scan; bin boundaries are IEEE-identical
+    across engines because both compute the same double divide+floor.
+    The generalization of the reference's chunk-id math
+    (rowIndex / chunkSize, LASERInputCheckMapper.java:155-161) from row
+    position to value domain.
+    """
+    o = table(spark, sf_dir, "orders")
+    return (
+        o.groupBy(
+            F.floor(F.col("o_totalprice") / 25000).cast("bigint").alias("bin")
+        ).agg(
+            F.count("*").alias("n"),
+            F.round(F.min("o_totalprice"), 4).alias("lo_price"),
+            F.round(F.max("o_totalprice"), 4).alias("hi_price"),
+        )
+    )
+
+
+@register("q_approx_percentile", oracle=None)  # sketch-based: rows-only
+def q_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A8 companion: approx_percentile (KLL-style sketch) per group.
+
+    The 100 TB path for quantiles: a mergeable bounded-size sketch per
+    partition, one tiny exchange — vs q_percentile's exact sort-based
+    form. Accuracy vs the exact interpolated percentile is
+    pytest-verified (tests/test_operators.py); sketch estimates are
+    engine-specific, hence rows-only here. Output is posexploded to one
+    row per (priority, quantile) — scalar columns only, because the
+    driver's canonicalizer sorts cells and array cells are unhashable.
+    """
+    o = table(spark, sf_dir, "orders")
+    agg = o.groupBy("o_orderpriority").agg(
+        F.percentile_approx("o_totalprice", [0.5, 0.9, 0.99], 10_000).alias(
+            "approx_pcts"
+        ),
+        F.count("*").alias("n"),
+    )
+    return agg.select(
+        "o_orderpriority",
+        "n",
+        F.posexplode("approx_pcts").alias("q_idx", "approx_value"),
+    )
+
+
+@register(
+    "q_mode_per_group",
+    oracle="""
+    WITH counts AS (
+        SELECT c.c_mktsegment AS segment, o.o_orderpriority AS priority,
+               COUNT(*) AS n_orders
+        FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        GROUP BY c.c_mktsegment, o.o_orderpriority
+    ),
+    ranked AS (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY segment
+                                     ORDER BY n_orders DESC, priority) AS rn
+        FROM counts
+    )
+    SELECT segment, priority AS mode_priority, n_orders
+    FROM ranked WHERE rn = 1
+    """,
+)
+def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X107: modal value per group (MODE() aggregate).
+
+    The most frequent order priority per market segment — the mode
+    aggregate the suite lacked (min/max/argmin/argmax landed as
+    X20). Deterministic tiebreak: highest count, then smallest
+    priority string. Two-phase: one (segment, priority) count
+    aggregate (partial map-side combine — the 100 TB shape), then a
+    row_number window over the tiny 25-row aggregate. One real
+    shuffle; the customer dim is broadcast.
+    """
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    counts = (
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"),
+            F.col("o_orderpriority").alias("priority"),
+        )
+        .agg(F.count("*").alias("n_orders"))
+    )
+    w = Window.partitionBy("segment").orderBy(F.desc("n_orders"), F.asc("priority"))
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("segment", F.col("priority").alias("mode_priority"), "n_orders")
+    )
+
+
+@register(
+    "q_equidepth_histogram",
+    oracle="""
+    WITH v AS (
+        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS centi,
+               NTILE(10) OVER (ORDER BY CAST(FLOOR(o_totalprice * 100 + 0.5)
+                                             AS BIGINT),
+                               o_orderkey) AS bucket
+        FROM orders
+    )
+    SELECT CAST(bucket AS INT) AS bucket, COUNT(*) AS n_orders,
+           CAST(MIN(centi) AS BIGINT) AS lo_centi,
+           CAST(MAX(centi) AS BIGINT) AS hi_centi
+    FROM v GROUP BY bucket
+    """,
+)
+def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X118: equi-depth histogram (10 equal-count buckets).
+
+    Bucket boundaries that equalize row counts rather than value
+    ranges — the statistics a cost-based optimizer or a range
+    partitioner actually wants on skewed money columns (X24's
+    q_histogram is the equi-width sibling). The oracle keeps DuckDB's
+    NTILE spelling; the Spark side computes the IDENTICAL bucket
+    assignment from a two-pass range-partitioned global rank
+    (operators/cumulative.ordered_cumsum — no single-partition window
+    anywhere, the 100 TB shape) and ntile's remainder arithmetic:
+    with q = n DIV 10, r = n % 10, the first r buckets take q+1 rows.
+    Hash equality proves the closed form matches the window function.
+    """
+    from laser_hadoop_spark.operators.cumulative import (
+        closed_form_ntile,
+        ordered_cumsum,
+    )
+
+    o = table(spark, sf_dir, "orders")
+    centi = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    v = o.select(centi.alias("centi"), "o_orderkey")
+    ranked = ordered_cumsum(
+        v, order_by=["centi", "o_orderkey"], row_number_col="rn"
+    )
+    n_row = v.agg(F.count("*").alias("n"))
+    bucket = closed_form_ntile()
+    return (
+        ranked.crossJoin(F.broadcast(n_row))
+        .select("centi", bucket.cast("int").alias("bucket"))
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.min("centi").alias("lo_centi"),
+            F.max("centi").alias("hi_centi"),
+        )
+    )
+
+
+@register(
+    "q_incremental_merge",
+    oracle="""
+    WITH partials AS (
+        SELECT o_orderkey % 2 AS batch_id, o_orderpriority AS priority,
+               COUNT(*) AS n,
+               SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS sum_centi,
+               MIN(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS min_centi,
+               MAX(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS max_centi
+        FROM orders GROUP BY o_orderkey % 2, o_orderpriority
+    )
+    SELECT priority, CAST(SUM(n) AS BIGINT) AS n,
+           CAST(SUM(sum_centi) AS BIGINT) AS sum_centi,
+           MIN(min_centi) AS min_centi, MAX(max_centi) AS max_centi,
+           CAST(SUM(sum_centi) AS BIGINT) // CAST(SUM(n) AS BIGINT)
+               AS avg_centi
+    FROM partials GROUP BY priority
+    """,
+)
+def q_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X120: re-aggregatable partial-state merge (incremental rollup).
+
+    The incremental-view-maintenance shape: each ingest batch keeps a
+    compact per-key state (n, sum, min, max) and the serving rollup is
+    a MERGE of states, never a rescan of history. Batches are
+    simulated by o_orderkey parity; the merged result must equal the
+    direct aggregate (associativity/commutativity proof — the property
+    that makes the state valid at 100 TB where history rescans are
+    impossible). Average derives from merged sums via truncating
+    integer division. Two narrow aggregates; the second runs over
+    2 x |priorities| state rows.
+    """
+    o = table(spark, sf_dir, "orders")
+    centi = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    partials = o.groupBy(
+        (F.col("o_orderkey") % 2).alias("batch_id"),
+        F.col("o_orderpriority").alias("priority"),
+    ).agg(
+        F.count("*").alias("n"),
+        F.sum(centi).alias("sum_centi"),
+        F.min(centi).alias("min_centi"),
+        F.max(centi).alias("max_centi"),
+    )
+    return partials.groupBy("priority").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("sum_centi").cast("bigint").alias("sum_centi"),
+        F.min("min_centi").alias("min_centi"),
+        F.max("max_centi").alias("max_centi"),
+        F.expr(
+            "CAST(SUM(sum_centi) AS BIGINT) DIV CAST(SUM(n) AS BIGINT)"
+        ).alias("avg_centi"),
+    )
+
+
+@register(
+    "q_histogram2d",
+    oracle="""
+    SELECT CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
+                // 1000000 AS BIGINT) AS price_bin,
+           CAST(CAST(l_quantity AS BIGINT) // 10 AS BIGINT) AS qty_bin,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
+                AS BIGINT) AS sum_centi
+    FROM lineitem
+    GROUP BY CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) // 1000000,
+             CAST(l_quantity AS BIGINT) // 10
+    """,
+)
+def q_histogram2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X129: 2D histogram (price x quantity joint distribution).
+
+    Joint binning — $10k price bins x 10-unit quantity bins with count
+    and exact centi mass per cell — the heatmap / copula input X24's
+    1D histogram can't provide. Pure scan-local floor-division keys,
+    one combine-friendly aggregate; cardinality is bounded by the bin
+    grid, not the data.
+    """
+    li = table(spark, sf_dir, "lineitem")
+    centi = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
+    return (
+        li.select(
+            centi.alias("centi"),
+            F.col("l_quantity").cast("bigint").alias("qty"),
+        )
+        .groupBy(
+            F.expr("centi DIV 1000000").cast("bigint").alias("price_bin"),
+            F.expr("qty DIV 10").cast("bigint").alias("qty_bin"),
+        )
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("centi").cast("bigint").alias("sum_centi"),
+        )
+    )
+
+
+@register(
+    "q_topk_with_ties",
+    oracle="""
+    WITH vals AS (
+        SELECT c.c_mktsegment AS segment,
+               CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS centi,
+               COUNT(*) AS n_orders
+        FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        GROUP BY c.c_mktsegment, CAST(FLOOR(o.o_totalprice * 100 + 0.5)
+                                      AS BIGINT)
+    ),
+    ranked AS (
+        SELECT *, DENSE_RANK() OVER (PARTITION BY segment
+                                     ORDER BY centi DESC) AS rnk
+        FROM vals
+    )
+    SELECT segment, CAST(rnk AS BIGINT) AS rnk, centi, n_orders
+    FROM ranked WHERE rnk <= 3
+    """,
+)
+def q_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X130: top-k WITH TIES (dense_rank semantics).
+
+    The 3 highest distinct order values per segment, KEEPING ties —
+    the WITH TIES / dense_rank variant of X-series row_number top-k
+    (W3), a genuinely different operator contract (output size is
+    data-dependent). Ranking runs on the (segment, value) AGGREGATE
+    (distinct values with counts), so the window input is the
+    compressed domain, not the fact table; dense_rank over centi desc
+    needs no tiebreaker because the partition key + ordering value is
+    already unique per row.
+    """
+    o = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    centi = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    vals = (
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .groupBy(
+            F.col("c_mktsegment").alias("segment"), centi.alias("centi")
+        )
+        .agg(F.count("*").alias("n_orders"))
+    )
+    w = Window.partitionBy("segment").orderBy(F.desc("centi"))
+    return (
+        vals.withColumn("rnk", F.dense_rank().over(w).cast("bigint"))
+        .where(F.col("rnk") <= 3)
+        .select("segment", "rnk", "centi", "n_orders")
+    )
+
+
+_FRACTIONS = [(1, 4), (1, 2), (3, 4), (9, 10), (99, 100)]
+
+
+@register(
+    "q_quantiles_pruned",
+    oracle="""
+    WITH v AS (
+        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS centi
+        FROM orders
+    ),
+    r AS (
+        SELECT centi, ROW_NUMBER() OVER (ORDER BY centi) AS rn,
+               COUNT(*) OVER () AS n
+        FROM v
+    ),
+    q AS (
+        SELECT 1 AS num, 4 AS den UNION ALL
+        SELECT 1, 2 UNION ALL
+        SELECT 3, 4 UNION ALL
+        SELECT 9, 10 UNION ALL
+        SELECT 99, 100
+    )
+    SELECT CAST(q.num AS BIGINT) AS q_num, CAST(q.den AS BIGINT) AS q_den,
+           CAST(MIN(r.centi) AS BIGINT) AS quantile_value,
+           CAST(MIN(r.n) AS BIGINT) AS total_weight
+    FROM r JOIN q ON q.den * r.rn >= q.num * r.n
+    GROUP BY q.num, q.den
+    """,
+)
+def q_quantiles_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X166: five percentile_disc points, two scans, no fact shuffle.
+
+    p25/p50/p75/p90/p99 of the order value via
+    operators/cumulative.ordered_quantiles — ONE fixed-width weight
+    histogram (map-side partial aggregation), one cumulative walk over
+    the tiny histogram to find each fraction's crossing bucket, one
+    pruned re-scan covering the UNION of crossing buckets. The oracle
+    is the definitional global-rank spelling (ROW_NUMBER over every
+    row — exactly the single-partition plan the operator exists to
+    avoid), so hash equality proves the pruning lossless at all five
+    fractions at once. k quantiles cost 2 scans, not 2k and not one
+    full-table sort: at 100 TB this replaces the classic
+    sort-everything percentile job with two column-pruned passes.
+    """
+    from laser_hadoop_spark.operators.cumulative import ordered_quantiles
+
+    o = table(spark, sf_dir, "orders").select(
+        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+        .cast("bigint")
+        .alias("centi")
+    )
+    return ordered_quantiles(
+        o, value_col="centi", quantiles=_FRACTIONS
+    ).select(
+        F.col("q_num").cast("bigint").alias("q_num"),
+        F.col("q_den").cast("bigint").alias("q_den"),
+        F.col("quantile_value").cast("bigint").alias("quantile_value"),
+        F.col("total_weight").cast("bigint").alias("total_weight"),
+    )
+
+
+@register(
+    "q_log2_histogram",
+    oracle="""
+    WITH v AS (
+        SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS centi
+        FROM orders
+    )
+    SELECT CAST(length(bin(centi)) - 1 AS INT) AS log2_bucket,
+           COUNT(*) AS n_orders,
+           CAST(MIN(centi) AS BIGINT) AS lo_centi,
+           CAST(MAX(centi) AS BIGINT) AS hi_centi,
+           CAST(SUM(centi) AS BIGINT) AS mass_centi
+    FROM v GROUP BY log2_bucket
+    """,
+)
+def q_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X167: powers-of-2 (log-scale) histogram of order values.
+
+    The long-tail profile: equi-width bins (X24) starve the tail and
+    equi-depth bins (X118) hide magnitude — log2 buckets show both.
+    The bucket key floor(log2(x)) is computed as length(bin(x)) - 1,
+    the bit length of the value's binary string — PURE integer/string
+    arithmetic on both engines, no float log whose rounding could
+    flip a 2^k boundary value. Scan-local key + one aggregate.
+    """
+    o = table(spark, sf_dir, "orders")
+    centi = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    v = o.select(centi.alias("centi"))
+    bucket = (F.length(F.bin("centi")) - 1).cast("int")
+    return v.groupBy(bucket.alias("log2_bucket")).agg(
+        F.count("*").alias("n_orders"),
+        F.min("centi").cast("bigint").alias("lo_centi"),
+        F.max("centi").cast("bigint").alias("hi_centi"),
+        F.sum("centi").cast("bigint").alias("mass_centi"),
     )

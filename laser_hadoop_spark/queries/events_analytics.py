@@ -7,6 +7,10 @@ window/aggregate compositions that share a single hash partitioning on
 user_id for the heavy phase — the property that matters at 100 TB,
 where `events` is the big table and per-user state must never leave its
 shuffle partition.
+
+The family also holds activity and engagement metrics (DAU/MAU,
+streaks, bitmaps, growth accounting, churn), sequence mining and
+matching, and multi-touch attribution (position-based, Shapley).
 """
 
 from __future__ import annotations
@@ -1299,4 +1303,1664 @@ def q_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "abandon_bp"
             ),
         )
+    )
+
+
+@register(
+    "q_gap_fill",
+    oracle="""
+    WITH spine AS (
+        SELECT user_id,
+               CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
+        FROM (SELECT user_id, MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
+              FROM events GROUP BY user_id)
+    ),
+    daily AS (
+        SELECT user_id, CAST(ts AS DATE) AS day, COUNT(*) AS n
+        FROM events GROUP BY 1, 2
+    )
+    SELECT spine.user_id, spine.day, COALESCE(daily.n, 0) AS n_events
+    FROM spine LEFT JOIN daily
+      ON spine.user_id = daily.user_id AND spine.day = daily.day
+    """,
+)
+def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-series gap fill: dense per-user daily spine with zero-filled counts.
+
+    The spine is generated distributedly — sequence() explodes each
+    user's [min_day, max_day] range executor-side (a table-generating
+    function, U4's mechanism) — then left-joins the daily aggregate.
+    Both sides are pre-aggregated before the join, so the join input is
+    |users|·|days|, not raw events; at 100 TB the join keys share one
+    hash partitioning on user_id.
+    """
+    e = table(spark, sf_dir, "events")
+    day = F.to_date("ts")
+    spine = (
+        e.groupBy("user_id")
+        .agg(F.min(day).alias("lo"), F.max(day).alias("hi"))
+        .select(
+            "user_id",
+            F.explode(
+                F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))
+            ).alias("day"),
+        )
+    )
+    daily = e.groupBy("user_id", day.alias("day")).agg(F.count("*").alias("n"))
+    return spine.join(daily, ["user_id", "day"], "left").select(
+        "user_id", "day", F.coalesce("n", F.lit(0)).alias("n_events")
+    )
+
+
+@register(
+    "q_run_length",
+    oracle="""
+    WITH e AS (
+        SELECT user_id, event_type, epoch_us(ts) AS t_us, event_id,
+               CASE WHEN LAG(event_type) OVER w IS DISTINCT FROM event_type
+                    THEN 1 ELSE 0 END AS brk
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+    ),
+    r AS (
+        SELECT *, SUM(brk) OVER (PARTITION BY user_id
+                                 ORDER BY t_us, event_id
+                                 ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS run_id
+        FROM e
+    )
+    SELECT user_id, CAST(run_id AS BIGINT) AS run_id, event_type,
+           COUNT(*) AS run_len,
+           CAST(MIN(t_us) AS BIGINT) AS start_us,
+           CAST(MAX(t_us) AS BIGINT) AS end_us
+    FROM r GROUP BY user_id, run_id, event_type
+    """,
+)
+def q_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X103: run-length encoding of per-user event streams.
+
+    Gaps-and-islands state compression: consecutive same-type events
+    collapse into one run with length and time bounds — the compact
+    form session/state analyses consume (and the RLE the reference's
+    row-oriented text pipelines never had). One shuffle on user_id
+    shared by the lag window, the run-id running sum, and the final
+    (user, run) aggregate.
+    """
+    ev = table(spark, sf_dir, "events")
+    t_us = F.unix_micros("ts")
+    e = ev.select("user_id", "event_type", t_us.alias("t_us"), "event_id").withColumn(
+        "brk",
+        F.when(
+            ~F.lag("event_type").over(
+                Window.partitionBy("user_id").orderBy("t_us", "event_id")
+            ).eqNullSafe(F.col("event_type")),
+            1,
+        ).otherwise(0),
+    )
+    r = e.withColumn(
+        "run_id",
+        F.sum("brk").over(
+            Window.partitionBy("user_id")
+            .orderBy("t_us", "event_id")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    return r.groupBy("user_id", "run_id", "event_type").agg(
+        F.count("*").alias("run_len"),
+        F.min("t_us").cast("bigint").alias("start_us"),
+        F.max("t_us").cast("bigint").alias("end_us"),
+    )
+
+
+@register(
+    "q_activity_bitmap",
+    oracle="""
+    WITH days AS (
+        SELECT user_id,
+               date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_idx
+        FROM events
+    )
+    SELECT user_id,
+           CAST(day_idx // 64 AS BIGINT) AS block,
+           CAST(BIT_OR(CAST(1 AS BIGINT) << CAST(day_idx % 64 AS INT))
+                AS BIGINT) AS bitmap,
+           CAST(COUNT(DISTINCT day_idx) AS BIGINT) AS n_active_days,
+           CAST(MIN(day_idx) AS BIGINT) AS first_day,
+           CAST(MAX(day_idx) AS BIGINT) AS last_day
+    FROM days GROUP BY user_id, day_idx // 64
+    """,
+)
+def q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X127: per-user 64-day activity bitmaps.
+
+    One bigint per (user, 64-day block) with bit d set iff the user
+    was active on day d — the compact activity index behind streak /
+    retention / DAU queries (a bitmap AND answers "active both days",
+    a popcount answers "days active"; the roaring-bitmap idea at
+    bigint granularity). BIT_OR is the aggregate (order-insensitive,
+    combiner-friendly); n_active_days is exact distinct-day count,
+    which must equal bit_count(bitmap) — the pytest invariant. One
+    (user, block) shuffle with map-side combine.
+    """
+    ev = table(spark, sf_dir, "events")
+    day_idx = F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
+    days = ev.select("user_id", day_idx.alias("day_idx"))
+    return days.groupBy(
+        "user_id", F.expr("day_idx DIV 64").cast("bigint").alias("block")
+    ).agg(
+        F.expr(
+            "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(day_idx % 64 AS INT)))"
+        )
+        .cast("bigint")
+        .alias("bitmap"),
+        F.countDistinct("day_idx").cast("bigint").alias("n_active_days"),
+        F.min("day_idx").cast("bigint").alias("first_day"),
+        F.max("day_idx").cast("bigint").alias("last_day"),
+    )
+
+
+@register("q_wau_hll", oracle=None)
+def q_wau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X151: rolling 7-day active users via mergeable per-day HLL
+    sketches — the extreme-scale sibling X87 documents.
+
+    Exact sliding COUNT(DISTINCT) costs 7x the deduped user-day table
+    (q_rolling_active_users); this variant pays that fanout on ONE
+    SKETCH PER DAY instead: hll_sketch_agg(user_id) per day (the only
+    fact-table aggregate), then each day's ~KB-sized sketch binary is
+    replicated to its 7 window ends and hll_union_agg merges them —
+    the window-shuffle volume drops from |user-days| x 7 rows to
+    |days| x 7 sketches, independent of user cardinality. Rows-only by
+    nature (HLL is approximate); the pytest gate bounds per-day error
+    vs the exact query at 5%.
+    """
+    e = table(spark, sf_dir, "events")
+    user_days = e.select(
+        "user_id", F.col("ts").cast("date").alias("day")
+    ).distinct()
+    daily = user_days.groupBy("day").agg(
+        F.hll_sketch_agg("user_id").alias("sketch")
+    )
+    contrib = daily.select(
+        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("off"), "day", "sketch"
+    ).select(F.date_add(F.col("day"), F.col("off")).alias("window_day"), "sketch")
+    bounds = user_days.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
+    return (
+        contrib.crossJoin(F.broadcast(bounds))
+        .where(
+            (F.col("window_day") >= F.date_add(F.col("lo"), 6))
+            & (F.col("window_day") <= F.col("hi"))
+        )
+        .groupBy("window_day")
+        .agg(
+            F.hll_sketch_estimate(F.hll_union_agg("sketch"))
+            .cast("bigint")
+            .alias("wau_approx")
+        )
+    )
+
+
+@register(
+    "q_cohort_ltv",
+    oracle="""
+    WITH cohort AS (
+        SELECT user_id, MIN(CAST(ts AS DATE)) AS cd
+        FROM events GROUP BY user_id
+    ),
+    sizes AS (SELECT cd, COUNT(*) AS n_users FROM cohort GROUP BY cd),
+    spend AS (
+        SELECT c.cd,
+               date_diff('day', c.cd, CAST(e.ts AS DATE)) AS age,
+               SUM(CAST(FLOOR(e.value * 100 + 0.5) AS BIGINT)) AS rev
+        FROM events e JOIN cohort c ON c.user_id = e.user_id
+        WHERE e.event_type = 'purchase'
+        GROUP BY c.cd, age
+    ),
+    cum AS (
+        SELECT cd, age, rev,
+               SUM(rev) OVER (PARTITION BY cd ORDER BY age
+                              ROWS BETWEEN UNBOUNDED PRECEDING
+                              AND CURRENT ROW) AS cum_rev
+        FROM spend
+    )
+    SELECT CAST(c.cd AS DATE) AS cohort_day, CAST(c.age AS INT) AS age_days,
+           CAST(s.n_users AS BIGINT) AS n_users,
+           CAST(c.cum_rev AS BIGINT) AS cum_rev_centi,
+           CAST(c.cum_rev // s.n_users AS BIGINT) AS ltv_centi
+    FROM cum c JOIN sizes s ON s.cd = c.cd
+    """,
+)
+def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X164: cohort LTV curve (cumulative revenue per cohort age).
+
+    The unit-economics view on top of X37's retention matrix: users
+    cohorted by first-activity DAY (the driver corpus spans one
+    month, so month cohorts would collapse to a single row); purchase
+    revenue bucketed by integer day age (datediff — identical on both
+    engines); cumulative revenue and per-user LTV in exact centi per
+    (cohort_day, age_days). The cumulative window partitions by
+    cohort over the day-granular aggregate (|days|^2-bounded by the
+    calendar span, not by fact cardinality); the only fact-table
+    shuffles are the two user_id/day aggregates sharing one
+    partitioning.
+    """
+    e = table(spark, sf_dir, "events")
+    day = F.col("ts").cast("date")
+    cohort = e.groupBy("user_id").agg(F.min(day).alias("cd"))
+    sizes = cohort.groupBy("cd").agg(F.count("*").alias("n_users"))
+    spend = (
+        e.where(F.col("event_type") == "purchase")
+        .join(cohort, "user_id")
+        .groupBy("cd", F.datediff(day, F.col("cd")).alias("age"))
+        .agg(
+            F.sum(
+                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+            ).alias("rev")
+        )
+    )
+    w = (
+        Window.partitionBy("cd")
+        .orderBy("age")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = spend.select("cd", "age", F.sum("rev").over(w).alias("cum_rev"))
+    return cum.join(sizes, "cd").select(
+        F.col("cd").alias("cohort_day"),
+        F.col("age").cast("int").alias("age_days"),
+        F.col("n_users").cast("bigint").alias("n_users"),
+        F.col("cum_rev").cast("bigint").alias("cum_rev_centi"),
+        F.expr("CAST(cum_rev DIV n_users AS BIGINT)").alias("ltv_centi"),
+    )
+
+
+@register(
+    "q_dau_mau",
+    oracle="""
+    WITH ud AS (
+        SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+    ),
+    dau AS (SELECT day, COUNT(*) AS dau FROM ud GROUP BY day),
+    bounds AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM ud),
+    mau AS (
+        SELECT d.day, COUNT(DISTINCT u.user_id) AS mau
+        FROM dau d JOIN ud u
+          ON u.day > d.day - 28 AND u.day <= d.day
+        GROUP BY d.day
+    )
+    SELECT d.day, CAST(d.dau AS BIGINT) AS dau,
+           CAST(m.mau AS BIGINT) AS mau,
+           CAST(10000 * d.dau // m.mau AS BIGINT) AS stickiness_bp
+    FROM dau d
+    JOIN mau m ON m.day = d.day
+    CROSS JOIN bounds b
+    WHERE d.day >= b.lo + 27
+    """,
+)
+def q_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X168: DAU/MAU stickiness ratio per day.
+
+    The engagement ratio product dashboards lead with: daily actives
+    over trailing-28-day actives, in exact basis points, full windows
+    only. The trailing-28 distinct count uses X87's offset-explode
+    shape: each deduped (user, day) row fans out to the 28 window-end
+    days it contributes to, then distinct-counts per window day — an
+    EQUI-shuffle costing 28x the user-day table (a pure range
+    predicate would plan as a nested-loop join evaluating
+    |days| x |user-days| pairs). The inner join back to dau restricts
+    window days to actual activity days; the HLL sibling X151 applies
+    identically when user cardinality explodes.
+    """
+    e = table(spark, sf_dir, "events")
+    ud = e.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
+    dau = ud.groupBy("day").agg(F.count("*").alias("dau"))
+    bounds = ud.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
+    contrib = ud.select(
+        "user_id",
+        F.explode(F.sequence(F.lit(0), F.lit(27))).alias("off"),
+        "day",
+    ).select(
+        "user_id", F.date_add(F.col("day"), F.col("off")).alias("day")
+    )
+    mau = contrib.groupBy("day").agg(
+        F.count_distinct("user_id").alias("mau")
+    )
+    return (
+        dau.join(mau, "day")
+        .crossJoin(F.broadcast(bounds))
+        .where(F.col("day") >= F.date_add(F.col("lo"), 27))
+        .select(
+            "day",
+            F.col("dau").cast("bigint").alias("dau"),
+            F.col("mau").cast("bigint").alias("mau"),
+            F.expr("CAST(10000 * dau DIV mau AS BIGINT)").alias(
+                "stickiness_bp"
+            ),
+        )
+    )
+
+
+@register(
+    "q_fano_burstiness",
+    oracle="""
+    WITH daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS c
+        FROM events GROUP BY event_type, CAST(ts AS DATE)
+    ),
+    s AS (
+        SELECT event_type, COUNT(*) AS n, SUM(c) AS sx, SUM(c * c) AS sxx
+        FROM daily GROUP BY event_type
+    )
+    SELECT event_type, CAST(n AS BIGINT) AS n_days,
+           CAST(sx AS BIGINT) AS n_events,
+           CAST(((n * sxx - sx * sx) * 1000000) // (n * sx) AS BIGINT)
+               AS fano_micro
+    FROM s
+    """,
+)
+def q_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X170: Fano factor (variance-to-mean) of daily event counts.
+
+    Burstiness per event type: Fano = population variance / mean of
+    the daily count series — 1.0 for a Poisson process, above it for
+    bursty arrivals (the capacity-planning signal for ingest sizing).
+    Cleared denominators keep it exact: var/mean = (n*sxx - sx^2) /
+    (n * sx), emitted in truncating integer micro-units — no float
+    variance, no float mean, one integer division (X52's algebra with
+    both divisions fused). One date-keyed aggregate of the fact
+    table + a 5-row stats pass.
+    """
+    e = table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        "event_type", F.col("ts").cast("date").alias("day")
+    ).agg(F.count("*").alias("c"))
+    s = daily.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum("c").alias("sx"),
+        # power sum through DECIMAL(38,0): with ANSI off a bigint
+        # product would silently wrap at scale while DuckDB's SUM
+        # promotes to HUGEINT — the q_dims_variance discipline
+        F.sum(F.col("c").cast("decimal(38,0)") * F.col("c")).alias("sxx"),
+    )
+    return s.select(
+        "event_type",
+        F.col("n").cast("bigint").alias("n_days"),
+        F.col("sx").cast("bigint").alias("n_events"),
+        F.expr(
+            "CAST(((CAST(n AS DECIMAL(38,0)) * sxx"
+            "       - CAST(sx AS DECIMAL(38,0)) * sx) * 1000000)"
+            "     div (CAST(n AS DECIMAL(38,0)) * sx) AS BIGINT)"
+        ).alias("fano_micro"),
+    )
+
+
+@register(
+    "q_longest_streak",
+    oracle="""
+    WITH days AS (
+        SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+        FROM events WHERE event_type = 'purchase'
+    ),
+    grp AS (
+        SELECT user_id, day,
+               day - CAST(ROW_NUMBER() OVER (PARTITION BY user_id
+                                             ORDER BY day) AS INT) AS g
+        FROM days
+    ),
+    streaks AS (
+        SELECT user_id, COUNT(*) AS len,
+               MIN(day) AS streak_start
+        FROM grp GROUP BY user_id, g
+    ),
+    best AS (
+        SELECT user_id, len, streak_start,
+               ROW_NUMBER() OVER (PARTITION BY user_id
+                                  ORDER BY len DESC, streak_start) AS rn
+        FROM streaks
+    )
+    SELECT user_id, CAST(len AS BIGINT) AS longest_streak_days,
+           streak_start
+    FROM best WHERE rn = 1
+    """,
+)
+def q_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X184: longest consecutive-day purchase streak per user.
+
+    The canonical gaps-and-islands trick: on a user's DEDUPED purchase
+    days, day - row_number() is constant exactly within a run of
+    consecutive dates, so one partitioned window + one aggregate finds
+    every streak; ties on length break to the earliest start. All
+    windows partition by user_id (X103's run-length machinery on the
+    date axis); the only fact-table work is the distinct user-day
+    projection. Date-minus-integer arithmetic stays in the DATE
+    domain on both engines — no timestamps, no TZ exposure.
+    """
+    e = table(spark, sf_dir, "events")
+    days = (
+        e.where(F.col("event_type") == "purchase")
+        .select("user_id", F.col("ts").cast("date").alias("day"))
+        .distinct()
+    )
+    w = Window.partitionBy("user_id").orderBy("day")
+    grp = days.select(
+        "user_id",
+        "day",
+        F.date_sub(F.col("day"), F.row_number().over(w)).alias("g"),
+    )
+    streaks = grp.groupBy("user_id", "g").agg(
+        F.count("*").alias("len"), F.min("day").alias("streak_start")
+    )
+    bw = Window.partitionBy("user_id").orderBy(
+        F.col("len").desc(), F.col("streak_start")
+    )
+    return (
+        streaks.withColumn("rn", F.row_number().over(bw))
+        .where(F.col("rn") == 1)
+        .select(
+            "user_id",
+            F.col("len").cast("bigint").alias("longest_streak_days"),
+            "streak_start",
+        )
+    )
+
+
+@register(
+    "q_rolling_mode",
+    oracle="""
+    WITH daily AS (
+        SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS c
+        FROM events GROUP BY CAST(ts AS DATE), event_type
+    ),
+    frames AS (
+        SELECT a.day, b.event_type, SUM(b.c) AS c7
+        FROM (SELECT DISTINCT day FROM daily) a
+        JOIN daily b ON b.day BETWEEN a.day - 6 AND a.day
+        GROUP BY a.day, b.event_type
+    ),
+    ranked AS (
+        SELECT day, event_type, c7,
+               ROW_NUMBER() OVER (PARTITION BY day
+                                  ORDER BY c7 DESC, event_type) AS rn
+        FROM frames
+    )
+    SELECT day, event_type AS mode_type, CAST(c7 AS BIGINT) AS n_events
+    FROM ranked WHERE rn = 1
+    """,
+)
+def q_rolling_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X186: rolling 7-day modal event type.
+
+    Order statistics meet sliding frames (X152's rolling median found
+    the middle VALUE; this finds the most frequent CATEGORY): per day,
+    the event type with the highest trailing-7-day count, ties broken
+    (count DESC, type) — X107's mode discipline inside a window. The
+    frame materializes as the calendar-bounded date-range join over
+    the DAILY per-type aggregate (|days| x 7 x |types| rows, never
+    fact-scale); partial windows included by construction.
+    """
+    e = table(spark, sf_dir, "events")
+    daily = e.groupBy(
+        F.col("ts").cast("date").alias("day"), "event_type"
+    ).agg(F.count("*").alias("c"))
+    spine = daily.select("day").distinct()
+    b = daily.select(
+        F.col("day").alias("bday"), "event_type", "c"
+    )
+    frames = (
+        spine.join(
+            b,
+            (F.col("bday") >= F.date_sub(F.col("day"), 6))
+            & (F.col("bday") <= F.col("day")),
+        )
+        .groupBy("day", "event_type")
+        .agg(F.sum("c").alias("c7"))
+    )
+    w = Window.partitionBy("day").orderBy(
+        F.col("c7").desc(), F.col("event_type")
+    )
+    return (
+        frames.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select(
+            "day",
+            F.col("event_type").alias("mode_type"),
+            F.col("c7").cast("bigint").alias("n_events"),
+        )
+    )
+
+
+@register(
+    "q_funnel_latency",
+    oracle="""
+    WITH v AS (
+        SELECT user_id, MIN(epoch_us(ts)) AS t_view
+        FROM events WHERE event_type = 'view' GROUP BY user_id
+    ),
+    p AS (
+        SELECT e.user_id, MIN(epoch_us(e.ts)) AS t_purch
+        FROM events e JOIN v ON v.user_id = e.user_id
+        WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= v.t_view
+        GROUP BY e.user_id
+    ),
+    gaps AS (
+        SELECT (p.t_purch - v.t_view) // 1000000 AS gap_s
+        FROM v JOIN p ON p.user_id = v.user_id
+    ),
+    r AS (
+        SELECT gap_s, ROW_NUMBER() OVER (ORDER BY gap_s) AS rn,
+               COUNT(*) OVER () AS n
+        FROM gaps
+    )
+    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM gaps) AS n_converted,
+           (SELECT CAST(MIN(gap_s) AS BIGINT) FROM r
+            WHERE 2 * rn >= n) AS p50_s,
+           (SELECT CAST(MIN(gap_s) AS BIGINT) FROM r
+            WHERE 10 * rn >= 9 * n) AS p90_s,
+           (SELECT CAST(MAX(gap_s) AS BIGINT) FROM r) AS max_s
+    """,
+)
+def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X195: funnel stage latency percentiles (view -> first purchase).
+
+    X37's funnel counted who converts and X88 bounded the window; this
+    prices HOW LONG conversion takes: per user, first view to first
+    subsequent purchase, gaps in integer seconds (epoch-micros
+    difference, truncating division — TZ-free), then the lower p50 /
+    p90 via ONE histogram-prune pass (the X166 ordered_quantiles
+    operator — no rank shuffle of the gap relation) and max from the
+    same scan. The SLA twin of X83's order-to-ship latency on the
+    event funnel; the oracle keeps the definitional
+    (den*rank >= num*n) spelling, so the hash match re-proves the
+    pruning on this relation too.
+    """
+    e = table(spark, sf_dir, "events")
+    v = (
+        e.where(F.col("event_type") == "view")
+        .groupBy("user_id")
+        .agg(F.min(F.unix_micros("ts")).alias("t_view"))
+    )
+    p = (
+        e.where(F.col("event_type") == "purchase")
+        .join(v, "user_id")
+        .where(F.unix_micros("ts") >= F.col("t_view"))
+        .groupBy("user_id")
+        .agg(F.min(F.unix_micros("ts")).alias("t_purch"))
+    )
+    gaps = v.join(p, "user_id").select(
+        F.expr("(t_purch - t_view) DIV 1000000").alias("gap_s")
+    )
+    # both percentiles in ONE histogram-prune pass (ordered_quantiles —
+    # the q_weighted_median/X166 operator) instead of a hand-rolled
+    # rank selection over a range-shuffled cumulative
+    from laser_hadoop_spark.operators.cumulative import ordered_quantiles
+
+    qs = ordered_quantiles(
+        gaps, value_col="gap_s", quantiles=[(1, 2), (9, 10)]
+    )
+    pivoted = (
+        qs.groupBy()
+        .pivot("q_num", [1, 9])
+        .agg(F.min("quantile_value"))
+        .select(F.col("`1`").alias("p50_s"), F.col("`9`").alias("p90_s"))
+    )
+    n_row = gaps.agg(
+        F.count("*").alias("n"), F.max("gap_s").alias("max_s")
+    )
+    return n_row.crossJoin(pivoted).select(
+        F.col("n").cast("bigint").alias("n_converted"),
+        F.col("p50_s").cast("bigint").alias("p50_s"),
+        F.col("p90_s").cast("bigint").alias("p90_s"),
+        F.col("max_s").cast("bigint").alias("max_s"),
+    )
+
+
+@register(
+    "q_growth_accounting",
+    oracle="""
+    WITH ud AS (
+        SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+    ),
+    first_ AS (
+        SELECT user_id, MIN(day) AS first_day FROM ud GROUP BY user_id
+    ),
+    days AS (SELECT DISTINCT day FROM ud),
+    tagged AS (
+        SELECT u.day, u.user_id,
+               CASE WHEN f.first_day = u.day THEN 1 ELSE 0 END AS is_new,
+               CASE WHEN y.user_id IS NOT NULL THEN 1 ELSE 0 END
+                   AS active_prev
+        FROM ud u
+        JOIN first_ f ON f.user_id = u.user_id
+        LEFT JOIN ud y ON y.user_id = u.user_id AND y.day = u.day - 1
+    ),
+    churn AS (
+        SELECT y.day + 1 AS day, COUNT(*) AS churned
+        FROM ud y LEFT JOIN ud t
+          ON t.user_id = y.user_id AND t.day = y.day + 1
+        WHERE t.user_id IS NULL
+        GROUP BY y.day + 1
+    )
+    SELECT t.day,
+           CAST(SUM(t.is_new) AS BIGINT) AS new_users,
+           CAST(SUM(CASE WHEN t.active_prev = 1 THEN 1 ELSE 0 END)
+                AS BIGINT) AS retained,
+           CAST(SUM(CASE WHEN t.is_new = 0 AND t.active_prev = 0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS resurrected,
+           CAST(COALESCE(MIN(c.churned), 0) AS BIGINT) AS churned
+    FROM tagged t LEFT JOIN churn c ON c.day = t.day
+    GROUP BY t.day
+    """,
+)
+def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X196: daily growth accounting (new/retained/resurrected/churned).
+
+    The growth-accounting identity every product review reads:
+    today's actives = new (first day today) + retained (also active
+    yesterday) + resurrected (seen before, absent yesterday); churned
+    = yesterday's actives missing today, attributed to today. X85's
+    new-vs-returning is the two-term shadow; the four-way split plus
+    churn closes the MAU-delta identity. All presence checks are
+    (user, day) equi-joins on the deduped user-day relation — one
+    first-seen aggregate, one next-day anti pattern, one prev-day
+    left join, all sharing the user_id shuffle key.
+    """
+    e = table(spark, sf_dir, "events")
+    ud = e.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
+    first = ud.groupBy("user_id").agg(F.min("day").alias("first_day"))
+    prev = ud.select("user_id", F.date_add("day", 1).alias("day")).withColumn(
+        "__prev", F.lit(1)
+    )
+    tagged = (
+        ud.join(first, "user_id")
+        .join(prev, ["user_id", "day"], "left")
+        .select(
+            "day",
+            (F.col("first_day") == F.col("day")).cast("int").alias("is_new"),
+            F.coalesce("__prev", F.lit(0)).alias("active_prev"),
+        )
+    )
+    nxt = ud.select("user_id", F.date_sub("day", 1).alias("day")).withColumn(
+        "__next", F.lit(1)
+    )
+    churn = (
+        ud.join(nxt, ["user_id", "day"], "left")
+        .where(F.col("__next").isNull())
+        .groupBy(F.date_add("day", 1).alias("day"))
+        .agg(F.count("*").alias("churned"))
+    )
+    agg = tagged.groupBy("day").agg(
+        F.sum("is_new").cast("bigint").alias("new_users"),
+        F.sum(F.when(F.col("active_prev") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("retained"),
+        F.sum(
+            F.when((F.col("is_new") == 0) & (F.col("active_prev") == 0), 1)
+            .otherwise(0)
+        )
+        .cast("bigint")
+        .alias("resurrected"),
+    )
+    return agg.join(churn, "day", "left").select(
+        "day",
+        "new_users",
+        "retained",
+        "resurrected",
+        F.coalesce("churned", F.lit(0)).cast("bigint").alias("churned"),
+    )
+
+
+@register(
+    "q_weekday_hour_heatmap",
+    oracle="""
+    WITH cells AS (
+        SELECT isodow(CAST(ts AS DATE)) AS dow,
+               CAST(epoch_us(ts) % 86400000000 // 3600000000 AS INT)
+                   AS hour_utc,
+               COUNT(*) AS n
+        FROM events GROUP BY 1, 2
+    ),
+    tot AS (SELECT SUM(n) AS total FROM cells)
+    SELECT CAST(c.dow AS INT) AS dow, c.hour_utc,
+           CAST(c.n AS BIGINT) AS n_events,
+           CAST(10000 * c.n // t.total AS BIGINT) AS share_bp
+    FROM cells c CROSS JOIN tot t
+    """,
+)
+def q_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X201: weekday x hour activity heatmap.
+
+    The on-call/staffing rhythm view: event counts and exact bp
+    shares per (ISO weekday, UTC hour) cell — at most 168 rows out of
+    any fact cardinality, one map-side-combining aggregate. The hour
+    derives from epoch-microseconds modular arithmetic (NOT a
+    session-TZ-dependent HOUR() call — the adversarial non-UTC session
+    must agree with the oracle's naive arithmetic), and the weekday
+    uses the pinned isodow == weekday()+1 numbering (X86/X171).
+    """
+    e = table(spark, sf_dir, "events")
+    cells = e.groupBy(
+        (F.weekday(F.col("ts").cast("date")) + 1).alias("dow"),
+        F.expr(
+            "CAST(unix_micros(ts) % 86400000000 DIV 3600000000 AS INT)"
+        ).alias("hour_utc"),
+    ).agg(F.count("*").alias("n"))
+    tot = cells.agg(F.sum("n").alias("total"))
+    return cells.crossJoin(F.broadcast(tot)).select(
+        F.col("dow").cast("int").alias("dow"),
+        "hour_utc",
+        F.col("n").cast("bigint").alias("n_events"),
+        F.expr("CAST(10000 * n DIV total AS BIGINT)").alias("share_bp"),
+    )
+
+
+# --- X234: position-based (U-shaped) attribution ---------------------------
+
+
+@register(
+    "q_position_attribution",
+    oracle="""
+    WITH seq AS (
+        SELECT user_id, event_type, value, epoch_us(ts) AS em, event_id,
+               SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS pidx
+        FROM events
+    ),
+    purchases AS (
+        SELECT user_id, pidx,
+               CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS v
+        FROM seq WHERE event_type = 'purchase'
+    ),
+    touches AS (
+        SELECT user_id, pidx + 1 AS pidx, event_type,
+               ROW_NUMBER() OVER (PARTITION BY user_id, pidx
+                                  ORDER BY em, event_id) AS rn_asc,
+               ROW_NUMBER() OVER (PARTITION BY user_id, pidx
+                                  ORDER BY em DESC, event_id DESC) AS rn_desc,
+               COUNT(*) OVER (PARTITION BY user_id, pidx) AS n
+        FROM seq WHERE event_type IN ('view', 'click')
+    ),
+    credited AS (
+        SELECT t.event_type,
+               CASE WHEN t.rn_asc = 1 THEN
+                        p.v * 4 // 10
+                        + (p.v
+                           - p.v * 4 // 10
+                           - CASE WHEN t.n >= 2 THEN p.v * 4 // 10 ELSE 0 END
+                           - CASE WHEN t.n > 2
+                                  THEN (p.v * 2 // 10 // (t.n - 2)) * (t.n - 2)
+                                  ELSE 0 END)
+                    WHEN t.rn_desc = 1 THEN p.v * 4 // 10
+                    ELSE p.v * 2 // 10 // (t.n - 2) END AS credit
+        FROM touches t
+        JOIN purchases p ON p.user_id = t.user_id AND p.pidx = t.pidx
+    )
+    SELECT event_type AS touch, COUNT(*) AS n_touches,
+           CAST(SUM(credit) AS BIGINT) AS credit_micro
+    FROM credited GROUP BY 1
+    """,
+)
+def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X234: position-based (U-shaped, 40/20/40) attribution, exact.
+
+    Completes X65's first/last pair with the third standard model:
+    each purchase's value credits its preceding touch sequence (the
+    touches since the prior purchase) 40% to the first touch, 40% to
+    the last, 20% split over the middles. Integer exactness by
+    construction: middles get the truncating per-touch share, the
+    last gets its truncated 40%, and the FIRST absorbs every rounding
+    remainder — per purchase the credits sum to the purchase value to
+    the micro. A 1-touch path gets 100%, a 2-touch path 60/40.
+
+    100 TB: one shuffle on user_id serves the purchase-index
+    cumulative window, both touch rank windows, and the
+    purchase-touch equi-join; credit math is pure codegen.
+    """
+    e = table(spark, sf_dir, "events")
+    w_cum = (
+        Window.partitionBy("user_id")
+        .orderBy(F.unix_micros("ts"), "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    seq = e.select(
+        "user_id",
+        "event_type",
+        "value",
+        F.unix_micros("ts").alias("em"),
+        "event_id",
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        )
+        .over(w_cum)
+        .alias("pidx"),
+    )
+    purchases = seq.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        "pidx",
+        F.expr("CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT)").alias("v"),
+    )
+    wt = Window.partitionBy("user_id", "pidx")
+    touches = seq.where(F.col("event_type").isin("view", "click")).select(
+        "user_id",
+        (F.col("pidx") + 1).alias("pidx"),
+        "event_type",
+        F.row_number().over(wt.orderBy("em", "event_id")).alias("rn_asc"),
+        F.row_number()
+        .over(wt.orderBy(F.desc("em"), F.desc("event_id")))
+        .alias("rn_desc"),
+        F.count("*").over(wt).alias("n"),
+    )
+    credit = F.expr(
+        "CASE WHEN rn_asc = 1 THEN "
+        "         v * 4 DIV 10 "
+        "         + (v - v * 4 DIV 10 "
+        "            - CASE WHEN n >= 2 THEN v * 4 DIV 10 ELSE 0 END "
+        "            - CASE WHEN n > 2 "
+        "                   THEN (v * 2 DIV 10 DIV (n - 2)) * (n - 2) "
+        "                   ELSE 0 END) "
+        "     WHEN rn_desc = 1 THEN v * 4 DIV 10 "
+        "     ELSE v * 2 DIV 10 DIV (n - 2) END"
+    )
+    credited = touches.join(purchases, ["user_id", "pidx"]).select(
+        "event_type", credit.alias("credit")
+    )
+    return credited.groupBy(F.col("event_type").alias("touch")).agg(
+        F.count("*").alias("n_touches"),
+        F.sum("credit").cast("bigint").alias("credit_micro"),
+    )
+
+
+# --- X241: transition conditional entropy -----------------------------------
+
+
+@register(
+    "q_transition_entropy",
+    oracle="""
+    WITH seq AS (
+        SELECT user_id, event_type,
+               LEAD(event_type) OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS nxt
+        FROM events
+    ),
+    pairs AS (
+        SELECT event_type AS cur, nxt FROM seq WHERE nxt IS NOT NULL
+    ),
+    cells AS (
+        SELECT cur, nxt, COUNT(*) AS n_cn FROM pairs GROUP BY cur, nxt
+    ),
+    states AS (
+        SELECT cur, SUM(n_cn) AS n_c, COUNT(*) AS k_next FROM cells
+        GROUP BY cur
+    ),
+    terms AS (
+        SELECT c.cur,
+               c.n_cn * CAST(ROUND(LN(CAST(s.n_c AS DOUBLE) / c.n_cn)
+                                   * 1000000) AS BIGINT) AS t
+        FROM cells c JOIN states s ON s.cur = c.cur
+    )
+    SELECT s.cur, CAST(s.n_c AS BIGINT) AS n_c,
+           CAST(s.k_next AS BIGINT) AS k_next,
+           CAST(SUM(t.t) // s.n_c AS BIGINT) AS h_micro,
+           CAST(ROUND(LN(CAST(s.k_next AS DOUBLE)) * 1000000) AS BIGINT)
+               AS hmax_micro,
+           CAST(CASE WHEN s.k_next = 1 THEN 10000
+                ELSE LEAST(10000,
+                     10000 * (SUM(t.t) // s.n_c)
+                     // CAST(ROUND(LN(CAST(s.k_next AS DOUBLE)) * 1000000)
+                             AS BIGINT))
+                END AS BIGINT) AS uniformity_bp
+    FROM terms t JOIN states s ON s.cur = t.cur
+    GROUP BY s.cur, s.n_c, s.k_next
+    """,
+)
+def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X241: conditional entropy H(next | current) per event state.
+
+    The information content of X76's Markov transition matrix: per
+    current state, H = -sum p(next|cur) ln p(next|cur) in micro-nats,
+    computed as SUM(n_cn * ln(n_c/n_cn)) DIV n_c — counts stay
+    integral, the single ln of a ratio of exact integers rounds once
+    at 1e-6. uniformity_bp = H / ln(k) situates each state between
+    fully deterministic (0) and uniformly random (10000) — the
+    behavioral-predictability dashboard number.
+
+    100 TB shape: one per-user window (partitioned, never global)
+    produces transition pairs; everything after is a <= |types|^2-row
+    relation. The lead window reuses the user shuffle that every
+    sessionization query already pays.
+    """
+    e = table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = (
+        e.select(
+            "user_id",
+            "event_type",
+            F.lead("event_type").over(w).alias("nxt"),
+        )
+        .where(F.col("nxt").isNotNull())
+        .select(F.col("event_type").alias("cur"), "nxt")
+    )
+    cells = pairs.groupBy("cur", "nxt").agg(F.count("*").alias("n_cn"))
+    states = cells.groupBy("cur").agg(
+        F.sum("n_cn").alias("n_c"), F.count("*").alias("k_next")
+    )
+    terms = cells.join(F.broadcast(states), "cur").select(
+        "cur",
+        F.expr(
+            "n_cn * CAST(ROUND(LN(CAST(n_c AS DOUBLE) / n_cn) * 1000000)"
+            " AS BIGINT)"
+        ).alias("t"),
+    )
+    hmax = F.expr(
+        "CAST(ROUND(LN(CAST(k_next AS DOUBLE)) * 1000000) AS BIGINT)"
+    )
+    return (
+        terms.groupBy("cur")
+        .agg(F.sum("t").alias("ts_sum"))
+        .join(F.broadcast(states), "cur")
+        .select(
+            "cur",
+            F.col("n_c").cast("bigint").alias("n_c"),
+            F.col("k_next").cast("bigint").alias("k_next"),
+            F.expr("CAST(ts_sum DIV n_c AS BIGINT)").alias("h_micro"),
+            hmax.alias("hmax_micro"),
+            F.when(F.col("k_next") == 1, F.lit(10000))
+            .otherwise(
+                F.least(
+                    F.lit(10000),
+                    F.expr(
+                        "10000 * (ts_sum DIV n_c)"
+                        " DIV CAST(ROUND(LN(CAST(k_next AS DOUBLE))"
+                        " * 1000000) AS BIGINT)"
+                    ),
+                )
+            )
+            .cast("bigint")
+            .alias("uniformity_bp"),
+        )
+    )
+
+
+# --- X246: capture-recapture population audit -------------------------------
+
+
+@register(
+    "q_capture_recapture",
+    oracle="""
+    WITH s1 AS (
+        SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
+    ),
+    s2 AS (
+        SELECT DISTINCT user_id FROM events WHERE event_type = 'view'
+    ),
+    m AS (
+        SELECT COUNT(*) AS overlap FROM s1 JOIN s2 USING (user_id)
+    ),
+    truth AS (SELECT COUNT(DISTINCT user_id) AS n_true FROM events)
+    SELECT CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n1,
+           CAST((SELECT COUNT(*) FROM s2) AS BIGINT) AS n2,
+           CAST(m.overlap AS BIGINT) AS overlap,
+           CAST(((SELECT COUNT(*) FROM s1) + 1)
+                * ((SELECT COUNT(*) FROM s2) + 1)
+                // (m.overlap + 1) - 1 AS BIGINT) AS n_hat_chapman,
+           CAST(t.n_true AS BIGINT) AS n_true,
+           CAST(10000 * (((SELECT COUNT(*) FROM s1) + 1)
+                         * ((SELECT COUNT(*) FROM s2) + 1)
+                         // (m.overlap + 1) - 1) // t.n_true AS BIGINT)
+               AS coverage_ratio_bp
+    FROM m CROSS JOIN truth t
+    """,
+)
+def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X246: Chapman capture-recapture estimate of the user population.
+
+    Treats 'click' users and 'view' users as two incomplete sightings
+    of the same population; Chapman's bias-corrected Lincoln-Petersen
+    estimator N_hat = (n1+1)(n2+1)/(m+1) - 1 (exact truncating
+    integer arithmetic) is checked against the exact distinct count —
+    the estimator every incomplete-detection audit uses (how many
+    duplicates did BOTH dedup passes miss, how many users does
+    logging drop), here made hash-verifiable against its own ground
+    truth. coverage_ratio_bp ~ 10000 means the two sightings'
+    independence assumption holds.
+
+    100 TB shape: two semi-aggregated distinct sets, one equi-join on
+    user_id for the overlap, exact distinct for truth — all map-side
+    combining aggregates; the estimator arithmetic is 1-row.
+    """
+    e = table(spark, sf_dir, "events")
+    s1 = (
+        e.where(F.col("event_type") == "click")
+        .select("user_id")
+        .distinct()
+    )
+    s2 = (
+        e.where(F.col("event_type") == "view").select("user_id").distinct()
+    )
+    n1 = s1.agg(F.count("*").alias("n1"))
+    n2 = s2.agg(F.count("*").alias("n2"))
+    m = s1.join(s2, "user_id").agg(F.count("*").alias("overlap"))
+    truth = e.agg(F.countDistinct("user_id").alias("n_true"))
+    return (
+        m.crossJoin(F.broadcast(n1))
+        .crossJoin(F.broadcast(n2))
+        .crossJoin(F.broadcast(truth))
+        .select(
+            F.col("n1").cast("bigint").alias("n1"),
+            F.col("n2").cast("bigint").alias("n2"),
+            F.col("overlap").cast("bigint").alias("overlap"),
+            F.expr(
+                "CAST((n1 + 1) * (n2 + 1) DIV (overlap + 1) - 1 AS BIGINT)"
+            ).alias("n_hat_chapman"),
+            F.col("n_true").cast("bigint").alias("n_true"),
+            F.expr(
+                "CAST(10000 * ((n1 + 1) * (n2 + 1) DIV (overlap + 1) - 1)"
+                " DIV n_true AS BIGINT)"
+            ).alias("coverage_ratio_bp"),
+        )
+    )
+
+
+# --- X256: circular peak-hour statistics ------------------------------------
+
+
+@register(
+    "q_circular_hours",
+    oracle="""
+    WITH hrs AS (
+        SELECT event_type,
+               CAST((epoch_us(ts) % 86400000000) // 3600000000 AS BIGINT)
+                   AS hr
+        FROM events
+    ),
+    cells AS (
+        SELECT event_type, hr, COUNT(*) AS n FROM hrs GROUP BY event_type, hr
+    ),
+    vec AS (
+        SELECT event_type,
+               SUM(n) AS n,
+               SUM(n * CAST(ROUND(COS(2 * PI() * hr / 24) * 1000000)
+                            AS BIGINT)) AS sc,
+               SUM(n * CAST(ROUND(SIN(2 * PI() * hr / 24) * 1000000)
+                            AS BIGINT)) AS ss
+        FROM cells GROUP BY event_type
+    )
+    SELECT event_type, CAST(n AS BIGINT) AS n,
+           CAST(sc // n AS BIGINT) AS mean_cos_micro,
+           CAST(ss // n AS BIGINT) AS mean_sin_micro,
+           CAST(CAST(FLOOR(SQRT(CAST((sc // n) * (sc // n)
+                                     + (ss // n) * (ss // n) AS DOUBLE)))
+                     AS BIGINT) // 100 AS BIGINT) AS resultant_bp
+    FROM vec
+    """,
+)
+def q_circular_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X256: circular statistics of event hour-of-day per type.
+
+    'Peak hour' done right: event times live on a 24h circle, so the
+    mean direction is the vector mean of unit vectors at each hour
+    angle — 23:00 and 01:00 average to midnight, where a linear mean
+    says noon. The resultant length R in [0,1] measures concentration
+    (10000 bp = all events at one hour, ~0 = uniform). The 24
+    cos/sin values micro-round once each (the trig analogue of the
+    X197 ln discipline); hour comes from epoch-microsecond MODULAR
+    arithmetic — session-TZ-proof like X201. The statistically sound
+    companion to X201's weekday x hour heatmap.
+
+    100 TB shape: one (type, hour) aggregate — at most 24 cells per
+    type after map-side combine; the vector arithmetic runs on
+    |types| rows.
+    """
+    e = table(spark, sf_dir, "events")
+    hrs = e.select(
+        "event_type",
+        F.expr(
+            "CAST((unix_micros(ts) % 86400000000) DIV 3600000000 AS BIGINT)"
+        ).alias("hr"),
+    )
+    cells = hrs.groupBy("event_type", "hr").agg(F.count("*").alias("n"))
+    vec = cells.groupBy("event_type").agg(
+        F.sum("n").alias("n"),
+        F.sum(
+            F.col("n")
+            * F.expr(
+                "CAST(ROUND(COS(2 * PI() * hr / 24) * 1000000) AS BIGINT)"
+            )
+        ).alias("sc"),
+        F.sum(
+            F.col("n")
+            * F.expr(
+                "CAST(ROUND(SIN(2 * PI() * hr / 24) * 1000000) AS BIGINT)"
+            )
+        ).alias("ss"),
+    )
+    return vec.select(
+        "event_type",
+        F.col("n").cast("bigint").alias("n"),
+        F.expr("CAST(sc DIV n AS BIGINT)").alias("mean_cos_micro"),
+        F.expr("CAST(ss DIV n AS BIGINT)").alias("mean_sin_micro"),
+        F.expr(
+            "CAST(CAST(FLOOR(SQRT(CAST((sc DIV n) * (sc DIV n)"
+            " + (ss DIV n) * (ss DIV n) AS DOUBLE))) AS BIGINT)"
+            " DIV 100 AS BIGINT)"
+        ).alias("resultant_bp"),
+    )
+
+
+# --- X260: event-sequence pattern match -------------------------------------
+
+_SEQ_PATTERNS = [
+    ("view_then_purchase", "%v%p%"),
+    ("signup_click_purchase", "%s%c%p%"),
+    ("error_then_purchase", "%e%p%"),
+]
+
+
+@register(
+    "q_sequence_match",
+    oracle=f"""
+    WITH seqs AS (
+        SELECT user_id,
+               string_agg(substring(event_type, 1, 1), ''
+                          ORDER BY ts, event_id) AS seq
+        FROM events GROUP BY user_id
+    )
+    SELECT pattern, CAST(n_users AS BIGINT) AS n_users,
+           CAST(n_total AS BIGINT) AS n_total
+    FROM (
+        {" UNION ALL ".join(
+            f"SELECT '{name}' AS pattern,"
+            f" SUM(CASE WHEN seq LIKE '{pat}' THEN 1 ELSE 0 END) AS n_users,"
+            f" COUNT(*) AS n_total FROM seqs"
+            for name, pat in _SEQ_PATTERNS
+        )}
+    ) u
+    """,
+)
+def q_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X260: ordered event-sequence pattern matching (sequenceMatch).
+
+    Funnel membership without k self-joins: each user's event history
+    collapses to an ordered type string (first letters, (ts,
+    event_id) order), and 'view then later purchase' is the LIKE
+    pattern %v%p% — the ClickHouse sequenceMatch idea expressed in
+    portable SQL. Three patterns evaluate as conditional counts over
+    ONE sequence relation; contrast X88's window funnel (which
+    re-joins per stage) — this form pays the user shuffle once for
+    any number of patterns.
+
+    100 TB shape: one groupBy(user) with an ordered string aggregate
+    (array_sort of (ts, event_id, char) structs — Spark's
+    deterministic spelling of ORDER BY inside an aggregate), then a
+    scan-local LIKE census. Sequence length is bounded by per-user
+    activity; a terabyte-scale user would want the X8 token-window
+    chunking first.
+    """
+    e = table(spark, sf_dir, "events")
+    seqs = (
+        e.select(
+            "user_id",
+            F.struct(
+                F.col("ts"), F.col("event_id"),
+                F.substring("event_type", 1, 1).alias("ch"),
+            ).alias("rec"),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list("rec")), lambda r: r["ch"]
+                ),
+                "",
+            ).alias("seq")
+        )
+    )
+    parts = [
+        seqs.agg(
+            F.lit(name).alias("pattern"),
+            F.sum(
+                F.when(F.col("seq").like(pat), 1).otherwise(0)
+            ).alias("n_users"),
+            F.count("*").alias("n_total"),
+        )
+        for name, pat in _SEQ_PATTERNS
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out.select(
+        "pattern",
+        F.col("n_users").cast("bigint").alias("n_users"),
+        F.col("n_total").cast("bigint").alias("n_total"),
+    )
+
+
+# --- X264: temporal-profile cosine ------------------------------------------
+
+
+@register(
+    "q_profile_shape_cosine",
+    oracle="""
+    WITH hrs AS (
+        SELECT event_type AS et,
+               CAST((epoch_us(ts) % 86400000000) // 3600000000 AS BIGINT)
+                   AS hr
+        FROM events
+    ),
+    prof AS (SELECT et, hr, COUNT(*) AS n FROM hrs GROUP BY et, hr),
+    pairs AS (
+        SELECT a.et AS type_a, b.et AS type_b,
+               SUM(a.n * b.n) AS dot
+        FROM prof a JOIN prof b ON b.hr = a.hr AND a.et < b.et
+        GROUP BY a.et, b.et
+    ),
+    norms AS (
+        SELECT et, CAST(FLOOR(SQRT(CAST(SUM(n * n) AS DOUBLE))) AS BIGINT)
+                   AS nrm
+        FROM prof GROUP BY et
+    )
+    SELECT p.type_a, p.type_b,
+           CAST(p.dot AS BIGINT) AS dot,
+           CAST(1000 * p.dot // (na.nrm * nb.nrm) AS BIGINT)
+               AS cosine_milli
+    FROM pairs p
+    JOIN norms na ON na.et = p.type_a
+    JOIN norms nb ON nb.et = p.type_b
+    """,
+)
+def q_profile_shape_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X264: cosine similarity between event-type hour-of-day profiles.
+
+    Which event types share temporal shape? Each type's 24-bin
+    hour-of-day histogram is a vector; pairwise cosine = dot /
+    (|a|*|b|) with exact integer dot products, IEEE-exact floored
+    isqrt norms, one truncating DIV to milli. High cosine between
+    'click' and 'view' but not 'error' says errors follow a different
+    clock — the behavioral-fingerprint comparison X256 computes
+    per-type concentration for. TZ-proof modular epoch hours (X201).
+
+    100 TB shape: the fact collapses to <= |types| x 24 cells in one
+    map-side-combining aggregate; the pair join and norms run over
+    that tiny relation.
+    """
+    e = table(spark, sf_dir, "events")
+    prof = (
+        e.select(
+            F.col("event_type").alias("et"),
+            F.expr(
+                "CAST((unix_micros(ts) % 86400000000) DIV 3600000000"
+                " AS BIGINT)"
+            ).alias("hr"),
+        )
+        .groupBy("et", "hr")
+        .agg(F.count("*").alias("n"))
+    )
+    a = prof.alias("a")
+    b = prof.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("b.hr") == F.col("a.hr"))
+            & (F.col("a.et") < F.col("b.et")),
+        )
+        .groupBy(
+            F.col("a.et").alias("type_a"), F.col("b.et").alias("type_b")
+        )
+        .agg(F.sum(F.col("a.n") * F.col("b.n")).alias("dot"))
+    )
+    norms = prof.groupBy("et").agg(
+        F.expr(
+            "CAST(FLOOR(SQRT(CAST(SUM(n * n) AS DOUBLE))) AS BIGINT)"
+        ).alias("nrm")
+    )
+    na = norms.select(
+        F.col("et").alias("type_a"), F.col("nrm").alias("na")
+    )
+    nb = norms.select(
+        F.col("et").alias("type_b"), F.col("nrm").alias("nb")
+    )
+    return (
+        pairs.join(F.broadcast(na), "type_a")
+        .join(F.broadcast(nb), "type_b")
+        .select(
+            "type_a",
+            "type_b",
+            F.col("dot").cast("bigint").alias("dot"),
+            F.expr("CAST(1000 * dot DIV (na * nb) AS BIGINT)").alias(
+                "cosine_milli"
+            ),
+        )
+    )
+
+
+# --- X269: gapped-subsequence support ---------------------------------------
+
+_GAP_PATTERNS = [
+    ("starts_purchase", "p%"),
+    ("ends_error", "%e"),
+    ("adjacent_double_purchase", "%pp%"),
+    ("purchase_error_purchase", "%pep%"),
+    ("signup_first", "s%"),
+]
+
+
+@register(
+    "q_sequence_support",
+    tags=("pairs",),
+    oracle=f"""
+    WITH seqs AS (
+        SELECT user_id,
+               string_agg(substring(event_type, 1, 1), ''
+                          ORDER BY ts, event_id) AS seq
+        FROM events GROUP BY user_id
+    ),
+    tot AS (SELECT COUNT(*) AS n FROM seqs)
+    SELECT pattern, CAST(n_support AS BIGINT) AS n_support,
+           CAST(10000 * n_support // t.n AS BIGINT) AS support_bp
+    FROM (
+        {" UNION ALL ".join(
+            f"SELECT '{name}' AS pattern,"
+            f" SUM(CASE WHEN seq LIKE '{pat}' THEN 1 ELSE 0 END) AS n_support"
+            f" FROM seqs"
+            for name, pat in _GAP_PATTERNS
+        )}
+    ) u CROSS JOIN tot t
+    """,
+)
+def q_sequence_support(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X269: sequence-pattern support census (anchored + adjacency).
+
+    Support counting over per-user ordered type strings for the
+    pattern classes plain funnels can't ask: anchored starts ('first
+    act was a purchase' = LIKE 'p%'), anchored ends ('last act was an
+    error' = '%e'), ADJACENT repeats ('two purchases back-to-back
+    with nothing between' = '%pp%') and mixed shapes ('%pep%') — the
+    support-counting inner loop of GSP/PrefixSpan-style sequential
+    mining (X260 covers the purely-gapped funnel membership; X80 the
+    contiguous 3-gram paths). Five candidates evaluate as conditional
+    counts over ONE sequence relation; support in bp of all users.
+
+    100 TB shape: the user shuffle builds the sequence strings once
+    (X260's plan); each added pattern is one more conditional-sum
+    column — candidate-set growth costs columns, not passes.
+    """
+    e = table(spark, sf_dir, "events")
+    seqs = (
+        e.select(
+            "user_id",
+            F.struct(
+                F.col("ts"),
+                F.col("event_id"),
+                F.substring("event_type", 1, 1).alias("ch"),
+            ).alias("rec"),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list("rec")), lambda r: r["ch"]
+                ),
+                "",
+            ).alias("seq")
+        )
+    )
+    tot = seqs.agg(F.count("*").alias("n"))
+    parts = [
+        seqs.agg(
+            F.lit(name).alias("pattern"),
+            F.sum(F.when(F.col("seq").like(pat), 1).otherwise(0)).alias(
+                "n_support"
+            ),
+        )
+        for name, pat in _GAP_PATTERNS
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out.crossJoin(F.broadcast(tot)).select(
+        "pattern",
+        F.col("n_support").cast("bigint").alias("n_support"),
+        F.expr("CAST(10000 * n_support DIV n AS BIGINT)").alias(
+            "support_bp"
+        ),
+    )
+
+
+# --- X271: churn-threshold sensitivity --------------------------------------
+
+_CHURN_THRESHOLDS_H = [6, 12, 24]
+
+
+@register(
+    "q_churn_sensitivity",
+    oracle=f"""
+    WITH mx AS (SELECT MAX(epoch_us(ts)) AS m FROM events),
+    last_seen AS (
+        SELECT user_id, MAX(epoch_us(ts)) AS l FROM events GROUP BY user_id
+    ),
+    aged AS (
+        SELECT user_id, (x.m - l) // 3600000000 AS idle_h
+        FROM last_seen CROSS JOIN mx x
+    )
+    SELECT threshold_hours,
+           CAST(n_users AS BIGINT) AS n_users,
+           CAST(n_churned AS BIGINT) AS n_churned,
+           CAST(10000 * n_churned // n_users AS BIGINT) AS churn_bp
+    FROM (
+        {" UNION ALL ".join(
+            f"SELECT CAST({t} AS BIGINT) AS threshold_hours,"
+            f" COUNT(*) AS n_users,"
+            f" SUM(CASE WHEN idle_h > {t} THEN 1 ELSE 0 END) AS n_churned"
+            f" FROM aged"
+            for t in _CHURN_THRESHOLDS_H
+        )}
+    ) u
+    """,
+)
+def q_churn_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X271: churn rate under 6/12/24-hour inactivity definitions.
+
+    'Churn' is a definition, not a fact — this table shows how much
+    the rate moves with the inactivity threshold, which should be
+    read BEFORE anyone quotes a churn number (a metric that halves
+    when the cutoff doubles is measuring the cutoff, not the users).
+    Thresholds are hour-scale because the corpus spans 30 days; the
+    operator is the same at any unit. One per-user last-activity
+    aggregate; all thresholds evaluate as conditional counts over
+    the same tiny aged relation. Idle time in TZ-proof epoch micros.
+
+    100 TB shape: one user-grain max aggregate (map-side combine),
+    a broadcast scalar for the corpus max, |thresholds|-row output.
+    """
+    e = table(spark, sf_dir, "events")
+    mx = e.agg(F.max(F.expr("unix_micros(ts)")).alias("m"))
+    last_seen = e.groupBy("user_id").agg(
+        F.max(F.expr("unix_micros(ts)")).alias("l")
+    )
+    aged = last_seen.crossJoin(F.broadcast(mx)).select(
+        F.expr("(m - l) DIV 3600000000").alias("idle_h")
+    )
+    parts = [
+        aged.agg(
+            F.lit(t).cast("bigint").alias("threshold_hours"),
+            F.count("*").alias("n_users"),
+            F.sum(F.when(F.col("idle_h") > t, 1).otherwise(0)).alias(
+                "n_churned"
+            ),
+        )
+        for t in _CHURN_THRESHOLDS_H
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out.select(
+        "threshold_hours",
+        F.col("n_users").cast("bigint").alias("n_users"),
+        F.col("n_churned").cast("bigint").alias("n_churned"),
+        F.expr("CAST(10000 * n_churned DIV n_users AS BIGINT)").alias(
+            "churn_bp"
+        ),
+    )
+
+
+# --- X329: exact Shapley channel attribution ---------------------------------
+
+
+def _fact_expr(col: F.Column) -> F.Column:
+    """0!..8! as a when-chain (coalition sizes are tiny by construction)."""
+    expr = F.when(col == 0, 1)
+    for k, f in [(1, 1), (2, 2), (3, 6), (4, 24), (5, 120), (6, 720), (7, 5040), (8, 40320)]:
+        expr = expr.when(col == k, f)
+    return expr.cast("bigint")
+
+
+@register(
+    "q_shapley_attribution",
+    oracle="""
+    WITH chans AS (
+        SELECT event_type AS channel,
+               ROW_NUMBER() OVER (ORDER BY event_type) - 1 AS idx
+        FROM (SELECT DISTINCT event_type FROM events
+              WHERE event_type <> 'purchase')
+    ),
+    nch AS (SELECT COUNT(*) AS n FROM chans),
+    touches AS (
+        SELECT DISTINCT e.user_id, c.idx
+        FROM events e JOIN chans c ON c.channel = e.event_type
+    ),
+    convs AS (
+        SELECT user_id, MAX(CASE WHEN event_type = 'purchase'
+                                 THEN 1 ELSE 0 END) AS conv
+        FROM events GROUP BY user_id
+    ),
+    masks AS (
+        SELECT user_id, SUM(1 << idx) AS mask FROM touches GROUP BY user_id
+    ),
+    user_mask AS (
+        SELECT cv.user_id, COALESCE(m.mask, 0) AS mask, cv.conv
+        FROM convs cv LEFT JOIN masks m ON m.user_id = cv.user_id
+    ),
+    mask_stats AS (
+        SELECT mask, COUNT(*) AS n_users, SUM(conv) AS n_conv,
+               CAST(ROUND(1000000.0 * SUM(conv) / COUNT(*)) AS BIGINT)
+                   AS v_micro,
+               CAST(bit_count(CAST(mask AS BIGINT)) AS BIGINT) AS s
+        FROM user_mask GROUP BY mask
+    ),
+    fact(k, f) AS (VALUES (0, 1), (1, 1), (2, 2), (3, 6), (4, 24),
+                          (5, 120), (6, 720), (7, 5040), (8, 40320)),
+    terms AS (
+        SELECT c.channel, c.idx,
+               CASE WHEN (m.mask >> c.idx) & 1 = 1
+                    THEN fp.f * fq.f * m.v_micro
+                    ELSE -(fn.f * fm.f * m.v_micro) END AS term,
+               CASE WHEN (m.mask >> c.idx) & 1 = 1
+                    THEN m.n_users ELSE 0 END AS touched
+        FROM mask_stats m
+        CROSS JOIN chans c
+        CROSS JOIN nch
+        LEFT JOIN fact fp ON fp.k = m.s - 1
+        LEFT JOIN fact fq ON fq.k = nch.n - m.s
+        LEFT JOIN fact fn ON fn.k = m.s
+        LEFT JOIN fact fm ON fm.k = nch.n - 1 - m.s
+    ),
+    nfact AS (SELECT f.f AS nf FROM nch JOIN fact f ON f.k = nch.n)
+    SELECT t.channel,
+           CAST(SUM(t.touched) AS BIGINT) AS n_touch_users,
+           CAST(ROUND(CAST(SUM(t.term) AS DOUBLE) / nf.nf) AS BIGINT)
+               AS shapley_micro
+    FROM terms t CROSS JOIN nfact nf
+    GROUP BY t.channel, nf.nf
+    ORDER BY t.channel
+    """,
+)
+def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X329: exact Shapley-value channel attribution.
+
+    Coalition value v(S) = conversion rate (micro) among users whose
+    touched-channel set is exactly S (unobserved coalitions contribute
+    zero). Shapley credit per channel uses the observed-mask
+    decomposition: phi_i = [ sum over observed masks M containing i of
+    (|M|-1)!(n-|M|)! v(M)  -  sum over masks M not containing i of
+    |M|!(n-1-|M|)! v(M) ] / n! — algebraically identical to the
+    textbook subset sum but it only ever touches OBSERVED masks, so no
+    2^n enumeration exists anywhere in the plan. All weights are exact
+    integers; one float division per channel at the end.
+
+    100 TB: one pass to per-user masks (conditional-bit aggregate),
+    one shuffle to the <=2^n mask-stats relation; the Shapley join is
+    |masks| x |channels| — constant-size, broadcast.
+    """
+    e = table(spark, sf_dir, "events")
+    chans = (
+        e.where(F.col("event_type") != "purchase")
+        .select("event_type")
+        .distinct()
+        .select(
+            F.col("event_type").alias("channel"),
+            (F.row_number().over(Window.orderBy("event_type")) - 1).alias("idx"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    n_ch = chans.count()
+    touches = (
+        e.join(F.broadcast(chans), e.event_type == chans.channel)
+        .select("user_id", "idx")
+        .distinct()
+    )
+    convs = e.groupBy("user_id").agg(
+        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
+            "conv"
+        )
+    )
+    masks = touches.groupBy("user_id").agg(
+        F.sum(F.expr("shiftleft(1, idx)")).alias("mask_raw")
+    )
+    user_mask = convs.join(masks, "user_id", "left").select(
+        "user_id",
+        F.coalesce(F.col("mask_raw"), F.lit(0)).cast("bigint").alias("mask"),
+        "conv",
+    )
+    mask_stats = (
+        user_mask.groupBy("mask")
+        .agg(F.count("*").alias("n_users"), F.sum("conv").alias("n_conv"))
+        .select(
+            "mask",
+            "n_users",
+            F.round(F.lit(1000000.0) * F.col("n_conv") / F.col("n_users"))
+            .cast("bigint")
+            .alias("v_micro"),
+            F.bit_count(F.col("mask")).cast("bigint").alias("s"),
+        )
+    )
+    n_fact = [1, 1, 2, 6, 24, 120, 720, 5040, 40320][n_ch]
+    terms = mask_stats.crossJoin(F.broadcast(chans)).select(
+        "channel",
+        F.when(
+            F.expr("(mask >> idx) & 1 = 1"),
+            _fact_expr(F.col("s") - 1)
+            * _fact_expr(F.lit(n_ch) - F.col("s"))
+            * F.col("v_micro"),
+        )
+        .otherwise(
+            -(
+                _fact_expr(F.col("s"))
+                * _fact_expr(F.lit(n_ch) - 1 - F.col("s"))
+                * F.col("v_micro")
+            )
+        )
+        .alias("term"),
+        F.when(F.expr("(mask >> idx) & 1 = 1"), F.col("n_users"))
+        .otherwise(0)
+        .alias("touched"),
+    )
+    return (
+        terms.groupBy("channel")
+        .agg(
+            F.sum("touched").cast("bigint").alias("n_touch_users"),
+            F.round(F.sum("term").cast("double") / F.lit(n_fact))
+            .cast("bigint")
+            .alias("shapley_micro"),
+        )
+        .orderBy("channel")
     )

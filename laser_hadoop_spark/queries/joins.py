@@ -4,7 +4,9 @@ The reference's single join is a map-side broadcast hash join of study
 loci against the reference-panel site map, keyed (CHR,POS) with a
 case-insensitive allele residual (LASERInputCheckMapper.java:53-72,
 239-251); its membership checks are semi/anti joins
-(LASERInputCheckMapper.java:138-144). Each generalizes here.
+(LASERInputCheckMapper.java:138-144). Each generalizes here, plus
+lateral top-k, null-safe equality, nearest-event and point-in-time
+joins.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from pyspark.sql import functions as F
 
 from laser_hadoop_spark.functions.scalar import money_sum, revenue_expr
 from laser_hadoop_spark.registry import register
-from laser_hadoop_spark.tables import table
+from laser_hadoop_spark.tables import register_views, table
 
 
 @register(
@@ -390,4 +392,284 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("l_returnflag").agg(
         F.count("*").alias("n_items"),
         money_sum(F.col("l_extendedprice"), scale=2).alias("sum_price"),
+    )
+
+
+@register(
+    "q_lateral_topk",
+    oracle="""
+    SELECT n_name, s.s_suppkey, ROUND(s.s_acctbal, 4) AS acctbal
+    FROM nation, LATERAL (
+        SELECT s_suppkey, s_acctbal FROM supplier
+        WHERE s_nationkey = n_nationkey
+        ORDER BY s_acctbal DESC, s_suppkey
+        LIMIT 2
+    ) s
+    """,
+)
+def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LATERAL correlated subquery: top-2 suppliers per nation.
+
+    The per-row-subquery formulation of W3's rank+filter; Catalyst
+    decorrelates the LATERAL into a window + filter over one join, so
+    the declarative "for each nation..." spelling costs the same as the
+    hand-written window. Ties broken by unique s_suppkey.
+    """
+    register_views(spark, sf_dir, names=("nation", "supplier"))
+    return spark.sql(
+        """
+        SELECT n_name, s.s_suppkey, ROUND(s.s_acctbal, 4) AS acctbal
+        FROM nation, LATERAL (
+            SELECT s_suppkey, s_acctbal FROM supplier
+            WHERE s_nationkey = n_nationkey
+            ORDER BY s_acctbal DESC, s_suppkey
+            LIMIT 2
+        ) s
+        """
+    )
+
+
+@register(
+    "q_point_in_time_join",
+    oracle="""
+    WITH dim AS (
+        SELECT user_id,
+               epoch_us(ts) AS valid_from_us,
+               COALESCE(epoch_us(LEAD(ts) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id)),
+                   9223372036854775807) AS valid_to_us,
+               CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS state_micro
+        FROM events WHERE event_type = 'signup'
+    ),
+    fact AS (
+        SELECT user_id, event_id, epoch_us(ts) AS t_us,
+               CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS purchase_micro
+        FROM events WHERE event_type = 'purchase'
+    )
+    SELECT f.user_id, f.event_id, f.purchase_micro,
+           d.valid_from_us AS state_from_us, d.state_micro
+    FROM fact f
+    JOIN dim d
+      ON d.user_id = f.user_id
+     AND f.t_us >= d.valid_from_us
+     AND f.t_us < d.valid_to_us
+    """,
+)
+def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Training-data closure: point-in-time (PIT) join against SCD2.
+
+    Each purchase event joins the signup-state interval that was valid
+    AT ITS EVENT TIME — the feature-store join that makes training data
+    leakage-free (a plain latest-value join would leak future state
+    into past examples; this is the feature-lookup rule the as-of join
+    X3 approximates, stated on explicit [from, to) intervals from the
+    X39 SCD2 build). Inner join: purchases before the user's first
+    signup have no valid state and drop out.
+
+    Plan shape: both sides partition on user_id; the interval predicate
+    rides inside the equi-join condition, so the only shuffles are the
+    two user_id exchanges plus the dimension window — no range-join
+    blowup because the equi-key (user) bounds each comparison set.
+    """
+    e = table(spark, sf_dir, "events")
+    from laser_hadoop_spark.functions.scalar import micro_units
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    dim = (
+        e.where(F.col("event_type") == "signup")
+        .select(
+            "user_id",
+            F.unix_micros("ts").alias("valid_from_us"),
+            F.lead(F.unix_micros("ts")).over(w).alias("valid_to_raw"),
+            micro_units(F.col("value")).alias("state_micro"),
+        )
+        .select(
+            "user_id",
+            "valid_from_us",
+            F.coalesce("valid_to_raw", F.lit(2**63 - 1)).alias("valid_to_us"),
+            "state_micro",
+        )
+    )
+    fact = e.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        "event_id",
+        F.unix_micros("ts").alias("t_us"),
+        micro_units(F.col("value")).alias("purchase_micro"),
+    )
+    return (
+        fact.alias("f")
+        .join(
+            dim.alias("d"),
+            (F.col("f.user_id") == F.col("d.user_id"))
+            & (F.col("f.t_us") >= F.col("d.valid_from_us"))
+            & (F.col("f.t_us") < F.col("d.valid_to_us")),
+        )
+        .select(
+            F.col("f.user_id").alias("user_id"),
+            "event_id",
+            "purchase_micro",
+            F.col("d.valid_from_us").alias("state_from_us"),
+            "state_micro",
+        )
+    )
+
+
+@register(
+    "q_nearest_event",
+    oracle="""
+    WITH e AS (
+        SELECT user_id, event_type, event_id, epoch_us(ts) AS t_us
+        FROM events WHERE event_type IN ('error', 'purchase')
+    ),
+    m AS (
+        SELECT *,
+               LAST_VALUE(CASE WHEN event_type = 'purchase' THEN t_us END
+                          IGNORE NULLS) OVER wp AS prev_t,
+               LAST_VALUE(CASE WHEN event_type = 'purchase' THEN event_id END
+                          IGNORE NULLS) OVER wp AS prev_id,
+               FIRST_VALUE(CASE WHEN event_type = 'purchase' THEN t_us END
+                           IGNORE NULLS) OVER wn AS next_t,
+               FIRST_VALUE(CASE WHEN event_type = 'purchase' THEN event_id END
+                           IGNORE NULLS) OVER wn AS next_id
+        FROM e
+        WINDOW wp AS (PARTITION BY user_id ORDER BY t_us, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+               wn AS (PARTITION BY user_id ORDER BY t_us, event_id
+                      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
+    )
+    SELECT event_id AS error_id, user_id,
+           CASE WHEN next_t IS NULL THEN prev_id
+                WHEN prev_t IS NULL THEN next_id
+                WHEN t_us - prev_t <= next_t - t_us THEN prev_id
+                ELSE next_id END AS nearest_purchase_id,
+           CAST(CASE WHEN next_t IS NULL THEN t_us - prev_t
+                WHEN prev_t IS NULL THEN next_t - t_us
+                WHEN t_us - prev_t <= next_t - t_us THEN t_us - prev_t
+                ELSE next_t - t_us END AS BIGINT) AS delta_us
+    FROM m
+    WHERE event_type = 'error' AND (prev_t IS NOT NULL OR next_t IS NOT NULL)
+    """,
+)
+def q_nearest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X104: bidirectional nearest-event join.
+
+    For every error, the temporally NEAREST purchase by the same user —
+    either direction, ties to the earlier one. The as-of join (J8)
+    looks only backward; root-cause triage wants the closest context
+    event on either side. One shuffle on user_id: two frame-bounded
+    conditional window lookups (last purchase before / first after)
+    replace what would naively be two range joins plus an argmin.
+    """
+    ev = table(spark, sf_dir, "events")
+    e = ev.where(F.col("event_type").isin("error", "purchase")).select(
+        "user_id", "event_type", "event_id", F.unix_micros("ts").alias("t_us")
+    )
+    base = Window.partitionBy("user_id").orderBy("t_us", "event_id")
+    wp = base.rowsBetween(Window.unboundedPreceding, -1)
+    wn = base.rowsBetween(1, Window.unboundedFollowing)
+    is_p = F.col("event_type") == "purchase"
+    m = e.select(
+        "*",
+        F.last(F.when(is_p, F.col("t_us")), ignorenulls=True).over(wp).alias("prev_t"),
+        F.last(F.when(is_p, F.col("event_id")), ignorenulls=True).over(wp).alias("prev_id"),
+        F.first(F.when(is_p, F.col("t_us")), ignorenulls=True).over(wn).alias("next_t"),
+        F.first(F.when(is_p, F.col("event_id")), ignorenulls=True).over(wn).alias("next_id"),
+    )
+    d_prev = F.col("t_us") - F.col("prev_t")
+    d_next = F.col("next_t") - F.col("t_us")
+    pick_prev = F.col("next_t").isNull() | (
+        F.col("prev_t").isNotNull() & (d_prev <= d_next)
+    )
+    return (
+        m.where(
+            (F.col("event_type") == "error")
+            & (F.col("prev_t").isNotNull() | F.col("next_t").isNotNull())
+        )
+        .select(
+            F.col("event_id").alias("error_id"),
+            "user_id",
+            F.when(pick_prev, F.col("prev_id")).otherwise(F.col("next_id")).alias(
+                "nearest_purchase_id"
+            ),
+            F.when(pick_prev, d_prev).otherwise(d_next).cast("bigint").alias("delta_us"),
+        )
+    )
+
+
+@register(
+    "q_null_safe_join",
+    oracle="""
+    WITH keyed AS (
+        SELECT c_custkey,
+               CASE WHEN c_acctbal < 0 THEN NULL
+                    ELSE c_nationkey END AS k
+        FROM customer
+    ),
+    dim AS (
+        SELECT n_nationkey AS k, n_name FROM nation
+        UNION ALL SELECT NULL, 'UNATTRIBUTED'
+    ),
+    ns AS (
+        SELECT c.c_custkey, d.n_name
+        FROM keyed c JOIN dim d ON c.k IS NOT DISTINCT FROM d.k
+    ),
+    eq AS (
+        SELECT c.c_custkey FROM keyed c JOIN dim d ON c.k = d.k
+    )
+    SELECT (SELECT COUNT(*) FROM keyed WHERE k IS NULL) AS n_null_keys,
+           (SELECT COUNT(*) FROM ns) AS nullsafe_matches,
+           (SELECT COUNT(*) FROM eq) AS equality_matches,
+           (SELECT COUNT(*) FROM ns WHERE n_name = 'UNATTRIBUTED')
+               AS null_to_null_matches
+    """,
+)
+def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X179: null-safe equality join semantics (<=> vs =).
+
+    The SQL null-handling family beyond q_null_semantics' aggregates:
+    a nullable join key (negative-balance customers get NULL) joined
+    to a dimension carrying an explicit NULL 'UNATTRIBUTED' row. The
+    null-safe operator (Spark `eqNullSafe` / column<=>, DuckDB
+    IS NOT DISTINCT FROM) matches NULL to NULL — the
+    unattributed-bucket pattern every attribution pipeline needs —
+    while plain `=` silently drops every NULL-keyed row. The single
+    result row pins all four counts, so the hash check proves both
+    engines agree on the three-valued-logic corner.
+    """
+    c = table(spark, sf_dir, "customer")
+    keyed = c.select(
+        "c_custkey",
+        F.when(F.col("c_acctbal") < 0, F.lit(None))
+        .otherwise(F.col("c_nationkey"))
+        .alias("k"),
+    )
+    n = table(spark, sf_dir, "nation")
+    dim = n.select(
+        F.col("n_nationkey").alias("k"), F.col("n_name")
+    ).unionByName(
+        n.sparkSession.createDataFrame(
+            [(None, "UNATTRIBUTED")], "k int, n_name string"
+        )
+    )
+    ns = keyed.join(F.broadcast(dim), keyed["k"].eqNullSafe(dim["k"]))
+    eq = keyed.join(F.broadcast(dim), keyed["k"] == dim["k"])
+    n_null = keyed.where(F.col("k").isNull()).agg(
+        F.count("*").alias("n_null_keys")
+    )
+    agg_ns = ns.agg(
+        F.count("*").alias("nullsafe_matches"),
+        F.sum((F.col("n_name") == "UNATTRIBUTED").cast("bigint")).alias(
+            "null_to_null_matches"
+        ),
+    )
+    agg_eq = eq.agg(F.count("*").alias("equality_matches"))
+    return (
+        n_null.crossJoin(agg_ns)
+        .crossJoin(agg_eq)
+        .select(
+            "n_null_keys",
+            "nullsafe_matches",
+            "equality_matches",
+            "null_to_null_matches",
+        )
     )

@@ -340,7 +340,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches only candidate docs (broadcast semi-filter of the shingle
     relation), and every shuffle carries 32-hex digests, never text.
     """
-    from laser_hadoop_spark.queries.round4 import minhash_mins
+    from laser_hadoop_spark.queries.curation import minhash_mins
 
     d = table(spark, sf_dir, "documents")
     t = F.split("text", " ")

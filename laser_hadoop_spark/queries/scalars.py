@@ -1,4 +1,4 @@
-"""Scalar-function queries (SURVEY.md §2.8).
+"""Scalar-function queries (SURVEY.md §2.8), with pivot and unpivot.
 
 The reference's row-parse path is string manipulation: regex split,
 concat join keys, case-insensitive compare, prefix tests, substring,
@@ -249,4 +249,205 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("l_quantity"), 4))
         .withColumnRenamed("O", "qty_O")
         .withColumnRenamed("F", "qty_F")
+    )
+
+
+@register(
+    "q_unpivot",
+    oracle="""
+    SELECT p_partkey, 'retailprice' AS metric, ROUND(p_retailprice, 4) AS val
+    FROM part
+    UNION ALL
+    SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS val
+    FROM part
+    """,
+)
+def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wide→long unpivot (melt) of per-part metrics.
+
+    The inverse of q_pivot; the engine-level form of melting the
+    reference's wide sample-major matrices into long layout (SURVEY.md
+    §7.4 item 3). Spark's native unpivot is a zero-shuffle Expand —
+    each input row emits one output row per value column in the scan
+    stage, so the plan scales linearly with no exchange.
+    """
+    p = table(spark, sf_dir, "part")
+    return p.select(
+        "p_partkey",
+        F.round("p_retailprice", 4).alias("retailprice"),
+        F.col("p_size").cast("double").alias("size"),
+    ).unpivot(
+        ids=["p_partkey"],
+        values=["retailprice", "size"],
+        variableColumnName="metric",
+        valueColumnName="val",
+    )
+
+
+@register(
+    "q_regexp_funcs",
+    oracle=r"""
+    SELECT c_custkey,
+           CAST(regexp_extract(c_name, '#(\d+)', 1) AS BIGINT) AS name_num,
+           regexp_replace(c_name, '\d', '#', 'g') AS masked,
+           CASE WHEN regexp_matches(c_name, '0{3}$') THEN 1 ELSE 0 END
+               AS ends_000
+    FROM customer
+    """,
+)
+def q_regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F-closure: regexp extract / replace (redaction) / match predicate.
+
+    regexp_replace masking every digit is the PII-scrub primitive for
+    document pipelines; all three run inside whole-stage codegen (no
+    Python). DuckDB spelling differs only in the global-replace flag
+    ('g' explicit there, default in Spark).
+    """
+    c = table(spark, sf_dir, "customer")
+    return c.select(
+        "c_custkey",
+        F.regexp_extract("c_name", r"#(\d+)", 1).cast("bigint").alias("name_num"),
+        F.regexp_replace("c_name", r"\d", "#").alias("masked"),
+        F.when(F.col("c_name").rlike(r"0{3}$"), 1).otherwise(0).alias("ends_000"),
+    )
+
+
+_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+
+
+_PIVOT_ALIASES = ["urgent_centi", "high_centi", "medium_centi", "notspec_centi", "low_centi"]
+
+
+@register(
+    "q_pivot_table",
+    oracle="""
+    SELECT n.n_name AS nation,
+           CAST(COALESCE(SUM(CASE WHEN o.o_orderpriority = '1-URGENT'
+               THEN CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) END), 0)
+               AS BIGINT) AS urgent_centi,
+           CAST(COALESCE(SUM(CASE WHEN o.o_orderpriority = '2-HIGH'
+               THEN CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) END), 0)
+               AS BIGINT) AS high_centi,
+           CAST(COALESCE(SUM(CASE WHEN o.o_orderpriority = '3-MEDIUM'
+               THEN CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) END), 0)
+               AS BIGINT) AS medium_centi,
+           CAST(COALESCE(SUM(CASE WHEN o.o_orderpriority = '4-NOT SPECIFIED'
+               THEN CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) END), 0)
+               AS BIGINT) AS notspec_centi,
+           CAST(COALESCE(SUM(CASE WHEN o.o_orderpriority = '5-LOW'
+               THEN CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) END), 0)
+               AS BIGINT) AS low_centi
+    FROM orders o
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN nation n ON n.n_nationkey = c.c_nationkey
+    GROUP BY n.n_name
+    """,
+)
+def q_pivot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X97: PIVOT — nation x order-priority revenue matrix.
+
+    The one core relational operator the suite lacked (unpivot landed
+    in round 1, X18). Spark's RelationalGroupedDataset.pivot with an
+    EXPLICIT value list — never the value-discovering form, which runs
+    a hidden distinct job and breaks down when the pivot column's
+    cardinality surprises you at 100 TB. Revenue in exact centi
+    bigints; absent cells coalesce to 0 on both engines. One shuffle
+    (groupBy nation after two broadcast dim joins).
+    """
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cent = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    base = (
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .select(F.col("n_name").alias("nation"), F.col("o_orderpriority"), cent.alias("cent"))
+    )
+    pivoted = base.groupBy("nation").pivot("o_orderpriority", _PRIORITIES).sum("cent")
+    return pivoted.select(
+        "nation",
+        *[
+            F.coalesce(F.col(f"`{p}`"), F.lit(0)).cast("bigint").alias(a)
+            for p, a in zip(_PRIORITIES, _PIVOT_ALIASES)
+        ],
+    )
+
+
+# --- X217: checksum (Luhn) validation census -------------------------------
+
+
+@register(
+    "q_luhn_checksum",
+    oracle="""
+    WITH ids AS (
+        SELECT o_orderkey,
+               lpad(CAST(o_orderkey AS VARCHAR), 12, '0')
+                   || CAST(o_orderkey % 10 AS VARCHAR) AS acct
+        FROM orders
+    ),
+    digits AS (
+        SELECT o_orderkey, acct, i,
+               CAST(acct[length(acct) - i + 1] AS BIGINT) AS d
+        FROM ids, UNNEST(generate_series(1, 13)) AS u(i)
+    ),
+    terms AS (
+        SELECT o_orderkey, acct,
+               CASE WHEN i % 2 = 0
+                    THEN CASE WHEN d * 2 > 9 THEN d * 2 - 9 ELSE d * 2 END
+                    ELSE d END AS term
+        FROM digits
+    ),
+    checked AS (
+        SELECT o_orderkey, acct, SUM(term) AS s FROM terms
+        GROUP BY o_orderkey, acct
+    )
+    SELECT CAST(CASE WHEN s % 10 = 0 THEN 1 ELSE 0 END AS INT) AS luhn_valid,
+           COUNT(*) AS n_ids,
+           CAST(MIN(o_orderkey) AS BIGINT) AS example_key
+    FROM checked GROUP BY 1
+    """,
+)
+def q_luhn_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X217: Luhn checksum validation census, pure codegen.
+
+    Data-quality gate for id-like columns (card/IMEI/account formats):
+    each synthetic 13-digit account id (zero-padded orderkey + a naive
+    mod-10 suffix) is Luhn-checked — double every second digit from
+    the right, subtract 9 above 9, sum, valid iff sum % 10 == 0 — and
+    the census reports the valid/invalid split. The whole check is a
+    scan-local digit transform + one aggregate: no UDF, no explode
+    shuffle (the digit explode feeds a per-key combine in the same
+    stage at scale the per-row sum folds into aggregate expressions).
+
+    100 TB: scan-local arithmetic; output is a 2-row census.
+    """
+    o = table(spark, sf_dir, "orders")
+    ids = o.select(
+        "o_orderkey",
+        F.concat(
+            F.lpad(F.col("o_orderkey").cast("string"), 12, "0"),
+            (F.col("o_orderkey") % 10).cast("string"),
+        ).alias("acct"),
+    )
+    # sum Luhn terms with a scan-local array fold — no explode needed
+    def digit(i):  # i-th digit from the right, 1-based
+        return F.reverse(F.col("acct")).substr(i, F.lit(1)).cast("bigint")
+
+    def term(i):
+        dbl = digit(i) * 2
+        return F.when(
+            i % 2 == 0, F.when(dbl > 9, dbl - 9).otherwise(dbl)
+        ).otherwise(digit(i))
+
+    s = F.aggregate(
+        F.transform(F.sequence(F.lit(1), F.lit(13)), term),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    checked = ids.select("o_orderkey", s.alias("s"))
+    return checked.groupBy(
+        F.when(F.col("s") % 10 == 0, 1).otherwise(0).cast("int").alias("luhn_valid")
+    ).agg(
+        F.count("*").alias("n_ids"),
+        F.min("o_orderkey").cast("bigint").alias("example_key"),
     )

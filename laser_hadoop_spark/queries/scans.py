@@ -145,3 +145,31 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_sum(F.col("value"), scale=2).alias("sum_value"),
         )
     )
+
+
+@register(
+    "q_variant_json",
+    oracle="""
+    SELECT event_type,
+           CAST(props->>'$.k' AS BIGINT) % 10 AS k_mod,
+           COUNT(*) AS n,
+           CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k
+    FROM events
+    GROUP BY 1, 2
+    """,
+)
+def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured VARIANT extraction (Spark 4 VariantType).
+
+    parse_json builds the binary variant encoding once per row;
+    variant_get then extracts typed fields without re-parsing — the
+    scale path for schema-on-read JSON columns (vs per-access
+    get_json_object string re-parsing in q_json_extract).
+    """
+    e = table(spark, sf_dir, "events")
+    k = F.try_variant_get(F.parse_json("props"), "$.k", "bigint")
+    return (
+        e.select("event_type", k.alias("k"))
+        .groupBy("event_type", (F.col("k") % 10).alias("k_mod"))
+        .agg(F.count("*").alias("n"), F.sum("k").alias("sum_k"))
+    )

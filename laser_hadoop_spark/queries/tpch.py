@@ -3,7 +3,8 @@
 These compose the §2 operators into realistic multi-operator pipelines
 over the star schema — the closest analogue of the reference's
 fixed-shape analytical pipelines (SURVEY.md §0), and the queries whose
-sf0.1 wall-clock the driver benchmarks.
+sf0.1 wall-clock the driver benchmarks. Business analytics beyond the
+TPC-H shapes live in `commerce`.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from pyspark.sql import functions as F
 
 from laser_hadoop_spark.functions.scalar import micro_units, money_sum, revenue_expr
 from laser_hadoop_spark.registry import register
-from laser_hadoop_spark.tables import table
+from laser_hadoop_spark.tables import register_views, table
 
 
 @register(
@@ -1523,3 +1524,69 @@ def q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_parts"),
         F.sum(F.col("r").cast("decimal(38,0)")).cast("bigint").alias("rev_centi"),
     )
+
+
+@register(
+    "q_exists_subquery",
+    oracle="""
+    SELECT o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+      AND o_orderdate <  TIMESTAMP '1995-07-01'
+      AND EXISTS (SELECT 1 FROM lineitem
+                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
+    GROUP BY o_orderpriority
+    """,
+)
+def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 shape: correlated EXISTS over the fact table.
+
+    Declared through the SQL surface; Catalyst rewrites the EXISTS into
+    a left-semi join on l_orderkey with the correlated date predicate as
+    the join condition — one shuffle, no per-row subquery. The
+    membership-test semantics generalize the reference's
+    groups.containsKey probe (LASERInputCheckMapper.java:138-144).
+    """
+    register_views(spark, sf_dir, names=("orders", "lineitem"))
+    return spark.sql(
+        """
+        SELECT o_orderpriority, COUNT(*) AS order_count
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+          AND o_orderdate <  TIMESTAMP '1995-07-01'
+          AND EXISTS (SELECT 1 FROM lineitem
+                      WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
+        GROUP BY o_orderpriority
+        """
+    )
+
+
+@register(
+    "q_order_distribution",
+    oracle="""
+    SELECT c_count, COUNT(*) AS custdist
+    FROM (
+        SELECT c_custkey, COUNT(o_orderkey) AS c_count
+        FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        GROUP BY c_custkey
+    )
+    GROUP BY c_count
+    """,
+)
+def q_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q13 shape: two-level aggregate over a left outer join.
+
+    COUNT(o_orderkey) counts only matched rows, so customers with no
+    orders land in the c_count=0 bucket — the outer-join null-counting
+    subtlety J6 exists to cover. First aggregate shuffles on c_custkey;
+    the second input is |customers| rows, re-aggregated into at most a
+    few hundred buckets.
+    """
+    c = table(spark, sf_dir, "customer")
+    o = table(spark, sf_dir, "orders")
+    per_cust = (
+        c.join(o, c.c_custkey == o.o_custkey, "left")
+        .groupBy("c_custkey")
+        .agg(F.count("o_orderkey").alias("c_count"))
+    )
+    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))

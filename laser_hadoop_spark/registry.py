@@ -93,8 +93,9 @@ def _load_all() -> None:
 # ordering), so dict order is a verification budget. The window is
 # derived, never hand-rotated: queries sort by the last round any
 # CORRECTNESS file lists them (never verified = round 0), oldest first,
-# ties in registration order. A round's file landing rotates the window
-# with no edit; tests/test_ledger.py pins it against the merged ledger.
+# ties by query name, so moving a query between modules never moves it
+# in the window. A round's file landing rotates the window with no edit;
+# tests/test_ledger.py pins it against the merged ledger.
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -113,8 +114,7 @@ def _last_verified_round() -> dict[str, int]:
 def _ordered() -> dict[str, QuerySpec]:
     _load_all()
     last = _last_verified_round()
-    # sorted() is stable: equal rounds keep registration order
-    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=lambda n: last.get(n, 0))}
+    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=lambda n: (last.get(n, 0), n))}
 
 
 def all_queries() -> dict[str, QueryFn]:

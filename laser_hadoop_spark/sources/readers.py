@@ -207,11 +207,6 @@ def sniff_gzip(path: str) -> bool:
     return magic == b"\x1f\x8b"
 
 
-def open_maybe_gzip(path: str):
-    """Text handle for gz or plain files (utility for sinks/tests)."""
-    return gzip.open(path, "rt") if sniff_gzip(path) else open(path)
-
-
 ReaderFn = Callable[..., DataFrame]
 
 # S8: format dispatch registry (TRACEInputCheckMapper.java:323-338).

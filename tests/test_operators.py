@@ -64,6 +64,37 @@ def test_procrustes_recovers_rotation():
     np.testing.assert_allclose(mapped, ref, atol=1e-8)
 
 
+def test_grouped_procrustes_tolerates_duplicate_anchor_ids(spark):
+    """ADVICE r10: a duplicated id inside a group must neither crash
+    the Arrow kernel (length mismatch) nor skew the fit — the fit
+    dedups to first-row-per-id; the projection still maps every study
+    row, duplicates included."""
+    import numpy as np
+
+    from laser_hadoop_spark.operators.pca import grouped_procrustes
+
+    ref_rows = [("g", f"s{i}", [float(i), float(i % 3)]) for i in range(6)]
+    # study = reference rotated 90 degrees, with s2 DUPLICATED on the
+    # study side and s3 duplicated on the reference side
+    rot = np.array([[0.0, -1.0], [1.0, 0.0]])
+    study_rows = [
+        (g, i, [float(x) for x in np.array(pc) @ rot]) for (g, i, pc) in ref_rows
+    ]
+    study_rows.append(study_rows[2])
+    ref_dup = ref_rows + [ref_rows[3]]
+    study = spark.createDataFrame(study_rows, "g string, id string, pc array<double>")
+    ref = spark.createDataFrame(ref_dup, "g string, id string, pc array<double>")
+    out = grouped_procrustes(study, ref, group_col="g", id_col="id").collect()
+    assert len(out) == 7  # every study row, duplicate included
+    by_id = {}
+    for r in out:
+        by_id.setdefault(r["id"], []).append(r["proj"])
+    ref_map = {i: pc for (_, i, pc) in ref_rows}
+    for rid, projs in by_id.items():
+        for proj in projs:
+            np.testing.assert_allclose(proj, ref_map[rid], atol=1e-9)
+
+
 # --- dedup -------------------------------------------------------------------
 
 

@@ -1512,3 +1512,27 @@ def test_spread_scan_stage_holds_only_the_scan(spark, sf_dir, ansi):
                     assert allowed.match(node), (name, node)
                 for fn in ("xxhash64(", "transform(", "split(", "zip_with("):
                     assert fn not in node, (name, fn, node)
+
+
+def test_payloadish_excludes_full_hash_suffix_family():
+    """ADVICE r10: the hash/id-discipline suffix family is excluded at
+    EVERY spelling — `sig_hash#3`, `gram_h2#1`, `vec_idx#4` must stay
+    excluded exactly like `sig_h`/`gram_h`/`vec_id` — while bare
+    payload stems keep flagging."""
+    import re
+
+    from laser_hadoop_spark.plans.pair_audit import PAYLOADISH
+
+    def hit(s: str) -> bool:
+        return any(re.search(p, s) for p in PAYLOADISH)
+
+    for benign in (
+        "sig_h#5", "sig_h2#5", "sig_hash#3", "gram_h#6", "gram_h2#1",
+        "gram_hash#2", "vec_id#8", "vec_idx#4", "vec_hash#1",
+    ):
+        assert not hit(benign), benign
+    for payload in (
+        "sig#2", "sig_a#2", "vec#3", "vec_a#9", "gram#7", "gram_a#1",
+        "sig_hex#1",  # not in the suffix family — stays payload-ish
+    ):
+        assert hit(payload), payload

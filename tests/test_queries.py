@@ -1,7 +1,7 @@
-"""Property tests for the late-round algorithmic kernels (X188/X190):
-pure-Python references on synthetic inputs with KNOWN structure — the
-cross-checks the fixed-corpus oracle equality cannot express (the
-oracle proves Spark == DuckDB; these prove both == the algorithm)."""
+"""Query algorithms against pure-Python references on synthetic inputs
+with KNOWN structure — the cross-checks the fixed-corpus oracle equality
+cannot express (the oracle proves Spark == DuckDB; these prove both ==
+the algorithm)."""
 
 from __future__ import annotations
 

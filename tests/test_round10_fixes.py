@@ -211,26 +211,15 @@ GLOBAL_WINDOW_CENSUS = {
     "operators/cumulative.py": 4,  # two-pass rank: per-bucket relations
     #                                (3 code + 1 docstring mention)
     "sources/sinks.py": 1,         # globally-sorted sink's chunk ids
-    "queries/events_analytics.py": 2,
-    "queries/extras.py": 1,
-    "queries/round4.py": 2,
-    "queries/round4p.py": 3,
-    "queries/round4t.py": 1,
-    "queries/round5d.py": 1,
-    "queries/round5e.py": 2,
-    "queries/round5i.py": 1,
-    "queries/round5j.py": 4,
-    "queries/round5n.py": 4,
-    "queries/round5o.py": 3,
-    "queries/round5q.py": 1,
-    "queries/round5r.py": 1,
-    "queries/round5s.py": 1,
-    "queries/round5t.py": 3,
-    "queries/round5u.py": 3,
-    "queries/round5w.py": 5,
-    "queries/round5y.py": 1,
-    "queries/round5z.py": 3,
-    "queries/round6e.py": 1,       # q_hill_tail: 301-row TakeOrdered rank
+    "queries/commerce.py": 3,
+    "queries/events_analytics.py": 3,
+    "queries/experiments.py": 7,
+    "queries/graph.py": 2,
+    "queries/profiling.py": 1,
+    "queries/stats_estimators.py": 3,  # incl. q_hill_tail: 301-row TakeOrdered rank
+    "queries/stats_tests.py": 5,
+    "queries/text.py": 3,
+    "queries/timeseries.py": 16,
     "queries/tpch.py": 1,
 }
 
@@ -258,7 +247,7 @@ def test_hill_tail_global_window_input_is_takeordered(spark, sf_dir):
     plan, so the bound is asserted on the exposed pre-checkpoint
     relation (_hill_top — the query's own construction site) and the
     checkpointed scan is confirmed in the final plan."""
-    from laser_hadoop_spark.queries.round6e import _hill_top
+    from laser_hadoop_spark.queries.stats_estimators import _hill_top
 
     top_plan = _hill_top(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"TakeOrderedAndProject\(limit=301", top_plan) or re.search(

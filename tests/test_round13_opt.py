@@ -119,7 +119,7 @@ def test_dup_spans_kernel_equals_r12_aggregate_form(spark, sf_dir):
     }
     # the optimized query's kernel output is its window input; rebuild
     # it through the public query and compare the per-doc census
-    from laser_hadoop_spark.queries.round5r import q_dup_spans
+    from laser_hadoop_spark.queries.curation import q_dup_spans
 
     got = q_dup_spans(spark, sf_dir).collect()
     # recompute the census from the legacy hit set (pure Python)

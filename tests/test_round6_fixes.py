@@ -14,9 +14,8 @@ import os
 
 import pytest
 
-from laser_hadoop_spark.queries.round5ab import q_doc_stitch
-from laser_hadoop_spark.queries.round5r import q_dup_spans
-from laser_hadoop_spark.queries.round5v import q_ngram_continuations
+from laser_hadoop_spark.queries.curation import q_doc_stitch, q_dup_spans
+from laser_hadoop_spark.queries.text import q_ngram_continuations
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -87,7 +86,7 @@ def test_jonckheere_uses_wide_decimal(spark, sf_dir):
     # The variance moment nn*nn*(2*nn+3) wraps int64 past ~1.66M orders;
     # the fix routes it through decimal(38,0). Pin that in the plan so a
     # refactor back to bigint arithmetic fails loudly.
-    from laser_hadoop_spark.queries.round5u import q_jonckheere
+    from laser_hadoop_spark.queries.stats_tests import q_jonckheere
 
     df = q_jonckheere(spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()

@@ -151,7 +151,7 @@ def test_scored_blocked_pairs_equals_naive_spelling(spark, tmp_path):
     helper is kernel-agnostic — any scored (s1, s2) relation works)."""
     from pyspark.sql import functions as F
 
-    from laser_hadoop_spark.queries.round5t import _scored_blocked_pairs
+    from laser_hadoop_spark.queries.similarity import _scored_blocked_pairs
 
     vocab = ["alpha", "alpah", "beta", "betta", "gamma", "gama", "delta", "detla"]
     for seed in (1, 2, 3):
