@@ -1,4 +1,4 @@
-"""Streaming operators ST1-ST7 (SURVEY.md §2.9).
+"""Streaming operators ST1-ST24 (SURVEY.md §2.9).
 
 The reference is batch-only (job.waitForCompletion,
 LASERInputValidator.java:129); these close the streaming capability.
@@ -10,6 +10,17 @@ Late-data policy: event-time watermarks bound state; windows emit in
 append mode once the watermark passes window end. State stores scale
 with (keys x open windows), not input size — the property that matters
 at 100 TB/day ingest.
+
+Keyed state: each applyInPandasWithState operator but ST19 is a pure
+``fold(state, rows) -> state`` and an ``emit(key, state)`` run by
+``_keyed_fold``, the only code that touches GroupState. A fold whose
+result depends on row order names its ``order`` columns and sees a
+key's rows of one trigger as ONE frame sorted by them, however Arrow
+chunked the key; an order-free fold sees the chunks as they come. With
+``ttl_ms`` the harness adds the event-time TTL (ST12, ST14): the state
+keeps the newest event time the key ever saw, and once the watermark
+passes it by the TTL the key emits its last snapshot with
+``expired = true`` and drops its state.
 """
 
 from __future__ import annotations
@@ -20,6 +31,7 @@ import tempfile
 import time
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -131,40 +143,123 @@ def stream_stream_join(
     return l.join(r, cond, how)
 
 
+def _set_event_time_timeout(state: GroupState, deadline_ms: int) -> None:
+    """Event-time timeout at ``deadline_ms``. Spark rejects a timeout
+    at-or-before the current watermark, so a key fed only late data
+    expires at the next watermark advance instead."""
+    state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
+
+
+def _duration_to_ms(dur: str) -> int:
+    """Parse the small interval grammar the streaming API uses
+    ("90 seconds", "15 minutes", "1 hour") into milliseconds."""
+    n, unit = dur.strip().split()
+    unit = unit.rstrip("s")
+    scale = {"millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000}
+    if unit not in scale:
+        raise ValueError(f"unsupported TTL unit: {dur!r}")
+    return int(n) * scale[unit]
+
+
+def _keyed_fold(
+    rows: DataFrame,
+    key: str,
+    *,
+    state: str,
+    out: str,
+    init: tuple,
+    fold,
+    emit,
+    order: list[str] | None = None,
+    ttl_ms: int | None = None,
+) -> DataFrame:
+    """Per-key state across triggers: the one applyInPandasWithState
+    kernel of the snapshot operators (update mode).
+
+    Each trigger, a key starts from its stored ``state`` tuple (or
+    ``init``), folds its non-empty rows with ``st = fold(st, pdf)``,
+    stores ``st`` and emits the columns ``emit(key, st)`` (a dict of
+    equal-length lists, schema ``out``). With ``order``, the key's
+    chunks are concatenated and sorted once by those columns, so an
+    order-dependent fold is batching-invariant even for a key that
+    spans Arrow batches; without it each chunk is folded as it comes.
+
+    ``ttl_ms`` adds the event-time TTL: ``rows`` then carry ``t_us``
+    (event micros) and a watermark, the state gains ``last_ms long``
+    and the output ``expired boolean``. last_ms is the newest event
+    time EVER seen, not the trigger's newest, so a later trigger of
+    older (above-watermark) events never moves the deadline earlier.
+    Once the watermark passes last_ms + ttl_ms the timeout call emits
+    the last snapshot with expired = true and removes the state.
+    """
+    ttl = ttl_ms is not None
+
+    def frame(k, st, expired: bool) -> pd.DataFrame:
+        pdf = pd.DataFrame(emit(k, st))
+        if ttl:
+            pdf["expired"] = [expired] * len(pdf)
+        return pdf
+
+    def fn(
+        k: tuple, pdfs: Iterator[pd.DataFrame], gs: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if gs.hasTimedOut:
+            st = gs.get[:-1]
+            gs.remove()
+            yield frame(k[0], st, True)
+            return
+        st, last_ms = init, 0
+        if gs.exists:
+            st = gs.get
+            if ttl:
+                st, last_ms = st[:-1], st[-1]
+        chunks = (pdf for pdf in pdfs if len(pdf))
+        if order:
+            chunks = list(chunks)
+            if chunks:
+                chunks = [pd.concat(chunks).sort_values(order, kind="stable")]
+        for pdf in chunks:
+            st = fold(st, pdf)
+            if ttl:
+                last_ms = max(last_ms, int(pdf["t_us"].max()) // 1000)
+        if ttl:
+            gs.update((*st, last_ms))
+            _set_event_time_timeout(gs, last_ms + ttl_ms)
+        else:
+            gs.update(st)
+        yield frame(k[0], st, False)
+
+    return rows.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=f"{out}, expired boolean" if ttl else out,
+        stateStructType=f"{state}, last_ms long" if ttl else state,
+        outputMode="update",
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout if ttl else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
 RUNNING_MAX_SCHEMA = "user_id bigint, running_max double, n_seen bigint"
 
 
-def _running_max_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """ST6 kernel: arbitrary per-key state (running max + count)."""
-    if state.exists:
-        running_max, n_seen = state.get
-    else:
-        running_max, n_seen = float("-inf"), 0
-    for pdf in pdfs:
-        if len(pdf):
-            running_max = max(running_max, float(pdf["value"].max()))
-            n_seen += len(pdf)
-    state.update((running_max, n_seen))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "running_max": [running_max], "n_seen": [n_seen]}
-    )
+def _running_max_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    running_max, n_seen = st
+    return max(running_max, float(pdf["value"].max())), n_seen + len(pdf)
 
 
 def running_max_per_user(events: DataFrame) -> DataFrame:
     """ST6: applyInPandasWithState — custom stateful op the built-in
     aggregates can't express incrementally (emits per-batch snapshots).
     """
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _running_max_fn,
-            outputStructType=RUNNING_MAX_SCHEMA,
-            stateStructType="running_max double, n_seen bigint",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        events,
+        "user_id",
+        state="running_max double, n_seen bigint",
+        out=RUNNING_MAX_SCHEMA,
+        init=(float("-inf"), 0),
+        fold=_running_max_fold,
+        emit=lambda k, st: {"user_id": [k], "running_max": [st[0]], "n_seen": [st[1]]},
     )
 
 
@@ -382,20 +477,32 @@ def fold_decay(
     return s, n
 
 
-def _decayed_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    s, n = state.get if state.exists else (None, 0)
-    if s is not None and s < 0:
-        s = None  # -1 sentinel for "no events yet"
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = pd.concat(chunks).sort_values(["t_us", "event_id"])
-        v_centi = [int(v) for v in pdf["v_centi"]]
-        s, n = fold_decay(s, n, v_centi)
-    state.update((s if s is not None else -1, n))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "ewma_x32768": [s if s is not None else 0], "n_seen": [n]}
+def _decay_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    s, n = st
+    # n == 0 is "no events yet"; s itself may have either sign
+    return fold_decay(s if n else None, n, [int(v) for v in pdf["v_centi"]])
+
+
+def _decayed(events: DataFrame, *keep: str, ttl_ms: int | None = None) -> DataFrame:
+    """ST10's prep, fold and emit; ``keep`` passes extra columns through
+    (ST12 keeps its watermarked ``ts``)."""
+    prepped = events.select(
+        "user_id",
+        *keep,
+        F.unix_micros("ts").alias("t_us"),
+        "event_id",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_centi"),
+    )
+    return _keyed_fold(
+        prepped,
+        "user_id",
+        state="s long, n long",
+        out=DECAYED_SCHEMA,
+        init=(0, 0),
+        fold=_decay_fold,
+        emit=lambda k, st: {"user_id": [k], "ewma_x32768": [st[0]], "n_seen": [st[1]]},
+        order=["t_us", "event_id"],
+        ttl_ms=ttl_ms,
     )
 
 
@@ -410,71 +517,7 @@ def decayed_counter_per_user(events: DataFrame) -> DataFrame:
     bigints per key — O(keys), never O(events); this is the decayed
     engagement/score counter every feature store keeps online.
     """
-    prepped = events.select(
-        "user_id",
-        F.unix_micros("ts").alias("t_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_centi"),
-    )
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _decayed_fn,
-        outputStructType=DECAYED_SCHEMA,
-        stateStructType="s long, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-DECAYED_TTL_SCHEMA = "user_id long, ewma_x32768 long, n_seen long, expired boolean"
-
-
-def _set_event_time_timeout(state: GroupState, deadline_ms: int) -> None:
-    """Event-time timeout at ``deadline_ms``. Spark rejects a timeout
-    at-or-before the current watermark, so a key fed only late data
-    expires at the next watermark advance instead."""
-    state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
-
-
-def _mk_decayed_ttl_fn(ttl_ms: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            s, n, _last = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "ewma_x32768": [s if s >= 0 else 0],
-                    "n_seen": [n],
-                    "expired": [True],
-                }
-            )
-            return
-        s, n, last_ms = state.get if state.exists else (None, 0, 0)
-        if s is not None and s < 0:
-            s = None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["t_us", "event_id"])
-            s, n = fold_decay(s, n, [int(v) for v in pdf["v_centi"]])
-            # max EVER seen, not the batch max: a later batch carrying
-            # older (but above-watermark) events must never move the
-            # TTL deadline EARLIER — the deadline contract is
-            # "watermark passes the key's newest event + ttl"
-            last_ms = max(last_ms, int(pdf["t_us"].max()) // 1000)
-        state.update((s if s is not None else -1, n, last_ms))
-        _set_event_time_timeout(state, last_ms + ttl_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "ewma_x32768": [s if s is not None else 0],
-                "n_seen": [n],
-                "expired": [False],
-            }
-        )
-
-    return fn
+    return _decayed(events)
 
 
 def decayed_counter_per_user_ttl(
@@ -496,32 +539,9 @@ def decayed_counter_per_user_ttl(
     (LASERInputCheckMapper.java:53-72) as the unbounded-state design
     this replaces.
     """
-    ttl_ms = _duration_to_ms(ttl)
-    prepped = events.select(
-        "user_id",
-        F.col("ts"),
-        F.unix_micros("ts").alias("t_us"),
-        "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_centi"),
-    ).withWatermark("ts", watermark)
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _mk_decayed_ttl_fn(ttl_ms),
-        outputStructType=DECAYED_TTL_SCHEMA,
-        stateStructType="s long, n long, last_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _decayed(
+        with_watermark(events, "ts", watermark), "ts", ttl_ms=_duration_to_ms(ttl)
     )
-
-
-def _duration_to_ms(dur: str) -> int:
-    """Parse the small interval grammar the streaming API uses
-    ("90 seconds", "15 minutes", "1 hour") into milliseconds."""
-    n, unit = dur.strip().split()
-    unit = unit.rstrip("s")
-    scale = {"millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000}
-    if unit not in scale:
-        raise ValueError(f"unsupported TTL unit: {dur!r}")
-    return int(n) * scale[unit]
 
 
 # --- ST11: streaming heavy hitters (bucketed Misra-Gries state) --------------
@@ -530,27 +550,38 @@ HH_STATE_SCHEMA = "tokens array<string>, counts array<long>"
 HH_OUT_SCHEMA = "bucket int, token string, min_count long"
 
 
-def _mk_hh_fn(capacity: int):
-    def hh_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tokens, counts = state.get
-            counters = dict(zip(list(tokens), [int(c) for c in counts]))
-        else:
-            counters = {}
-        for pdf in pdfs:
-            misra_gries_step(counters, pdf["token"], capacity)
-        state.update((list(counters.keys()), list(counters.values())))
-        yield pd.DataFrame(
-            {
-                "bucket": [key[0]] * len(counters),
-                "token": list(counters.keys()),
-                "min_count": list(counters.values()),
-            }
-        )
+def _heavy_hitters(
+    rows: DataFrame, n_buckets: int, capacity: int, ttl_ms: int | None = None
+) -> DataFrame:
+    """ST11's bucketing, fold and emit over ``rows`` with a ``token``
+    column (ST14's also carry ``ts`` and ``t_us``)."""
 
-    return hh_fn
+    def fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+        counters = dict(zip(st[0], (int(c) for c in st[1])))
+        misra_gries_step(counters, pdf["token"], capacity)
+        return list(counters), list(counters.values())
+
+    def emit(k, st: tuple) -> dict:
+        tokens, counts = st
+        return {
+            "bucket": [k] * len(tokens),
+            "token": list(tokens),
+            "min_count": [int(c) for c in counts],
+        }
+
+    bucketed = rows.withColumn(
+        "bucket", (F.abs(F.xxhash64("token")) % n_buckets).cast("int")
+    )
+    return _keyed_fold(
+        bucketed,
+        "bucket",
+        state=HH_STATE_SCHEMA,
+        out=HH_OUT_SCHEMA,
+        init=([], []),
+        fold=fold,
+        emit=emit,
+        ttl_ms=ttl_ms,
+    )
 
 
 def heavy_hitters_stream(
@@ -571,64 +602,7 @@ def heavy_hitters_stream(
     operator. State is O(n_buckets * capacity) — constant in stream
     length.
     """
-    bucketed = tokens.select(
-        F.col("token"),
-        (F.abs(F.xxhash64("token")) % n_buckets).cast("int").alias("bucket"),
-    )
-    return bucketed.groupBy("bucket").applyInPandasWithState(
-        _mk_hh_fn(capacity),
-        outputStructType=HH_OUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-HH_TTL_OUT_SCHEMA = "bucket int, token string, min_count long, expired boolean"
-HH_TTL_STATE_SCHEMA = "tokens array<string>, counts array<long>, last_ms long"
-
-
-def _mk_hh_ttl_fn(capacity: int, ttl_ms: int):
-    def hh_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            tokens, counts, _last = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "bucket": [key[0]] * len(tokens),
-                    "token": list(tokens),
-                    "min_count": [int(c) for c in counts],
-                    "expired": [True] * len(tokens),
-                }
-            )
-            return
-        if state.exists:
-            tokens, counts, last_ms = state.get
-            counters = dict(zip(list(tokens), [int(c) for c in counts]))
-            last_ms = int(last_ms)
-        else:
-            counters = {}
-            last_ms = 0
-        # max EVER seen (persisted), not the batch max — see ST12
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            last_ms = max(last_ms, int(pdf["t_us"].max()) // 1000)
-            misra_gries_step(counters, pdf["token"], capacity)
-        state.update((list(counters.keys()), list(counters.values()), last_ms))
-        _set_event_time_timeout(state, last_ms + ttl_ms)
-        yield pd.DataFrame(
-            {
-                "bucket": [key[0]] * len(counters),
-                "token": list(counters.keys()),
-                "min_count": list(counters.values()),
-                "expired": [False] * len(counters),
-            }
-        )
-
-    return hh_fn
+    return _heavy_hitters(tokens.select("token"), n_buckets, capacity)
 
 
 def heavy_hitters_stream_ttl(
@@ -654,20 +628,10 @@ def heavy_hitters_stream_ttl(
     so a re-warming bucket starts a fresh horizon. Event-time timeout
     keeps replay deterministic, exactly as ST12 argues for ST10.
     """
-    ttl_ms = _duration_to_ms(ttl)
-    bucketed = events.select(
-        F.col("ts"),
-        F.unix_micros("ts").alias("t_us"),
-        F.col(token_col).alias("token"),
-        (F.abs(F.xxhash64(token_col)) % n_buckets).cast("int").alias("bucket"),
-    ).withWatermark("ts", watermark)
-    return bucketed.groupBy("bucket").applyInPandasWithState(
-        _mk_hh_ttl_fn(capacity, ttl_ms),
-        outputStructType=HH_TTL_OUT_SCHEMA,
-        stateStructType=HH_TTL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    rows = with_watermark(events, "ts", watermark).select(
+        "ts", F.unix_micros("ts").alias("t_us"), F.col(token_col).alias("token")
     )
+    return _heavy_hitters(rows, n_buckets, capacity, _duration_to_ms(ttl))
 
 
 # --- ST15: streaming KMV (bottom-k) distinct sketch ---------------------------
@@ -675,28 +639,6 @@ def heavy_hitters_stream_ttl(
 KMV_OUT_SCHEMA = "grp string, n_sketch int, kmv_est long"
 KMV_STATE_SCHEMA = "hashes array<long>"
 _KMV_SCALE = 1 << 48  # 48-bit hashes: (k-1)<<48 stays inside int64
-
-
-def _mk_kmv_fn(k: int):
-    def kmv_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        hashes = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            hashes.update(int(h) for h in pdf["h"])
-        # bottom-k merge: the sketch of a union is the k smallest of
-        # the union of sketches — state stays O(k) across triggers
-        kept = sorted(hashes)[:k]
-        state.update((kept,))
-        if len(kept) >= k:
-            est = (k - 1) * _KMV_SCALE // kept[k - 1]
-        else:
-            est = len(kept)  # exact below the sketch threshold
-        yield pd.DataFrame(
-            {"grp": [key[0]], "n_sketch": [len(kept)], "kmv_est": [int(est)]}
-        )
-
-    return kmv_fn
 
 
 def kmv_distinct_stream(
@@ -721,6 +663,22 @@ def kmv_distinct_stream(
     viable at 100 TB/day key cardinalities where exact streaming
     COUNT(DISTINCT) state grows without bound.
     """
+
+    def fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+        # bottom-k merge: the sketch of a union is the k smallest of
+        # the union of sketches — state stays O(k) across triggers
+        hashes = {int(h) for h in st[0]}
+        hashes.update(int(h) for h in pdf["h"])
+        return (sorted(hashes)[:k],)
+
+    def emit(grp, st: tuple) -> dict:
+        kept = st[0]
+        if len(kept) >= k:
+            est = (k - 1) * _KMV_SCALE // int(kept[k - 1])
+        else:
+            est = len(kept)  # exact below the sketch threshold
+        return {"grp": [grp], "n_sketch": [len(kept)], "kmv_est": [int(est)]}
+
     hashed = events.select(
         F.col(group_col).alias("grp"),
         F.expr(
@@ -728,12 +686,14 @@ def kmv_distinct_stream(
             f"16, 10) AS BIGINT)"
         ).alias("h"),
     )
-    return hashed.groupBy("grp").applyInPandasWithState(
-        _mk_kmv_fn(k),
-        outputStructType=KMV_OUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        hashed,
+        "grp",
+        state=KMV_STATE_SCHEMA,
+        out=KMV_OUT_SCHEMA,
+        init=([],),
+        fold=fold,
+        emit=emit,
     )
 
 
@@ -746,39 +706,31 @@ WMD_OUT_SCHEMA = (
 WMD_STATE_SCHEMA = "max_em long, n_events long, n_late long, max_delay_s long"
 
 
-def _wmd_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
-    if state.exists:
-        max_em, n_events, n_late, max_delay_s = state.get
-    else:
-        max_em, n_events, n_late, max_delay_s = -1, 0, 0, 0
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values("event_id")
-        em = pdf["em"].to_numpy(dtype="int64")
-        prev = np.maximum.accumulate(
-            np.concatenate([np.array([max_em], dtype="int64"), em])
-        )[:-1]
-        delay_us = np.maximum(prev - em, 0)
-        n_events += len(em)
-        n_late += int((delay_us > 0).sum())
-        max_delay_s = max(max_delay_s, int(delay_us.max()) // 1_000_000)
-        max_em = max(max_em, int(em.max()))
-    state.update((max_em, n_events, n_late, max_delay_s))
-    rec = (1 << int(max_delay_s).bit_length()) if max_delay_s > 0 else 0
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n_events],
-            "n_late": [n_late],
-            "max_delay_s": [max_delay_s],
-            "watermark_rec_s": [rec],
-        }
+def _wmd_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    max_em, n_events, n_late, max_delay_s = st
+    em = pdf["em"].to_numpy(dtype="int64")
+    prev = np.maximum.accumulate(
+        np.concatenate([np.array([max_em], dtype="int64"), em])
+    )[:-1]
+    delay_us = np.maximum(prev - em, 0)
+    return (
+        max(max_em, int(em.max())),
+        n_events + len(em),
+        n_late + int((delay_us > 0).sum()),
+        max(max_delay_s, int(delay_us.max()) // 1_000_000),
     )
+
+
+def _wmd_emit(k, st: tuple) -> dict:
+    _max_em, n_events, n_late, max_delay_s = st
+    rec = (1 << int(max_delay_s).bit_length()) if max_delay_s > 0 else 0
+    return {
+        "user_id": [k],
+        "n_events": [n_events],
+        "n_late": [n_late],
+        "max_delay_s": [max_delay_s],
+        "watermark_rec_s": [rec],
+    }
 
 
 def watermark_delay_stream(
@@ -798,7 +750,7 @@ def watermark_delay_stream(
     job turns watermark sizing from a guess into a monitored number.
 
     State is 4 longs per user — constant in stream length; the
-    arithmetic is vectorized numpy over each Arrow batch
+    arithmetic is vectorized numpy over the trigger's rows
     (running-max accumulate), no per-row Python in the hot path.
     Batching-invariant so long as arrival order follows event_id, the
     same determinism contract the batch audit uses.
@@ -808,12 +760,15 @@ def watermark_delay_stream(
         F.col("event_id"),
         F.unix_micros("ts").alias("em"),
     )
-    return timed.groupBy("user_id").applyInPandasWithState(
-        _wmd_fn,
-        outputStructType=WMD_OUT_SCHEMA,
-        stateStructType=WMD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        timed,
+        "user_id",
+        state=WMD_STATE_SCHEMA,
+        out=WMD_OUT_SCHEMA,
+        init=(-1, 0, 0, 0),
+        fold=_wmd_fold,
+        emit=_wmd_emit,
+        order=["event_id"],
     )
 
 
@@ -835,51 +790,16 @@ def _cms_hash(i: int, k: int) -> int:
     return int(h, 16) % CMS_W
 
 
-def _mk_cms_fn(probes: list[int]):
-    def cms_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            counters = np.array(state.get[0], dtype="int64")
-            n_total = state.get[1]
-        else:
-            counters = np.zeros(CMS_D * CMS_W, dtype="int64")
-            n_total = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            ks = pdf["k"].to_numpy(dtype="int64")
-            n_total += len(ks)
-            # vectorized md5 is not available; hash each DISTINCT key
-            # once per row, then scatter-add the multiplicities
-            uniq, counts = np.unique(ks, return_counts=True)
-            for i in range(CMS_D):
-                buckets = np.array(
-                    [_cms_hash(i, int(k)) for k in uniq], dtype="int64"
-                )
-                np.add.at(counters, i * CMS_W + buckets, counts)
-        state.update((counters.tolist(), int(n_total)))
-        ests = [
-            int(
-                min(
-                    counters[i * CMS_W + _cms_hash(i, p)]
-                    for i in range(CMS_D)
-                )
-            )
-            for p in probes
-        ]
-        yield pd.DataFrame(
-            {
-                "grp": [key[0]] * len(probes),
-                "probe": probes,
-                "est": ests,
-                "n_total": [int(n_total)] * len(probes),
-            }
-        )
-
-    return cms_fn
+def _cms_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    counters = np.array(st[0], dtype="int64")
+    ks = pdf["k"].to_numpy(dtype="int64")
+    # vectorized md5 is not available; hash each DISTINCT key once per
+    # row, then scatter-add the multiplicities
+    uniq, counts = np.unique(ks, return_counts=True)
+    for i in range(CMS_D):
+        buckets = np.array([_cms_hash(i, int(k)) for k in uniq], dtype="int64")
+        np.add.at(counters, i * CMS_W + buckets, counts)
+    return counters.tolist(), int(st[1]) + len(ks)
 
 
 def countmin_stream(
@@ -908,15 +828,31 @@ def countmin_stream(
     """
     if probes is None:
         probes = list(range(8))
+
+    def emit(grp, st: tuple) -> dict:
+        counters, n_total = st
+        ests = [
+            int(min(counters[i * CMS_W + _cms_hash(i, p)] for i in range(CMS_D)))
+            for p in probes
+        ]
+        return {
+            "grp": [grp] * len(probes),
+            "probe": probes,
+            "est": ests,
+            "n_total": [int(n_total)] * len(probes),
+        }
+
     keyed = events.select(
         F.col(group_col).alias("grp"), F.col(key_col).alias("k")
     )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        _mk_cms_fn(probes),
-        outputStructType=CMS_OUT_SCHEMA,
-        stateStructType=CMS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        "grp",
+        state=CMS_STATE_SCHEMA,
+        out=CMS_OUT_SCHEMA,
+        init=([0] * (CMS_D * CMS_W), 0),
+        fold=_cms_fold,
+        emit=emit,
     )
 
 
@@ -926,41 +862,6 @@ FUNNEL_OUT_SCHEMA = (
     "user_id long, stage int, n_stages int, completed int, n_events long"
 )
 FUNNEL_STATE_SCHEMA = "stage int, n_events long"
-
-
-def _mk_funnel_fn(stages: list[str]):
-    def funnel_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stage, n_events = state.get
-        else:
-            stage, n_events = 0, 0
-        k = len(stages)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("event_id")
-            n_events += len(pdf)
-            if stage < k:
-                # advance the subsequence automaton through this batch
-                for et in pdf["event_type"]:
-                    if et == stages[stage]:
-                        stage += 1
-                        if stage == k:
-                            break
-        state.update((int(stage), int(n_events)))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "stage": [int(stage)],
-                "n_stages": [k],
-                "completed": [1 if stage == k else 0],
-                "n_events": [int(n_events)],
-            }
-        )
-
-    return funnel_fn
 
 
 def funnel_stream(
@@ -989,15 +890,39 @@ def funnel_stream(
     """
     if stages is None:
         stages = ["view", "click", "purchase"]
+    k = len(stages)
+
+    def fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+        stage, n_events = st
+        for et in pdf["event_type"]:
+            if stage == k:
+                break
+            if et == stages[stage]:
+                stage += 1
+        return int(stage), int(n_events) + len(pdf)
+
+    def emit(user, st: tuple) -> dict:
+        stage, n_events = st
+        return {
+            "user_id": [user],
+            "stage": [stage],
+            "n_stages": [k],
+            "completed": [1 if stage == k else 0],
+            "n_events": [n_events],
+        }
+
     keyed = events.select(
         F.col(user_col).alias("user_id"), F.col("event_id"), F.col("event_type")
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _mk_funnel_fn(stages),
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        "user_id",
+        state=FUNNEL_STATE_SCHEMA,
+        out=FUNNEL_OUT_SCHEMA,
+        init=(0, 0),
+        fold=fold,
+        emit=emit,
+        order=["event_id"],
     )
 
 
@@ -1237,40 +1162,12 @@ def _l2q_bucket(v: int) -> int:
     return min(L2Q_BUCKETS - 1, v.bit_length())
 
 
-def _mk_l2q_fn(pcts: list[int]):
-    def l2q_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            counts = np.array(state.get[0], dtype="int64")
-            n_total = state.get[1]
-        else:
-            counts = np.zeros(L2Q_BUCKETS, dtype="int64")
-            n_total = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            vs = pdf["v"].to_numpy(dtype="int64")
-            n_total += len(vs)
-            bks = np.array([_l2q_bucket(int(v)) for v in vs], dtype="int64")
-            np.add.at(counts, bks, 1)
-        state.update((counts.tolist(), int(n_total)))
-        cum = np.cumsum(counts)
-        out = {"grp": [], "pct": [], "bucket": [], "est_lo": [], "est_hi": [], "n_total": []}
-        for pct in pcts:
-            k = (n_total * pct + 99) // 100  # ceil rank
-            b = int(np.searchsorted(cum, max(k, 1)))
-            out["grp"].append(key[0])
-            out["pct"].append(pct)
-            out["bucket"].append(b)
-            out["est_lo"].append(0 if b == 0 else 1 << (b - 1))
-            out["est_hi"].append(0 if b == 0 else (1 << b) - 1)
-            out["n_total"].append(int(n_total))
-        yield pd.DataFrame(out)
-
-    return l2q_fn
+def _l2q_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    counts = np.array(st[0], dtype="int64")
+    vs = pdf["v"].to_numpy(dtype="int64")
+    bks = np.array([_l2q_bucket(int(v)) for v in vs], dtype="int64")
+    np.add.at(counts, bks, 1)
+    return counts.tolist(), int(st[1]) + len(vs)
 
 
 def log2_quantile_stream(
@@ -1301,16 +1198,34 @@ def log2_quantile_stream(
     """
     if pcts is None:
         pcts = [50, 90, 99]
+
+    def emit(grp, st: tuple) -> dict:
+        counts, n_total = st
+        cum = np.cumsum(np.array(counts, dtype="int64"))
+        out = {"grp": [], "pct": [], "bucket": [], "est_lo": [], "est_hi": [], "n_total": []}
+        for pct in pcts:
+            k = (n_total * pct + 99) // 100  # ceil rank
+            b = int(np.searchsorted(cum, max(k, 1)))
+            out["grp"].append(grp)
+            out["pct"].append(pct)
+            out["bucket"].append(b)
+            out["est_lo"].append(0 if b == 0 else 1 << (b - 1))
+            out["est_hi"].append(0 if b == 0 else (1 << b) - 1)
+            out["n_total"].append(int(n_total))
+        return out
+
     keyed = events.select(
         F.col(group_col).alias("grp"),
         F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long").alias("v"),
     )
-    return keyed.groupBy("grp").applyInPandasWithState(
-        _mk_l2q_fn(pcts),
-        outputStructType=L2Q_OUT_SCHEMA,
-        stateStructType=L2Q_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        "grp",
+        state=L2Q_STATE_SCHEMA,
+        out=L2Q_OUT_SCHEMA,
+        init=([0] * L2Q_BUCKETS, 0),
+        fold=_l2q_fold,
+        emit=emit,
     )
 
 
@@ -1347,34 +1262,6 @@ def fold_page_hinkley(
     return n, s, m, mmin, maxgap
 
 
-def _mk_ph_fn(delta: int, lam: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = state.get if state.exists else None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(["t_us", "event_id"])
-            st = fold_page_hinkley(
-                st, [int(v) for v in pdf["v_centi"]], delta
-            )
-        if st is None:
-            st = (0, 0, 0, 0, 0)
-        state.update(st)
-        n, s, m, mmin, maxgap = st
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_seen": [n],
-                "ph_gap_centi": [m - mmin],
-                "max_gap_centi": [maxgap],
-                "alarmed": [maxgap > lam],
-            }
-        )
-
-    return fn
-
-
 def page_hinkley_stream(
     events: DataFrame, delta_centi: int = 5_000, lambda_centi: int = 100_000
 ) -> DataFrame:
@@ -1392,18 +1279,34 @@ def page_hinkley_stream(
     bit-for-bit. Emits the current and max gap plus the alarm flag in
     update mode — the drift page a model monitor tails.
     """
+
+    def emit(user, st: tuple) -> dict:
+        n, _s, m, mmin, maxgap = st
+        return {
+            "user_id": [user],
+            "n_seen": [n],
+            "ph_gap_centi": [m - mmin],
+            "max_gap_centi": [maxgap],
+            "alarmed": [maxgap > lambda_centi],
+        }
+
     prepped = events.select(
         "user_id",
         F.unix_micros("ts").alias("t_us"),
         "event_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_centi"),
     )
-    return prepped.groupBy("user_id").applyInPandasWithState(
-        _mk_ph_fn(delta_centi, lambda_centi),
-        outputStructType=PH_OUT_SCHEMA,
-        stateStructType=PH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        prepped,
+        "user_id",
+        state=PH_STATE_SCHEMA,
+        out=PH_OUT_SCHEMA,
+        init=(0, 0, 0, 0, 0),
+        fold=lambda st, pdf: fold_page_hinkley(
+            st, [int(v) for v in pdf["v_centi"]], delta_centi
+        ),
+        emit=emit,
+        order=["t_us", "event_id"],
     )
 
 
@@ -1439,28 +1342,23 @@ def hll_estimate(regs: list[int]) -> int:
     return (709 * HLLS_REGS * HLLS_REGS * (1 << 50)) // (1000 * ssum)
 
 
-def _hlls_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        regs, n_events = list(state.get[0]), state.get[1]
-    else:
-        regs, n_events = [0] * HLLS_REGS, 0
-    for pdf in pdfs:
-        n_events += len(pdf)
-        for r, rho in zip(pdf["reg"], pdf["rho"]):
-            r = int(r)
-            if rho > regs[r]:
-                regs[r] = int(rho)
-    state.update((regs, int(n_events)))
-    yield pd.DataFrame(
-        {
-            "grp": [key[0]],
-            "hll_est": [hll_estimate(regs)],
-            "n_events": [int(n_events)],
-            "regs": [regs],
-        }
-    )
+def _hlls_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    regs = [int(r) for r in st[0]]
+    for r, rho in zip(pdf["reg"], pdf["rho"]):
+        r = int(r)
+        if rho > regs[r]:
+            regs[r] = int(rho)
+    return regs, int(st[1]) + len(pdf)
+
+
+def _hlls_emit(grp, st: tuple) -> dict:
+    regs, n_events = st
+    return {
+        "grp": [grp],
+        "hll_est": [hll_estimate(regs)],
+        "n_events": [int(n_events)],
+        "regs": [list(regs)],
+    }
 
 
 def hll_distinct_stream(
@@ -1498,12 +1396,14 @@ def hll_distinct_stream(
         F.expr(_HLLS_REG_EXPR).cast("int").alias("reg"),
         F.expr(_HLLS_RHO_EXPR).cast("int").alias("rho"),
     )
-    return prepped.groupBy("grp").applyInPandasWithState(
-        _hlls_fn,
-        outputStructType=HLLS_OUT_SCHEMA,
-        stateStructType=HLLS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        prepped,
+        "grp",
+        state=HLLS_STATE_SCHEMA,
+        out=HLLS_OUT_SCHEMA,
+        init=([0] * HLLS_REGS, 0),
+        fold=_hlls_fold,
+        emit=_hlls_emit,
     )
 
 
@@ -1544,39 +1444,26 @@ def bloom_fp_rate_micro(words: list[int], k: int = BLOOM_K) -> int:
     return round(1000000 * (bits / BLOOM_M) ** k)
 
 
-def _bloom_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        words, n_events, n_dups = (
-            list(state.get[0]),
-            state.get[1],
-            state.get[2],
-        )
-    else:
-        words, n_events, n_dups = [0] * (BLOOM_M // 64), 0, 0
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values("event_id")  # ST16 determinism contract
-        n_events += len(pdf)
-        positions = [
-            [int(pdf[f"p{i}"].iloc[r]) for i in range(BLOOM_K)]
-            for r in range(len(pdf))
-        ]
-        words, d = bloom_fold(words, positions)
-        n_dups += d
-    state.update((words, int(n_events), int(n_dups)))
+def _bloom_rows_fold(st: tuple, pdf: pd.DataFrame) -> tuple:
+    words, n_events, n_dups = st
+    positions = pdf[[f"p{i}" for i in range(BLOOM_K)]].to_numpy().tolist()
+    words, d = bloom_fold(list(words), positions)
+    # the state stores signed longs: bit 63 rides as the sign bit, which
+    # bloom_fold's & and | treat the same way
+    words = [w - (1 << 64) if w >= 1 << 63 else w for w in words]
+    return words, int(n_events) + len(pdf), int(n_dups) + d
+
+
+def _bloom_emit(grp, st: tuple) -> dict:
+    words, n_events, n_dups = st
     bits = sum(bin(w & 0xFFFFFFFFFFFFFFFF).count("1") for w in words)
-    yield pd.DataFrame(
-        {
-            "grp": [key[0]],
-            "n_events": [int(n_events)],
-            "n_probable_dups": [int(n_dups)],
-            "bits_set": [int(bits)],
-            "fp_rate_micro": [bloom_fp_rate_micro(words)],
-        }
-    )
+    return {
+        "grp": [grp],
+        "n_events": [int(n_events)],
+        "n_probable_dups": [int(n_dups)],
+        "bits_set": [int(bits)],
+        "fp_rate_micro": [bloom_fp_rate_micro(words)],
+    }
 
 
 def bloom_dedup_stream(
@@ -1624,10 +1511,13 @@ def bloom_dedup_stream(
     prepped = events.select(
         F.col(group_col).alias("grp"), "event_id", *pos_cols
     )
-    return prepped.groupBy("grp").applyInPandasWithState(
-        _bloom_fn,
-        outputStructType=BLOOM_OUT_SCHEMA,
-        stateStructType=BLOOM_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        prepped,
+        "grp",
+        state=BLOOM_STATE_SCHEMA,
+        out=BLOOM_OUT_SCHEMA,
+        init=([0] * (BLOOM_M // 64), 0, 0),
+        fold=_bloom_rows_fold,
+        emit=_bloom_emit,
+        order=["event_id"],  # ST16 determinism contract
     )

@@ -1,8 +1,11 @@
-"""Streaming tests ST1-ST7 (SURVEY.md §2.9): file-source streams with
+"""Streaming tests ST1-ST24 (SURVEY.md §2.9): file-source streams with
 availableNow triggers into memory sinks — deterministic, no timing races.
 """
 
 from __future__ import annotations
+
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,6 +56,24 @@ def _run(spark, sdf, name, mode="append"):
 
 def _read_stream(spark, stream_dir):
     return spark.readStream.schema(EVENTS_DDL).parquet(stream_dir)
+
+
+def _write_batches(spark, d, batches) -> None:
+    """Append each batch of event rows (``ts`` as a string) to ``d`` as
+    one parquet file, with mtimes in batch order, so a stream read with
+    maxFilesPerTrigger=1 folds one batch per trigger."""
+    seen: set[str] = set()
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(
+            rows, "event_id long, ts string, user_id long, event_type string, value double"
+        ).withColumn("ts", F.to_timestamp("ts"))
+        df.coalesce(1).write.mode("append").parquet(str(d))
+        t = time.time() - 100 + i * 10  # distinct mtimes: batch order
+        for f in os.listdir(d):
+            p = os.path.join(str(d), f)
+            if f.endswith(".parquet") and p not in seen:
+                seen.add(p)
+                os.utime(p, (t, t))
 
 
 def test_tumbling_with_watermark_streaming(spark, tmp_path):
@@ -349,9 +370,6 @@ def test_decayed_counter_ttl_expires_cold_keys(spark, tmp_path):
     watermark (10 min delay) passes user 1's last event + 1 h TTL, the
     timeout invocation emits a final expired=true snapshot with the
     exact folded state, and the still-active user 2 never expires."""
-    import os
-    import time
-
     from laser_hadoop_spark.streaming.ops import decayed_counter_per_user_ttl
 
     d = tmp_path / "in"
@@ -368,18 +386,7 @@ def test_decayed_counter_ttl_expires_cold_keys(spark, tmp_path):
         # batch 2: watermark 12:20 > 11:00 -> user 1 times out here
         [(5, "2024-01-01 15:00:00", 2, "click", 7.0)],
     ]
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts string, user_id long, event_type string, value double"
-        ).withColumn("ts", F.to_timestamp("ts"))
-        df.coalesce(1).write.mode("append").parquet(str(d))
-        t = time.time() - 100 + i * 10  # distinct mtimes: batch order
-        for f in os.listdir(d):
-            p = os.path.join(str(d), f)
-            if f.endswith(".parquet") and p not in seen:
-                seen.add(p)
-                os.utime(p, (t, t))
+    _write_batches(spark, d, batches)
     stream = (
         spark.readStream.schema(EVENTS_DDL)
         .option("maxFilesPerTrigger", 1)
@@ -431,9 +438,6 @@ def test_heavy_hitters_stream_ttl_expires_cold_buckets(spark, tmp_path):
     expires. Both token streams flow through ONE operator instance —
     bucket separation comes solely from the xxhash64 shard key
     (asserted as a fixture precondition below)."""
-    import os
-    import time
-
     from laser_hadoop_spark.streaming.ops import heavy_hitters_stream_ttl
 
     d = tmp_path / "in"
@@ -452,18 +456,7 @@ def test_heavy_hitters_stream_ttl_expires_cold_buckets(spark, tmp_path):
         # click's bucket times out
         [(5, "2024-01-01 15:00:00", 2, "view", 1.0)],
     ]
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts string, user_id long, event_type string, value double"
-        ).withColumn("ts", F.to_timestamp("ts"))
-        df.coalesce(1).write.mode("append").parquet(str(d))
-        t = time.time() - 100 + i * 10
-        for f in os.listdir(d):
-            p = os.path.join(str(d), f)
-            if f.endswith(".parquet") and p not in seen:
-                seen.add(p)
-                os.utime(p, (t, t))
+    _write_batches(spark, d, batches)
     # precondition: the two tokens shard to different buckets
     from pyspark.sql import functions as SF
     b = {
@@ -499,9 +492,6 @@ def test_decayed_counter_ttl_deadline_never_moves_earlier(spark, tmp_path):
     the WRONG deadline 10:55, before the right one 11:00 — must NOT
     expire the key; the key expires only once the watermark passes
     11:00, with the late event folded in."""
-    import os
-    import time
-
     from laser_hadoop_spark.streaming.ops import decayed_counter_per_user_ttl
 
     d = tmp_path / "in"
@@ -521,18 +511,7 @@ def test_decayed_counter_ttl_deadline_never_moves_earlier(spark, tmp_path):
         # batch 3: watermark 11:20 > 11:00 -> user 1 expires NOW
         [(5, "2024-01-01 11:30:00", 2, "click", 7.0)],
     ]
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts string, user_id long, event_type string, value double"
-        ).withColumn("ts", F.to_timestamp("ts"))
-        df.coalesce(1).write.mode("append").parquet(str(d))
-        t = time.time() - 100 + i * 10
-        for f in os.listdir(d):
-            p = os.path.join(str(d), f)
-            if f.endswith(".parquet") and p not in seen:
-                seen.add(p)
-                os.utime(p, (t, t))
+    _write_batches(spark, d, batches)
     stream = (
         spark.readStream.schema(EVENTS_DDL)
         .option("maxFilesPerTrigger", 1)
@@ -551,6 +530,98 @@ def test_decayed_counter_ttl_deadline_never_moves_earlier(spark, tmp_path):
     # WHEN — n_seen=2 plus single-expiry proves the late fold happened
     # before expiry, and the fixed deadline made it wait for 11:00
     assert len(expired) == 1 and expired[0]["n_seen"] == 2
+
+
+
+def test_decayed_counter_negative_ewma_carries_across_triggers(spark, tmp_path):
+    """ST10 and ST12 carry a NEGATIVE scaled EWMA from one trigger to
+    the next: the state's "no events yet" is n == 0, not a sign, so
+    the final snapshot equals fold_decay over every value in order."""
+    from laser_hadoop_spark.streaming.ops import (
+        decayed_counter_per_user,
+        decayed_counter_per_user_ttl,
+        fold_decay,
+    )
+
+    d = tmp_path / "neg_in"
+    d.mkdir()
+    _write_batches(
+        spark,
+        d,
+        [
+            [
+                (1, "2024-01-01 10:00:00", 1, "click", -1.0),
+                (2, "2024-01-01 10:00:00", 2, "click", 2.0),
+                (3, "2024-01-01 10:01:00", 2, "click", -5.0),
+            ],
+            [
+                (4, "2024-01-01 10:05:00", 1, "click", -3.0),
+                (5, "2024-01-01 10:05:00", 2, "click", 1.0),
+            ],
+        ],
+    )
+    want = {1: fold_decay(None, 0, [-100, -300]), 2: fold_decay(None, 0, [200, -500, 100])}
+    assert want[1] == (-6553600, 2)
+    for name, op in (
+        ("st10_neg", decayed_counter_per_user),
+        ("st12_neg", lambda s: decayed_counter_per_user_ttl(s, ttl="1 hour")),
+    ):
+        stream = (
+            spark.readStream.schema(EVENTS_DDL)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d))
+        )
+        rows = _run(spark, op(stream), name, mode="update").collect()
+        # last snapshot per user wins
+        final = {r["user_id"]: (r["ewma_x32768"], r["n_seen"]) for r in rows}
+        assert final == want, name
+
+
+def test_ttl_operators_are_base_operators_plus_expiry(spark, tmp_path):
+    """ST12 and ST14 on a stream where no key reaches its TTL emit
+    exactly ST10's and ST11's rows, each with expired = false."""
+    d = tmp_path / "ttl_eq_in"
+    d.mkdir()
+    _write_batches(
+        spark,
+        d,
+        [
+            [
+                (1, "2024-01-01 10:00:00", 1, "click", 1.5),
+                (2, "2024-01-01 10:02:00", 2, "view", -2.0),
+                (3, "2024-01-01 10:03:00", 1, "view", 4.25),
+            ],
+            [
+                (4, "2024-01-01 10:10:00", 1, "click", 3.0),
+                (5, "2024-01-01 10:12:00", 3, "purchase", 9.0),
+            ],
+            [(6, "2024-01-01 10:20:00", 2, "click", 0.5)],
+        ],
+    )
+
+    def rows(name, sdf):
+        return _run(spark, sdf, name, mode="update").collect()
+
+    def stream():
+        return (
+            spark.readStream.schema(EVENTS_DDL)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d))
+        )
+
+    def without_expired(out):
+        assert not any(r["expired"] for r in out)
+        return sorted(tuple(v for k, v in r.asDict().items() if k != "expired") for r in out)
+
+    base = rows("ttl_eq_st10", ops.decayed_counter_per_user(stream()))
+    ttl = rows("ttl_eq_st12", ops.decayed_counter_per_user_ttl(stream(), ttl="1 hour"))
+    assert without_expired(ttl) == sorted(tuple(r) for r in base)
+    base = rows(
+        "ttl_eq_st11",
+        ops.heavy_hitters_stream(stream().select(F.col("event_type").alias("token"))),
+    )
+    ttl = rows("ttl_eq_st14", ops.heavy_hitters_stream_ttl(stream(), ttl="1 hour"))
+    assert without_expired(ttl) == sorted(tuple(r) for r in base)
 
 
 def test_kmv_distinct_stream(spark, tmp_path):
@@ -866,9 +937,6 @@ def test_sessionize_stream_closed_sessions(spark, tmp_path):
     event-time timeout when the watermark passes last event + gap;
     out-of-order events within a batch sort into the right session;
     an open session at end-of-stream never emits."""
-    import os
-    import time
-
     d = tmp_path / "sess_in"
     d.mkdir()
     US = 1_000_000
@@ -901,19 +969,7 @@ def test_sessionize_stream_closed_sessions(spark, tmp_path):
         # watermark 14:50 > 12:10 -> u1's [11:30,11:40] closes; u3 open
         [(8, "2024-01-01 15:05:00", 3, "click", 1.0)],
     ]
-    seen: set[str] = set()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, ts string, user_id long, event_type string, value double",
-        ).withColumn("ts", F.to_timestamp("ts"))
-        df.coalesce(1).write.mode("append").parquet(str(d))
-        t = time.time() - 100 + i * 10
-        for f in os.listdir(d):
-            p = os.path.join(str(d), f)
-            if f.endswith(".parquet") and p not in seen:
-                seen.add(p)
-                os.utime(p, (t, t))
+    _write_batches(spark, d, batches)
     stream = (
         spark.readStream.schema(EVENTS_DDL)
         .option("maxFilesPerTrigger", 1)
@@ -1000,9 +1056,6 @@ def test_moments_stream_tws(spark, tmp_path):
     """ST20: transformWithStateInPandas moments — cross-batch
     accumulation, batching-invariant snapshots (split vs one-shot),
     exact integer 3-sigma census, RocksDB state store."""
-    import os
-    import time
-
     prior_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
@@ -1025,20 +1078,7 @@ def test_moments_stream_tws(spark, tmp_path):
         def run(batches, name):
             d = tmp_path / name
             d.mkdir()
-            seen = set()
-            for i, rows in enumerate(batches):
-                df = spark.createDataFrame(
-                    rows,
-                    "event_id long, ts string, user_id long,"
-                    " event_type string, value double",
-                ).withColumn("ts", F.to_timestamp("ts"))
-                df.coalesce(1).write.mode("append").parquet(str(d))
-                t = time.time() - 100 + i * 10
-                for f in os.listdir(d):
-                    p = os.path.join(str(d), f)
-                    if f.endswith(".parquet") and p not in seen:
-                        seen.add(p)
-                        os.utime(p, (t, t))
+            _write_batches(spark, d, batches)
             stream = (
                 spark.readStream.schema(EVENTS_DDL)
                 .option("maxFilesPerTrigger", 1)
@@ -1376,3 +1416,74 @@ def test_bloom_dedup_stream(spark, tmp_path):
             want_bits.add(int(hx[4 * i : 4 * i + 8], 16) % ops.BLOOM_M)
     assert bits == len(want_bits)
     assert fp == round(1000000 * (len(want_bits) / ops.BLOOM_M) ** ops.BLOOM_K)
+
+
+
+def test_bloom_dedup_stream_carries_high_bit_words_across_triggers(spark, tmp_path):
+    """ST24's filter words go through the state store between triggers,
+    including words whose bit 63 is set (a signed long's sign bit): one
+    file per trigger gives the same final snapshot as one trigger."""
+    ts = "2024-01-01 10:00:00"
+    rows = [(i, ts, i % 120, "click", 1.0) for i in range(240)]
+
+    def final(name, batches, per_trigger):
+        d = tmp_path / name
+        d.mkdir()
+        _write_batches(spark, d, batches)
+        reader = spark.readStream.schema(EVENTS_DDL)
+        if per_trigger:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        out = _run(spark, ops.bloom_dedup_stream(reader.parquet(str(d))), name, mode="update")
+        return max(tuple(r) for r in out.collect())
+
+    split = final("bl_triggers", [rows[:100], rows[100:180], rows[180:]], True)
+    assert split == final("bl_single", [rows], False)
+    assert split[1] == 240
+
+
+def test_order_dependent_folds_ignore_arrow_chunking(spark, tmp_path):
+    """ST16, ST18 and ST24 fold in event_id order even when a key's rows
+    of one trigger arrive in many Arrow batches: one record per batch
+    gives the same rows as the default batch size. The file holds each
+    user's events in REVERSE event_id order."""
+    d = tmp_path / "chunk_in"
+    d.mkdir()
+    _write_batches(
+        spark,
+        d,
+        [
+            [
+                (3, "2024-01-01 10:20:00", 1, "purchase", 1.0),
+                (2, "2024-01-01 10:10:00", 1, "click", 1.0),
+                (1, "2024-01-01 10:00:00", 1, "view", 1.0),
+                (6, "2024-01-01 10:40:00", 2, "view", 1.0),
+                (5, "2024-01-01 10:30:00", 3, "view", 1.0),
+                (4, "2024-01-01 10:25:00", 2, "view", 1.0),
+            ]
+        ],
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def run(tag):
+        out = {}
+        for name, op in (
+            ("funnel", ops.funnel_stream),
+            ("wmd", ops.watermark_delay_stream),
+            ("bloom", ops.bloom_dedup_stream),
+        ):
+            sdf = op(spark.readStream.schema(EVENTS_DDL).parquet(str(d)))
+            rows = _run(spark, sdf, f"chunk_{name}_{tag}", mode="update").collect()
+            out[name] = sorted(tuple(r) for r in rows)
+        return out
+
+    default = run("default")
+    prior = spark.conf.get(conf, None)
+    spark.conf.set(conf, "1")
+    try:
+        one = run("one")
+    finally:
+        if prior is not None:
+            spark.conf.set(conf, prior)
+        else:
+            spark.conf.unset(conf)
+    assert one == default
