@@ -1,7 +1,7 @@
 """Iterative graph operators: connected components for dedup clusters.
 
 Near-dup pair lists (dedup.py: ngram_jaccard_pairs / simhash_pairs /
-minhash_lsh_pairs) induce a similarity graph; grouping transitively
+minhash_band_pairs) induce a similarity graph; grouping transitively
 linked documents needs connected components — the canonical iterative,
 non-SQL-expressible algorithm (SURVEY.md §2 notes such ops are exempt
 from the SQL oracle; verified by pytest instead).

@@ -91,11 +91,6 @@ def predict_lang(text_col: str = "text", *, words_col: Column | None = None) -> 
     ).otherwise(F.lit("und"))
 
 
-def fingerprint(text_col: str = "text") -> Column:
-    """Normalized md5 fingerprint (exact-dedup key)."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " "))))
-
-
 def rolling_hashes(text_col: str = "text", window: int = 8) -> Column:
     """Array of xxhash64 values over sliding character windows — the
     content-defined-chunking fingerprint set (rows-only territory:

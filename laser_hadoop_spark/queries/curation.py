@@ -15,6 +15,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from laser_hadoop_spark.operators.cumulative import ordered_cumsum
+from laser_hadoop_spark.operators.dedup import (
+    MINHASH_BANDS,
+    MINHASH_SEEDS,
+    minhash_band_pairs,
+    minhash_signatures,
+    word_shingles,
+)
 from laser_hadoop_spark.registry import register
 from laser_hadoop_spark.tables import spread_scan, table
 
@@ -42,65 +49,22 @@ from laser_hadoop_spark.tables import spread_scan, table
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X102: oracle-backed MinHash signature matrix.
 
-    The L2 near-dup path's MinHashLSH is rows-only by nature (library
-    hash seeds); THIS variant pins the signature computation itself
-    with a hash both engines share: signature[s] = MIN(md5(s || '|' ||
+    The engine's near-dup MinHash (operators/dedup.minhash_signatures)
+    uses a hash both engines share: signature[s] = MIN(md5(s || '|' ||
     shingle)) over the doc's distinct 3-gram shingles, for 8 seeds.
     Same min-over-hashed-universe structure as any MinHash — the
     Jaccard estimator applies unchanged — but bit-for-bit verifiable.
 
-    Shape (reworked after the r04 sf0.1 bench showed the naive
-    shingles x 8 seeds row explode at 5.7 s): each per-doc signature
-    slot is array_min over the shingle array's md5s, computed ENTIRELY
-    inside the scan projection — no explode, no join, no aggregate;
-    the only plan nodes after the scan are a Project and the
-    zero-shuffle stack unpivot (X18). MinHash is per-document math, so
-    at 100 TB this is embarrassingly parallel over file splits — the
-    textbook case for keeping work inside whole-stage codegen.
-    (Duplicate shingles can't change a minimum, so no array_distinct
-    pass is needed either.) The small-file repartition spreads the
-    hashing across cores when the input is one sub-split parquet file
-    (the bench case); on a real multi-split corpus it is a no-op-cost
-    rebalance of pointers, and AQE coalesces it.
+    Each per-doc signature slot is an array_min computed inside the
+    scan projection; the only plan node after it is the zero-shuffle
+    stack unpivot (X18) to one (doc, seed) row. MinHash is
+    per-document math, so at 100 TB this is embarrassingly parallel
+    over file splits.
     """
-    mins = minhash_mins(spark, sf_dir)
-    pairs = ", ".join(f"CAST({s} AS BIGINT), s{s}" for s in range(8))
+    mins = minhash_signatures(table(spark, sf_dir, "documents"))
+    pairs = ", ".join(f"CAST({s} AS BIGINT), s{s}" for s in range(MINHASH_SEEDS))
     return mins.select(
-        "doc_id", F.expr(f"stack(8, {pairs}) AS (seed, min_hash)")
-    )
-
-
-def minhash_mins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide form of the X102 signature matrix: (doc_id, s0..s7) with
-    s_k = MIN(md5(k || '|' || shingle)) — shared by q_minhash_signatures
-    and the X135 band join."""
-    d = table(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    base = (
-        d.select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .where(F.size(t) >= 3)
-        .select(
-            "doc_id",
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - 3),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(t, i + 1), F.element_at(t, i + 2), F.element_at(t, i + 3)
-                ),
-            ).alias("sh_arr"),
-        )
-    )
-
-    def _seed_hash(s: int):
-        prefix = F.lit(f"{s}|")
-        return lambda x: F.md5(F.concat(prefix, x))
-
-    return base.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("sh_arr", _seed_hash(s))).alias(f"s{s}")
-            for s in range(8)
-        ],
+        "doc_id", F.expr(f"stack({MINHASH_SEEDS}, {pairs}) AS (seed, min_hash)")
     )
 
 
@@ -299,48 +263,28 @@ def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The full LSH candidate-generation pipeline on the ORACLE-BACKED
     signature matrix (X102's md5 MinHash): 4 bands x 2 seeds, candidate
     pairs from band-value equality, estimated Jaccard = seed-agreement
-    fraction in bp. Where L2's pyspark.ml MinHashLSH is rows-only
-    (library seeds), every stage here is bit-for-bit verifiable —
-    banding probability, collision behavior, and the estimator itself
-    become testable artifacts. Plan: the wide signature matrix computes
-    scan-local (minhash_mins), bands explode 4x per doc, candidates
-    come from a band-key equi-join (never all-pairs), and the pair
-    scoring joins the 9-column signature rows — at 100 TB the shuffle
-    carries 16-byte digests, never text.
+    fraction in bp. Every stage is bit-for-bit verifiable — banding
+    probability, collision behavior, and the estimator itself become
+    testable artifacts. Plan: the wide signature matrix computes
+    scan-local (dedup.minhash_signatures), bands unpivot 4x per doc,
+    candidates come from a band-key equi-join (dedup.minhash_band_pairs,
+    never all-pairs), and the pair scoring joins the 9-column signature
+    rows — at 100 TB the shuffle carries 16-byte digests, never text.
     """
-    from laser_hadoop_spark.queries.curation import minhash_mins
-
     # localCheckpoint instead of cache: both pin the frame for the
     # multi-consumer plan (bands + two signature joins), but the
     # checkpointed RDD is reclaimed by the ContextCleaner as soon as
     # the DataFrame is garbage collected — a bare cache() accumulated
     # one pinned signature-matrix copy per invocation (review finding)
-    wide = minhash_mins(spark, sf_dir).localCheckpoint(eager=False)
-    band_exprs = ", ".join(
-        f"{b}, concat(s{2*b}, '|', s{2*b+1})" for b in range(4)
+    wide = minhash_signatures(table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=False
     )
-    bands = wide.select(
-        "doc_id", F.expr(f"stack(4, {band_exprs}) AS (band, bv)")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = minhash_band_pairs(wide)
     wa = wide.alias("wa")
     wb = wide.alias("wb")
     agree = sum(
         F.when(F.col(f"wa.s{k}") == F.col(f"wb.s{k}"), 1).otherwise(0)
-        for k in range(8)
+        for k in range(MINHASH_SEEDS)
     )
     return (
         cand.join(wa, F.col("doc_a") == F.col("wa.doc_id"))
@@ -575,22 +519,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.split("text", " ")
     grams = (
         d.where(F.size(t) >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(t) - 3),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.element_at(t, i + 1),
-                            F.element_at(t, i + 2),
-                            F.element_at(t, i + 3),
-                        ),
-                    )
-                )
-            ).alias("g"),
-        )
+        .select("doc_id", F.explode(word_shingles("text", 3)).alias("g"))
         .hint("shuffle_hash")
     )
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_g"))
@@ -661,8 +590,8 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     t = F.split("text", " ")
-    # Per-doc shingle dedup happens SCAN-LOCALLY (array_distinct on the
-    # shingle array) — the naive explode-then-DISTINCT spelling
+    # Per-doc shingle dedup happens SCAN-LOCALLY (word_shingles ends in
+    # array_distinct) — the naive explode-then-DISTINCT spelling
     # shuffles every (doc, 32-byte digest) pair just to dedup within
     # documents; array_distinct removes that whole exchange (only the
     # first-seen aggregate and the join-back shuffle remain). The raw
@@ -674,21 +603,7 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size(t) >= 3)
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(t) - 3),
-                        lambda i: F.md5(
-                            F.concat_ws(
-                                " ",
-                                F.element_at(t, i + 1),
-                                F.element_at(t, i + 2),
-                                F.element_at(t, i + 3),
-                            )
-                        ),
-                    )
-                )
-            ).alias("h"),
+            F.explode(F.transform(word_shingles("text", 3), F.md5)).alias("h"),
         )
     )
     fs = sh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
@@ -919,21 +834,7 @@ def q_cross_source_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size(t) >= 3)
         .select(
             "source",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(t) - 3),
-                        lambda i: F.md5(
-                            F.concat_ws(
-                                " ",
-                                F.element_at(t, i + 1),
-                                F.element_at(t, i + 2),
-                                F.element_at(t, i + 3),
-                            )
-                        ),
-                    )
-                )
-            ).alias("h"),
+            F.explode(F.transform(word_shingles("text", 3), F.md5)).alias("h"),
         )
         .distinct()
         # pinned: consumed three times (per_n + both self-join sides) —
@@ -1053,6 +954,7 @@ def q_ingest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_minhash_accuracy",
+    tags=("pairs",),
     oracle=f"""
     WITH pairs AS (SELECT * FROM ({_minhash_band_sql()}) q),
     toks2 AS (
@@ -1103,14 +1005,9 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH candidates (never all pairs), and the per-doc shingle sets
     dedup scan-locally before exploding.
     """
-    from laser_hadoop_spark.operators.dedup import word_shingles
-
     pairs = q_minhash_band_pairs(spark, sf_dir)
     d = table(spark, sf_dir, "documents")
-    # word_shingles builds the identical space-joined trigram set via
-    # zip_with slice views (~6x faster than element_at-in-transform,
-    # per its docstring); short docs yield an empty array and drop at
-    # the explode
+    # short docs yield an empty shingle array and drop at the explode
     sh = (
         d.select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
@@ -1400,8 +1297,6 @@ def q_set_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source count, a 1-row winner broadcast, and one anti-join that
     only ever SHRINKS the relation; lineage is truncated per round.
     """
-    from laser_hadoop_spark.operators.dedup import word_shingles
-
     d = table(spark, sf_dir, "documents")
     r = (
         d.select("source", F.explode(word_shingles("text", 3)).alias("s"))
@@ -1930,19 +1825,15 @@ def q_doc_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- X367: MinHash-LSH s-curve calibration audit -----------------------------------
 
-_SC_SEEDS = 8
-_SC_BANDS = 4  # of 2 rows each — the q_dedup_near configuration
-
-
 def _scurve_oracle() -> str:
-    seeds = ", ".join(str(s) for s in range(_SC_SEEDS))
+    seeds = ", ".join(str(s) for s in range(MINHASH_SEEDS))
     band_rows = "\n        UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, s{2 * b} || '|' || s{2 * b + 1} AS bv"
         " FROM wide"
-        for b in range(_SC_BANDS)
+        for b in range(MINHASH_BANDS)
     )
     sig_cols = ",\n               ".join(
-        f"MIN(CASE WHEN seed = {s} THEN mh END) AS s{s}" for s in range(_SC_SEEDS)
+        f"MIN(CASE WHEN seed = {s} THEN mh END) AS s{s}" for s in range(MINHASH_SEEDS)
     )
     return f"""
     WITH toks AS (
@@ -1989,7 +1880,7 @@ def _scurve_oracle() -> str:
         SELECT t.j_bp,
                CASE WHEN c.doc_a IS NULL THEN 0 ELSE 1 END AS is_cand,
                CAST(ROUND(1000000 * (1 - POWER(
-                   1 - POWER(t.j_bp / 10000.0, 2), {_SC_BANDS})))
+                   1 - POWER(t.j_bp / 10000.0, 2), {MINHASH_BANDS})))
                    AS BIGINT) AS p_theory_micro
         FROM truth t
         LEFT JOIN cand c ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b
@@ -2007,7 +1898,7 @@ def _scurve_oracle() -> str:
     """
 
 
-@register("q_lsh_scurve_audit", oracle=_scurve_oracle())
+@register("q_lsh_scurve_audit", oracle=_scurve_oracle(), tags=("pairs",))
 def q_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X367: MinHash-LSH s-curve calibration audit — does q_dedup_near's
     b=4/r=2 banding hit its textbook collision probability
@@ -2020,32 +1911,23 @@ def q_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     trusting its recall — miscalibration here means the minhash family
     is broken or the banding misconfigured.
 
-    100 TB: reuses the two relations the dedup pipeline already
-    computes (shingle equi-join truth, band equi-join candidates);
-    both are collision-bounded, never all-pairs. The audit itself
+    The banding is q_dedup_near's (dedup.MINHASH_BANDS bands of 2
+    rows). 100 TB: reuses the two relations the dedup pipeline already
+    computes (shingle equi-join truth, dedup.minhash_band_pairs
+    candidates); both are collision-bounded, never all-pairs. The audit itself
     runs on a SAMPLE at production scale (the decile table needs only
     statistical mass).
     """
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).where(
-        F.size("t") >= 3
-    )
-    # the shingle relation feeds THREE consumers (exact-Jaccard census
-    # twice via shd, minhash signatures once) and the signature table
-    # feeds all four band projections — eager checkpoints stop each
-    # reference from replaying the corpus explode (34 exchanges
-    # pre-fix, 6 after; the operators/graph.py discipline)
+    toks = d.select("doc_id", "text").where(F.size(F.split("text", " ")) >= 3)
+    # the shingle relation feeds the exact-Jaccard census twice (via
+    # shd) and the signature table both band-join sides — eager
+    # checkpoints stop each reference from replaying the corpus
+    # explode (34 exchanges pre-fix, 6 after; the operators/graph.py
+    # discipline). word_shingles is already per-doc distinct, but the
+    # DISTINCT's shuffle spreads a one-file corpus over the cores
     sh = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 2),"
-                    " i -> concat(element_at(t, i), ' ', element_at(t, i + 1),"
-                    " ' ', element_at(t, i + 2)))"
-                )
-            ).alias("shingle"),
-        )
+        toks.select("doc_id", F.explode(word_shingles("text", 3)).alias("shingle"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -2073,52 +1955,8 @@ def q_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("i * 10000 DIV (na + nb - i)").alias("j_bp"),
         )
     )
-    sigs = (
-        sh.crossJoin(
-            F.broadcast(
-                spark.range(_SC_SEEDS).select(F.col("id").cast("int").alias("seed"))
-            )
-        )
-        .groupBy("doc_id", "seed")
-        .agg(
-            F.min(
-                F.md5(F.concat(F.col("seed").cast("string"), F.lit("|"), "shingle"))
-            ).alias("mh")
-        )
-    )
-    wide = sigs.groupBy("doc_id").agg(
-        *[
-            F.min(F.when(F.col("seed") == s, F.col("mh"))).alias(f"s{s}")
-            for s in range(_SC_SEEDS)
-        ]
-    ).localCheckpoint(eager=True)
-    bands = None
-    for bi in range(_SC_BANDS):
-        part = wide.select(
-            "doc_id",
-            F.lit(bi).alias("band"),
-            F.concat(F.col(f"s{2 * bi}"), F.lit("|"), F.col(f"s{2 * bi + 1}")).alias(
-                "bv"
-            ),
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    ba = bands.select(F.col("doc_id").alias("doc_a"), "band", "bv")
-    bb = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("band").alias("band2"),
-        F.col("bv").alias("bv2"),
-    )
-    cand = (
-        ba.join(
-            bb,
-            (F.col("band") == F.col("band2"))
-            & (F.col("bv") == F.col("bv2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-        .withColumn("is_cand", F.lit(1))
-    )
+    wide = minhash_signatures(d).localCheckpoint(eager=True)
+    cand = minhash_band_pairs(wide).withColumn("is_cand", F.lit(1))
     scored = truth.join(cand, ["doc_a", "doc_b"], "left").select(
         "j_bp",
         F.coalesce(F.col("is_cand"), F.lit(0)).alias("is_cand"),
@@ -2127,7 +1965,7 @@ def q_lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (
                 1
                 - F.pow(
-                    1 - F.pow(F.col("j_bp") / 10000.0, 2), F.lit(_SC_BANDS)
+                    1 - F.pow(F.col("j_bp") / 10000.0, 2), F.lit(MINHASH_BANDS)
                 )
             )
         )

@@ -182,17 +182,16 @@ def storage_memory_used(spark: SparkSession) -> int:
     return int(env.blockManager().memoryStore().memoryUsed())
 
 
-# Ceiling of adaptive_kernel_partitions, in partitions per core. At the
-# 64 MB default target that is 64 GB of kernel input per core.
+# Target kernel input per partition of adaptive_kernel_partitions, and
+# its ceiling in partitions per core: 64 GB of kernel input per core.
+_TARGET_PARTITION_MB = 64
 _MAX_TASKS_PER_CORE = 1024
 
 
-def adaptive_kernel_partitions(
-    df, *, multiplier: float = 1.0, target_mb: int = 64
-) -> int:
+def adaptive_kernel_partitions(df, *, multiplier: float = 1.0) -> int:
     """Partition count for a compute-bound Arrow-kernel shuffle:
     ``max(defaultParallelism, estimated_input_bytes * multiplier /
-    target_mb)``.
+    64 MB)`` (``_TARGET_PARTITION_MB``).
 
     AQE's byte-based coalescing serializes compute-bound mapInPandas
     stages (PERF_NOTES round 12), so those stages pin an explicit
@@ -206,7 +205,7 @@ def adaptive_kernel_partitions(
     x n_tables when every row is replicated per LSH table, or x24 when
     a text scan explodes into per-character gram rows — Catalyst's
     Generate estimate does not model output multiplicity). At bench
-    scale the estimate stays under target_mb x cores so the floor
+    scale the estimate stays under 64 MB x cores so the floor
     rules and plans are byte-identical to the r12 pinned form; the
     bytes term exists for corpus scale, where partition size — not
     count — is the binding constraint.
@@ -227,7 +226,7 @@ def adaptive_kernel_partitions(
         return dp
     if est <= 0 or est >= (1 << 50):
         return dp
-    n = int(est * multiplier) // (target_mb << 20)
+    n = int(est * multiplier) // (_TARGET_PARTITION_MB << 20)
     return max(dp, min(n, dp * _MAX_TASKS_PER_CORE))
 
 

@@ -3,8 +3,10 @@
 
 For each query: best-of-3 noop-sink time (the plan is rebuilt per run,
 so no AQE-materialized stage is reused), the job count of one noop
-execution (DAGScheduler.nextJobId before/after), and the formatted
-physical plan written to plans/<tag>/<name>.txt.
+execution (DAGScheduler.nextJobId before/after), the jobs of those that
+run while fn() builds the DataFrame (``fn_jobs``: eager checkpoints,
+first()/count() calls), and the formatted physical plan written to
+plans/<tag>/<name>.txt.
 
 Plan capture sees through checkpoints: localCheckpoint truncates
 lineage, so a checkpoint-rooted plan hides every stage upstream of the
@@ -88,7 +90,9 @@ def main() -> None:
 
         DataFrame.localCheckpoint = _capturing_ckpt
         try:
+            j0 = _job_count()
             df = fn(spark, sf_dir)
+            fn_jobs = _job_count() - j0
             plan = _fmt_plan(df)
         finally:
             DataFrame.localCheckpoint = orig_ckpt
@@ -116,6 +120,7 @@ def main() -> None:
                     "query": name,
                     "noop_sec": round(best_noop, 3),
                     "jobs": n_jobs,
+                    "fn_jobs": fn_jobs,
                     "ckpt_fragments": len(fragments),
                 }
             ),

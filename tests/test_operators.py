@@ -3,6 +3,8 @@ text, multimodal (SURVEY.md §5 layer 2)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -149,6 +151,54 @@ def test_shingle_hash_rows_equal_exploded_hash_array(spark):
         assert {r["doc"] for r in got} == {3, 4, 5, 6} - ({3} if n == 3 else set())
 
 
+def _py_minhash(text):
+    """8 md5 MinHash slots over distinct space-split word trigrams, or
+    None when the text has no trigram."""
+    if text is None:
+        return None
+    t = text.split(" ")
+    shingles = {" ".join(t[i : i + 3]) for i in range(len(t) - 2)}
+    if not shingles:
+        return None
+    return tuple(
+        min(hashlib.md5(f"{k}|{s}".encode()).hexdigest() for s in shingles)
+        for k in range(8)
+    )
+
+
+def test_minhash_signatures_and_band_pairs_match_python(spark):
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "two words"),
+        (4, "a  b c  d"),  # double spaces make empty tokens
+        (5, "x y z x y z x y z"),  # repeated trigrams
+        (6, "x y z x y z"),  # same trigram set as 5
+        (7, " lead and trail "),  # leading/trailing spaces
+        (8, "the quick brown fox jumps over the lazy dog"),
+        (9, "the quick brown fox jumps over the lazy dog"),
+        (10, "the quick brown fox jumps over the lazy cat"),
+        (11, "a b c"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(df)
+    want = {i: sig for i, t in rows if (sig := _py_minhash(t)) is not None}
+    got = {r["doc_id"]: tuple(r[f"s{k}"] for k in range(8)) for r in sigs.collect()}
+    assert got == want
+    # 4 bands of 2 rows: a pair is a candidate when one band agrees
+    buckets: dict[tuple, set] = {}
+    for i, sig in want.items():
+        for b in range(4):
+            buckets.setdefault((b, sig[2 * b], sig[2 * b + 1]), set()).add(i)
+    want_pairs = {(a, b) for ids in buckets.values() for a in ids for b in ids if a < b}
+    got_pairs = [
+        (r["doc_a"], r["doc_b"]) for r in dedup.minhash_band_pairs(sigs).collect()
+    ]
+    assert len(got_pairs) == len(set(got_pairs))
+    assert set(got_pairs) == want_pairs
+    assert {(5, 6), (8, 9)} <= want_pairs
+
+
 def test_minhash_recall_vs_exact(spark, docs):
     exact = {
         (r["doc_a"], r["doc_b"])
@@ -156,9 +206,10 @@ def test_minhash_recall_vs_exact(spark, docs):
     }
     approx = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.minhash_lsh_pairs(docs, distance=0.4).collect()
+        for r in dedup.minhash_band_pairs(dedup.minhash_signatures(docs)).collect()
     }
-    # LSH at distance<0.4 must recover the >0.8-jaccard pairs (recall ~1)
+    # 4 bands of 2 rows collide with p >= 1-(1-0.8^2)^4 = 0.98 at
+    # jaccard 0.8, so they must recover the >0.8-jaccard pairs
     assert exact
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"minhash recall {recall} on {len(exact)} true pairs"

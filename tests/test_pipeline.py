@@ -161,9 +161,9 @@ def test_curation_pipeline_stages(spark, sf_dir):
     kept = res.kept
     assert kept.count() == c["after_near_dup"]
     # survivors are unique by normalized fingerprint (stage 1 held)
-    from laser_hadoop_spark.operators.text import fingerprint
+    from laser_hadoop_spark.operators.dedup import normalized_fingerprint
 
-    n_fp = kept.select(fingerprint().alias("fp")).distinct().count()
+    n_fp = kept.select(normalized_fingerprint().alias("fp")).distinct().count()
     assert n_fp == c["after_near_dup"]
     # every survivor is labeled an allowed language
     langs = {r["predicted_lang"] for r in kept.select("predicted_lang").distinct().collect()}
